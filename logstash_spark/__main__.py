@@ -4,7 +4,7 @@ Reference counterpart: logstash-core/lib/logstash/runner.rb
 (``Runner#execute``: load config → compile → run pipeline). Usage::
 
     python -m logstash_spark -f pipeline.conf --run-dir /out \\
-        [--stream] [--buckets 32] [--batches 1] [--resume] \\
+        [--stream] [--buckets N] [--batches 1] [--resume] \\
         [--bucket-on url] [--master local[8]]
 
 The config is LSCL (logstash.conf syntax, lscl.py); inputs resolve via
@@ -25,7 +25,8 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("-f", "--config", required=True, help="LSCL pipeline config file")
     ap.add_argument("--run-dir", required=True, help="output directory (sinks + metrics)")
     ap.add_argument("--stream", action="store_true", help="run via Structured Streaming")
-    ap.add_argument("--buckets", type=int, default=32)
+    ap.add_argument("--buckets", type=int, default=None,
+                    help="bucket count (default: 32 batch, 8 --stream)")
     ap.add_argument("--batches", type=int, default=1)
     ap.add_argument("--resume", action="store_true")
     ap.add_argument("--bucket-on", default=None,
@@ -59,18 +60,18 @@ def main(argv: list[str] | None = None) -> int:
 
     bucket_on = args.bucket_on or ("url" if "url" in source.columns else source.columns[0])
     pipe = Pipeline(spec)
+    # each mode keeps its own default bucket count unless --buckets is given
+    buckets = {} if args.buckets is None else {"n_buckets": args.buckets}
 
     if args.stream:
         from .streaming import run_streaming
 
-        run_streaming(pipe, source, args.run_dir, bucket_on=bucket_on,
-                      n_buckets=args.buckets)
+        run_streaming(pipe, source, args.run_dir, bucket_on=bucket_on, **buckets)
         print(json.dumps({"mode": "stream", "run_dir": args.run_dir,
                           "metrics": f"{args.run_dir}/metrics_stream.jsonl"}))
     else:
         metrics = pipe.run(source, args.run_dir, bucket_on=bucket_on,
-                           n_buckets=args.buckets, n_batches=args.batches,
-                           resume=args.resume)
+                           n_batches=args.batches, resume=args.resume, **buckets)
         print(json.dumps(metrics.to_dict()))
     return 0
 

@@ -185,7 +185,8 @@ class _Parser:
             raise LsclError("unterminated condition")
         cond = "".join(buf).strip()
         if not cond:
-            raise LsclError("empty condition")
+            line = text.count("\n", 0, start) + 1
+            raise LsclError(f"empty condition at line {line}, offset {start}")
         # re-sync the token cursor to the first token at/after the '{'
         while self.peek()[0] is not None and self.peek()[2] < i:
             self.next()

@@ -230,19 +230,15 @@ def _rubydebug_render(row) -> str:
     return "{\n" + ",\n".join(lines) + "\n}"
 
 
-_DEBUG_STDOUT_LOCK = None
+# the sink fan-out runs concurrently; two debug sinks interleaving
+# mid-event would garble the exact bring-up output these codecs exist
+# for — serialize stdout across them
+_DEBUG_STDOUT_LOCK = threading.Lock()
 
 
 def _write_debug_stdout(branch: DataFrame, fmt: str) -> int:
     import sys
-    import threading
 
-    # the sink fan-out runs concurrently; two debug sinks interleaving
-    # mid-event would garble the exact bring-up output these codecs
-    # exist for (review finding) — serialize stdout across them
-    global _DEBUG_STDOUT_LOCK
-    if _DEBUG_STDOUT_LOCK is None:
-        _DEBUG_STDOUT_LOCK = threading.Lock()
     if fmt == "dots":
         n = branch.count()
         with _DEBUG_STDOUT_LOCK:

@@ -312,6 +312,22 @@ class Stage:
         self.add_tag: list[str] = self.conf.pop("add_tag", []) or []
         self.remove_field: list[str] = self.conf.pop("remove_field", []) or []
         self.remove_tag: list[str] = self.conf.pop("remove_tag", []) or []
+        self._resolved: dict[str, tuple[object, object]] = {}
+
+    def resolve_once(self, sc, key: str, build: Callable[[], object]):
+        """Dimension-derived plan-time state (a dim count, a collected
+        rule set, a broadcast variable) built once per stage object —
+        the reference loads a filter's database once in ``register()``,
+        not per batch. A streaming run compiles once per micro-batch,
+        so state built inside ``transform`` would re-run the dim's Spark
+        jobs and leak one broadcast per micro-batch. Keyed on the
+        SparkContext, so a stage reused after a session restart rebuilds
+        against the live one. Work that reads the *batch* must not go
+        through here."""
+        hit = self._resolved.get(key)
+        if hit is None or hit[0] is not sc:
+            hit = self._resolved[key] = (sc, build())
+        return hit[1]
 
     # ---- subclass contract -------------------------------------------------
     def transform(self, df: DataFrame) -> tuple[DataFrame, Column | None]:

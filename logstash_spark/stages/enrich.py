@@ -167,6 +167,11 @@ class GeoipStage(Stage):
         UDF (O(log m) per row — the ≥10k-range scale path, SURVEY §2.4);
       * "auto" (default): count the dim once and pick.
     Miss → null struct + ``_geoip_lookup_failure`` tag (reference tag).
+
+    The dim is resolved once per stage object (``register()`` parity):
+    the auto count and the binary_search broadcast are built on the
+    first compile and reused by every later one, so a stream pays no
+    Spark job for the dim per micro-batch (``Stage.resolve_once``).
     """
 
     AUTO_THRESHOLD = 2000
@@ -180,11 +185,12 @@ class GeoipStage(Stage):
         ranges: DataFrame = self.conf["ranges_df"]
         strategy = self.conf.get("strategy", "auto")
         src_ip = field_col(source)
+        sc = df.sparkSession.sparkContext
 
         if strategy == "auto":
-            strategy = (
+            strategy = self.resolve_once(sc, "strategy", lambda: (
                 "broadcast_range" if ranges.count() <= self.AUTO_THRESHOLD else "binary_search"
-            )
+            ))
 
         ip_int = ip_to_long(src_ip)
         if strategy == "broadcast_range":
@@ -200,22 +206,24 @@ class GeoipStage(Stage):
                 "left",
             ).drop("__lo", "__hi", "__ip_int")
         else:
-            spark = df.sparkSession
-            pdim = (
-                ranges.select("ip_start_int", "ip_end_int", "country", "city", "lat", "lon")
-                .orderBy("ip_start_int")
-                .toPandas()
-            )
-            bc = spark.sparkContext.broadcast(
-                {
-                    "starts": pdim["ip_start_int"].to_numpy(),
-                    "ends": pdim["ip_end_int"].to_numpy(),
-                    "country": pdim["country"].to_numpy(),
-                    "city": pdim["city"].to_numpy(),
-                    "lat": pdim["lat"].to_numpy(),
-                    "lon": pdim["lon"].to_numpy(),
-                }
-            )
+            def ship_ranges():
+                pdim = (
+                    ranges.select("ip_start_int", "ip_end_int", "country", "city", "lat", "lon")
+                    .orderBy("ip_start_int")
+                    .toPandas()
+                )
+                return sc.broadcast(
+                    {
+                        "starts": pdim["ip_start_int"].to_numpy(),
+                        "ends": pdim["ip_end_int"].to_numpy(),
+                        "country": pdim["country"].to_numpy(),
+                        "city": pdim["city"].to_numpy(),
+                        "lat": pdim["lat"].to_numpy(),
+                        "lon": pdim["lon"].to_numpy(),
+                    }
+                )
+
+            bc = self.resolve_once(sc, "ranges_bc", ship_ranges)
             from pyspark.sql.functions import pandas_udf
             import numpy as np
 
@@ -271,6 +279,10 @@ class UseragentStage(Stage):
       regexes: a thousand-branch codegen'd when-chain would blow the
       JIT method budget, and early-exit over unmatched rows pays off).
     * "auto" (default): native iff the rule count ≤ NATIVE_THRESHOLD.
+
+    The rule set is resolved once per stage object (``register()``
+    parity): the ``collect()`` and the pandas path's broadcast happen on
+    the first compile only (``Stage.resolve_once``).
     """
 
     NATIVE_THRESHOLD = 64
@@ -283,10 +295,11 @@ class UseragentStage(Stage):
         target = self.conf.get("target", "ua")
         rules_df: DataFrame = self.conf["rules_df"]
         strategy = self.conf.get("strategy", "auto")
-        rules = [
+        sc = df.sparkSession.sparkContext
+        rules = self.resolve_once(sc, "rules", lambda: [
             (r["pattern"], r["name"], r["os"], r["device"])
             for r in rules_df.orderBy("priority").collect()
-        ]
+        ])
         if strategy == "auto":
             strategy = "native" if len(rules) <= self.NATIVE_THRESHOLD else "pandas"
         src = field_col(source)
@@ -307,8 +320,7 @@ class UseragentStage(Stage):
             matched = F.col(f"{target}.name").isNotNull()
             return df, matched
 
-        spark = df.sparkSession
-        bc = spark.sparkContext.broadcast(rules)
+        bc = self.resolve_once(sc, "rules_bc", lambda: sc.broadcast(rules))
         from pyspark.sql.functions import pandas_udf
 
         @pandas_udf("struct<name:string,os:string,device:string>")
@@ -1471,8 +1483,9 @@ class WurflStage(Stage):
     Spark re-expression (dns/memcached/http snapshot stance): the
     commercial live WURFL service is rejected by design — the device
     table comes in as an explicit snapshot (``devices`` inline list or
-    ``devices_df``). All hierarchy work happens ONCE at plan time on
-    the dim (memoized fall_back closure, cycle/dangling detection);
+    ``devices_df``). All hierarchy work happens ONCE per stage object,
+    on its first compile, on the dim (memoized fall_back closure,
+    cycle/dangling detection; ``Stage.resolve_once``);
     matching ships as a broadcast dict and runs vectorized per Arrow
     batch: one exact/longest-prefix ``Series.map`` pass per DISTINCT
     pattern length (descending — first hit IS the longest prefix), over
@@ -1516,25 +1529,12 @@ class WurflStage(Stage):
             for did in devs
         }
 
-    def transform(self, df: DataFrame) -> tuple[DataFrame, Column]:
-        source = self.conf.get("source", "message")
-        target = field_name(self.conf.get("target", "wurfl"))
-        caps = list(self.conf.get("capabilities", []))
-        if not caps:
-            raise ValueError(
-                "wurfl: `capabilities` list is required — it fixes the "
-                "output struct schema at plan time")
-        inline = self.conf.get("devices")
-        dev_df: DataFrame | None = self.conf.get("devices_df")
-        path = self.conf.get("devices_path")
-        if inline is None and dev_df is None and path:
-            inline = _load_wurfl_devices(path)
+    def _lookup_tables(self, inline: list | None, dev_df: DataFrame | None,
+                       caps: list[str]) -> tuple[dict, list, list]:
+        """The device snapshot → (pattern → device_id, distinct pattern
+        lengths descending, one device_id → value dict per capability)."""
         if inline is None and dev_df is None:
-            raise ValueError(
-                "wurfl: a device snapshot is required (devices / "
-                "devices_df / devices_path wurfl.xml|.json) — the live "
-                "commercial WURFL service is rejected by design "
-                "(dns/memcached precedent)")
+            inline = _load_wurfl_devices(self.conf["devices_path"])
         if inline is None:
             inline = [
                 {"device_id": r["device_id"], "user_agent": r["user_agent"],
@@ -1563,9 +1563,27 @@ class WurflStage(Stage):
         lengths = sorted({len(p) for p in pat2id}, reverse=True)
         cap_dicts = [{did: row[j] for did, row in cap_rows.items()}
                      for j in range(len(caps))]
+        return pat2id, lengths, cap_dicts
 
-        spark = df.sparkSession
-        bc = spark.sparkContext.broadcast((pat2id, lengths, cap_dicts))
+    def transform(self, df: DataFrame) -> tuple[DataFrame, Column]:
+        source = self.conf.get("source", "message")
+        target = field_name(self.conf.get("target", "wurfl"))
+        caps = list(self.conf.get("capabilities", []))
+        if not caps:
+            raise ValueError(
+                "wurfl: `capabilities` list is required — it fixes the "
+                "output struct schema at plan time")
+        inline = self.conf.get("devices")
+        dev_df: DataFrame | None = self.conf.get("devices_df")
+        if inline is None and dev_df is None and not self.conf.get("devices_path"):
+            raise ValueError(
+                "wurfl: a device snapshot is required (devices / "
+                "devices_df / devices_path wurfl.xml|.json) — the live "
+                "commercial WURFL service is rejected by design "
+                "(dns/memcached precedent)")
+        sc = df.sparkSession.sparkContext
+        bc = self.resolve_once(sc, "devices_bc", lambda: sc.broadcast(
+            self._lookup_tables(inline, dev_df, caps)))
         out_schema = "device_id:string," + ",".join(
             f"`{c}`:string" for c in caps)
         from pyspark.sql.functions import pandas_udf

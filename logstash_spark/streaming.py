@@ -18,6 +18,17 @@ Semantics notes (documented deviations, SURVEY §2.6):
 * Sinks append per micro-batch (Logstash outputs append too);
   idempotent replay of a failed batch can duplicate — at-least-once,
   exactly like the reference's PQ acking.
+
+Bucket count: ``STREAM_BUCKETS`` (8), not batch mode's 32. In batch
+mode the bucket group is the checkpoint/ack unit; in a stream the
+recovery unit is Spark's offset and commit logs, so the bucket count
+only sets how many write tasks and files each micro-batch makes:
+files per micro-batch = buckets × sinks (at 32 buckets a 5-sink
+pipeline writes 160 parquet files of a few dozen rows, each with a
+~5 KB footer). Eight matches the shuffle-partition floor ``session.py``
+sets. It is a constant on purpose: a default read from the session
+conf would move the ``bucket=`` layout when a restart changes the conf.
+An explicit ``n_buckets`` is honoured.
 """
 
 from __future__ import annotations
@@ -31,6 +42,8 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from .pipeline import BUCKET_COL, Pipeline, _failure_census
+
+STREAM_BUCKETS = 8
 
 
 def stream_from_directory(
@@ -50,7 +63,7 @@ def run_streaming(
     stream: DataFrame,
     run_dir: str,
     bucket_on: str = "url",
-    n_buckets: int = 32,
+    n_buckets: int = STREAM_BUCKETS,
     available_now: bool = True,
     timeout_sec: float | None = None,
 ):

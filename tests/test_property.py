@@ -11,15 +11,19 @@ from __future__ import annotations
 
 import string
 
+import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
 from logstash_spark.fieldref import parse_ref, sprintf_col  # noqa: F401
-from logstash_spark.lscl import to_pipeline_spec
+from logstash_spark.lscl import LsclError, to_pipeline_spec
 
 # ---------------------------------------------------------------- lscl
 
-_ident = st.text(alphabet=string.ascii_lowercase + "_", min_size=1, max_size=8)
+# LSCL reserved words are not plugin names: `if { ... }` opens a branch
+_LSCL_RESERVED = frozenset({"if", "else"})
+_ident = st.text(alphabet=string.ascii_lowercase + "_", min_size=1, max_size=8).filter(
+    lambda s: s not in _LSCL_RESERVED)
 _safe_str = st.text(
     alphabet=string.ascii_letters + string.digits + " _-./:%{}",
     max_size=20,
@@ -76,6 +80,13 @@ def test_lscl_roundtrip_filters(plugins):
     got = [(next(iter(set(f) - {"when"})), f[next(iter(set(f) - {"when"}))])
            for f in spec["filters"]]
     assert got == plugins
+
+
+def test_lscl_if_without_condition_is_an_error():
+    """`if` is reserved: a plugin-shaped `if { }` is a branch with an
+    empty condition, which the parser rejects with its position."""
+    with pytest.raises(LsclError, match="empty condition at line 1"):
+        to_pipeline_spec("filter { if { } }")
 
 
 # ------------------------------------------------------------ field refs

@@ -102,6 +102,62 @@ def test_useragent(spark):
     assert rows[3].ua is None and rows[4].ua is None
 
 
+def _jobs_during(spark, group: str, fn):
+    """Run ``fn`` under a job group; return (its result, the Spark job
+    ids it started)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, sc.statusTracker().getJobIdsForGroup(group)
+
+
+def _dims_pipeline(spark):
+    from logstash_spark.pipeline import Pipeline
+
+    return Pipeline({"id": "dims", "filters": [
+        {"geoip": {"source": "ip", "ranges_df": gen_geo_ranges(spark, 50),
+                   "strategy": "binary_search"}},
+        {"geoip": {"source": "ip", "target": "geo_auto",
+                   "ranges_df": gen_geo_ranges(spark, 40)}},
+        {"useragent": {"source": "agent", "rules_df": gen_ua_rules(spark),
+                       "strategy": "pandas"}},
+    ]})
+
+
+def test_dims_resolved_once_per_stage(spark):
+    """register() parity: a stream compiles once per micro-batch, but
+    the geoip count/broadcast and the useragent collect/broadcast are
+    built on the first compile only. Later compiles start no Spark job
+    and every stage keeps the one broadcast it made."""
+    df = spark.createDataFrame(
+        [("0.0.1.0", "Googlebot/2.1 (+http://www.google.com/bot.html)")],
+        "ip string, agent string")
+    pipe = _dims_pipeline(spark)
+
+    def broadcasts():
+        return [v for _, s in pipe.stages for k, (_, v) in s._resolved.items()
+                if k.endswith("_bc")]
+
+    _, first = _jobs_during(spark, "dims_first", lambda: pipe.compile(df))
+    assert first  # the dims were resolved: count, toPandas, collect
+    bcs = broadcasts()
+    assert len(bcs) == 2
+    for i in range(3):
+        out, again = _jobs_during(spark, f"dims_again_{i}", lambda: pipe.compile(df))
+        assert again == []
+    assert all(a is b for a, b in zip(broadcasts(), bcs, strict=True))
+    r = out.collect()[0]
+    assert r.geo is not None and r.geo_auto is not None and r.ua.name == "Googlebot"
+
+    # a fresh stage object resolves its own dims
+    _, fresh = _jobs_during(spark, "dims_fresh",
+                            lambda: _dims_pipeline(spark).compile(df))
+    assert fresh
+
+
 def test_cidr(spark):
     df = spark.createDataFrame(
         [(1, "10.1.2.3"), (2, "192.168.1.5"), (3, "8.8.8.8")], "id int, ip string"

@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import json
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -72,6 +73,19 @@ def test_streaming_foreachbatch_e2e(spark, tmp_path):
     assert len(recs) >= 2  # maxFilesPerTrigger forced multiple batches
     assert sum(r["events"]["in"] for r in recs) == n
     assert sum(r["sinks"]["sink_en"] for r in recs) == n_en
+
+    # without n_buckets the stream keeps its own 8-bucket default, not
+    # batch mode's 32: at most 8 bucket= directories per sink
+    run_dir = str(tmp_path / "run_default_buckets")
+    stream = stream_from_directory(
+        spark, src_dir, "url string, lang string, score double",
+        max_files_per_trigger=2,
+    )
+    run_streaming(pipe, stream, run_dir, bucket_on="url", timeout_sec=300)
+    for sink in ("sink_en", "sink_other"):
+        dirs = [d for d in os.listdir(f"{run_dir}/{sink}") if d.startswith("bucket=")]
+        assert 0 < len(dirs) <= 8, dirs
+    assert spark.read.parquet(f"{run_dir}/sink_en").count() == n_en
 
 
 def test_streaming_events_in_is_pre_filter_ingress(spark, tmp_path):
