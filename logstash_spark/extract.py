@@ -119,193 +119,3 @@ def extract_text_udf():
             yield extract_series(s)
 
     return _extract
-
-
-# ---------------------------------------------------------------------------
-# JVM-native lowering (round 5).
-#
-# The pure-Python extractor above is the byte-identity ORACLE; at 100 TB it
-# is also the dominant cost (~12 MB/s per 32 cores measured in BENCH_r04).
-# The chain below re-expresses steps 1–5 of the frozen semantics as Catalyst
-# string expressions (regexp_replace / replace / translate — all whole-stage
-# codegen, zero Python hops), and a GUARD predicate routes the rows whose
-# content falls outside the proven-identical domain to the oracle pandas_udf.
-# The guard feeds the UDF NULL for every fast-path row, so Arrow ships only
-# validity bits for them — the Python worker round-trip stays near-free when
-# no row is flagged.
-#
-# Proven-identical domain (everything else → oracle, never wrong, just slower):
-#   * html is valid UTF-8 (checked with F.is_valid_utf8 on the binary→string
-#     cast, which Spark performs without validation or copying);
-#   * after tag stripping, every '&' followed by [#A-Za-z] is exactly one of
-#     the supported entity literals below (Python html.unescape additionally
-#     handles semicolon-less legacy names, longest-prefix matching, arbitrary
-#     numeric code points and the Windows-1252 remap table — all guarded);
-#   * no NUL byte (NUL is the sentinel the '&'-producing replacements use to
-#     stay single-pass, see below).
-#
-# Java-vs-Python regex alignment choices (each one fuzz-tested in
-# tests/test_extract_native.py):
-#   * Python \b after a tag name  →  (?![\p{L}\p{N}_]) with (?u) so Unicode
-#     word chars behave like Python str patterns;
-#   * Python (?i) is Unicode-aware  →  Java (?iu);
-#   * Python (?m)/$ only treat \n as a line break  →  Java (?d) UNIX_LINES;
-#   * Python str \s  →  the explicit _PYWS class (Java \s is ASCII-only).
-# ---------------------------------------------------------------------------
-
-# Python str regex \s, spelled out for Java (order: ASCII, C1, Unicode Zs/Zl/Zp).
-_PYWS = (
-    " \\t\\n\\r\\u000B\\f\\u001C-\\u001F\\u0085\\u00A0\\u1680"
-    "\\u2000-\\u200A\\u2028\\u2029\\u202F\\u205F\\u3000"
-)
-# Same minus \n (used for per-line strip after \t\r\f\v were translated away).
-_PYWS_NONL = (
-    " \\t\\r\\u000B\\f\\u001C-\\u001F\\u0085\\u00A0\\u1680"
-    "\\u2000-\\u200A\\u2028\\u2029\\u202F\\u205F\\u3000"
-)
-_NOT_WORD = "(?![\\p{L}\\p{N}_])"
-
-_J_DROP = (
-    "(?isu)<(script|style|noscript)" + _NOT_WORD + "[^>]*>.*?</\\1[" + _PYWS + "]*>"
-)
-_J_COMMENT = "(?s)<!--.*?-->"
-_J_DOCTYPE = "(?iu)<!DOCTYPE[^>]*>"
-_J_BLOCK = "(?iu)</?(?:" + _BLOCK_TAGS + ")" + _NOT_WORD + "[^>]*>"
-_J_TAG = "<[^>]+>"
-
-# Supported entity literals (case-sensitive, semicolon-terminated — exactly
-# the forms html.unescape maps to the same single character). Split into the
-# '&'-producing group (replaced via a NUL sentinel LAST so the chain keeps
-# html.unescape's single-pass semantics: '&amp;lt;' must yield '&lt;', not
-# '<') and everything else. The test suite asserts every entry against
-# html.unescape itself, so this table cannot drift from the oracle.
-_ENTITIES: dict[str, str] = {
-    "lt": "<", "LT": "<", "gt": ">", "GT": ">", "quot": '"', "QUOT": '"',
-    "apos": "'", "nbsp": "\xa0", "copy": "\xa9", "COPY": "\xa9",
-    "reg": "\xae", "REG": "\xae", "trade": "™", "TRADE": "™",
-    "deg": "\xb0", "middot": "\xb7", "bull": "•", "sect": "\xa7",
-    "para": "\xb6", "laquo": "\xab", "raquo": "\xbb", "mdash": "—",
-    "ndash": "–", "hellip": "…", "lsquo": "‘",
-    "rsquo": "’", "ldquo": "“", "rdquo": "”",
-    "times": "\xd7", "divide": "\xf7", "plusmn": "\xb1", "euro": "€",
-    "pound": "\xa3", "yen": "\xa5", "cent": "\xa2", "eacute": "\xe9",
-    "egrave": "\xe8", "agrave": "\xe0", "ccedil": "\xe7", "auml": "\xe4",
-    "ouml": "\xf6", "uuml": "\xfc", "szlig": "\xdf", "ntilde": "\xf1",
-}
-_NUMERIC: dict[str, str] = {
-    "#34": '"', "#x22": '"', "#39": "'", "#x27": "'", "#X27": "'",
-    "#60": "<", "#x3c": "<", "#62": ">", "#x3e": ">",
-    "#160": "\xa0", "#xa0": "\xa0", "#32": " ", "#x20": " ",
-    "#9": "\t", "#10": "\n", "#13": "\r",
-    "#8211": "–", "#8212": "—", "#8216": "‘",
-    "#8217": "’", "#8220": "“", "#8221": "”",
-    "#8230": "…", "#169": "\xa9", "#174": "\xae", "#176": "\xb0",
-    "#215": "\xd7", "#8364": "€",
-}
-# '&'-producers, replaced with a NUL sentinel until the very end.
-_AMP_FORMS = ("amp", "AMP", "#38", "#x26", "#X26")
-_SENTINEL = "\x00"
-
-# All supported literal bodies (between '&' and ';') for the guard lookahead.
-_SUPPORTED_BODIES = sorted(
-    list(_ENTITIES) + list(_NUMERIC) + list(_AMP_FORMS), key=len, reverse=True
-)
-# Flag any NUL, and any '&' that starts a potential charref (Python only ever
-# rewrites '&' followed by '#' or an ASCII letter) not matching a supported
-# literal exactly. Conservative: unknown names Python leaves alone still fall
-# back — slower, never wrong.
-_J_GUARD = (
-    "\\x00|&(?!(?:"
-    + "|".join(b.replace("#", "\\#") for b in _SUPPORTED_BODIES)
-    + ");)[#A-Za-z]"
-)
-# Raw-side guard: any complete tag containing a non-ASCII char. Python's
-# (?i) case-folds Unicode into ASCII tag names in places Java's (?iu)
-# does not (deep-fuzz counterexample: '</ſcript>' closes '<script>'
-# under Python's fold-aware backreference but not under Java's) — every
-# such row is conservatively oracle-routed. Tags in real/corpus HTML are
-# ASCII; only pages with non-ASCII inside <...> take the slow path.
-_J_GUARD_RAW = "(?s)<[^>]*[^\\x00-\\x7F][^>]*>"
-
-
-def _native_pre(decoded):
-    """Steps 1–5 (tag stripping) as one JVM expression over a string col."""
-    from pyspark.sql import functions as F
-
-    s = F.regexp_replace(decoded, _J_DROP, " ")
-    s = F.regexp_replace(s, _J_COMMENT, " ")
-    s = F.regexp_replace(s, _J_DOCTYPE, " ")
-    s = F.regexp_replace(s, _J_BLOCK, "\n")
-    s = F.regexp_replace(s, _J_TAG, " ")
-    return s
-
-
-def _native_post(pre):
-    """Entities + whitespace normalization over the tag-stripped string."""
-    from pyspark.sql import functions as F
-
-    s = pre
-    for body, ch in _ENTITIES.items():
-        s = F.replace(s, F.lit("&" + body + ";"), F.lit(ch))
-    for body, ch in _NUMERIC.items():
-        s = F.replace(s, F.lit("&" + body + ";"), F.lit(ch))
-    # '&'-producers → sentinel → '&' at the end: keeps single-pass semantics
-    # ('&amp;lt;' → '\x00lt;' → ... → '&lt;', matching html.unescape).
-    for body in _AMP_FORMS:
-        s = F.replace(s, F.lit("&" + body + ";"), F.lit(_SENTINEL))
-    s = F.replace(s, F.lit(_SENTINEL), F.lit("&"))
-    # Whitespace normalization (mirrors _collapse_ws + per-line strip/join).
-    s = F.translate(s, "\t\r\f\x0b", "    ")
-    s = F.regexp_replace(s, " {2,}", " ")
-    s = F.regexp_replace(s, "(?md)^[" + _PYWS_NONL + "]+|[" + _PYWS_NONL + "]+$", "")
-    s = F.regexp_replace(s, "\n{2,}", "\n")
-    s = F.regexp_replace(s, "(?d)^\\n|\\n$", "")
-    return s
-
-
-def extract_text_native(bin_col):
-    """The pure-JVM chain (no guard). Byte-identical to ``extract_text`` on
-    the supported domain; used directly only by tests/benchmarks."""
-    return _native_post(_native_pre(bin_col.cast("string")))
-
-
-def extract_guard(bin_col):
-    """True where the row must take the Python-oracle path."""
-    from pyspark.sql import functions as F
-
-    decoded = bin_col.cast("string")
-    return (
-        (~F.is_valid_utf8(decoded))
-        | F.regexp_like(decoded, F.lit(_J_GUARD_RAW))
-        | F.regexp_like(_native_pre(decoded), F.lit(_J_GUARD))
-    )
-
-
-def extract_text_column(bin_col, mode: str = "auto"):
-    """html binary → extracted text as a single Column.
-
-    mode='auto' (default): JVM-native chain with per-row oracle fallback —
-    the guard masks the pandas_udf input to NULL for fast-path rows, so the
-    Arrow transfer carries only the (normally zero) flagged rows.
-    mode='python': the round-1..4 pure-Python Arrow path (oracle everywhere).
-    mode='native': guard-less JVM chain (bench experiments only).
-    """
-    from pyspark.sql import functions as F
-
-    if mode == "python":
-        return extract_text_udf()(bin_col)
-    if mode == "native":
-        return extract_text_native(bin_col)
-    if mode != "auto":
-        raise ValueError(f"extract mode must be auto|python|native, got {mode!r}")
-    decoded = bin_col.cast("string")
-    pre = _native_pre(decoded)
-    guard = (
-        (~F.is_valid_utf8(decoded))
-        | F.regexp_like(decoded, F.lit(_J_GUARD_RAW))
-        | F.regexp_like(pre, F.lit(_J_GUARD))
-    )
-    oracle = extract_text_udf()(F.when(guard, bin_col))
-    return F.when(bin_col.isNull(), F.lit(None).cast("string")).otherwise(
-        F.coalesce(oracle, _native_post(pre))
-    )

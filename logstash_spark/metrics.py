@@ -49,37 +49,54 @@ class PipelineMetrics:
         out.events_filtered = self.events_filtered + other.events_filtered
         out.events_out = self.events_out + other.events_out
         out.duration_in_millis = self.duration_in_millis + other.duration_in_millis
-        by_id = {m.id: StageMetrics(m.id, m.events_in, m.events_out, m.failures)
-                 for m in self.filters}
-        for m in other.filters:
-            if m.id in by_id:
-                by_id[m.id].events_in += m.events_in
-                by_id[m.id].events_out += m.events_out
-                by_id[m.id].failures += m.failures
-            else:
-                by_id[m.id] = StageMetrics(m.id, m.events_in, m.events_out, m.failures)
+        by_id: dict[str, StageMetrics] = {}
+        for m in self.filters + other.filters:
+            acc = by_id.setdefault(m.id, StageMetrics(m.id))
+            acc.events_in += m.events_in
+            acc.events_out += m.events_out
+            acc.failures += m.failures
         out.filters = list(by_id.values())
         out.sinks = dict(self.sinks)
         for k, v in other.sinks.items():
             out.sinks[k] = out.sinks.get(k, 0) + v
         return out
 
+    def _events(self) -> dict:
+        return {
+            "in": self.events_in,
+            "filtered": self.events_filtered,
+            "out": self.events_out,
+            "duration_in_millis": self.duration_in_millis,
+        }
+
+    def to_manifest(self) -> dict:
+        """One batch's record: the checkpoint manifest entry and the
+        stream's jsonl line both carry exactly these keys."""
+        return {
+            "events": self._events(),
+            "sinks": dict(self.sinks),
+            "failures": {m.id: m.failures for m in self.filters},
+        }
+
+    @classmethod
+    def from_manifest(cls, pipeline_id: str, entry: dict) -> "PipelineMetrics":
+        """Inverse of ``to_manifest`` (resume replays acked batches)."""
+        ev = entry.get("events", {})
+        m = cls(pipeline_id, ev.get("in", 0), ev.get("filtered", 0),
+                ev.get("out", 0), ev.get("duration_in_millis", 0),
+                sinks=dict(entry.get("sinks", {})))
+        m.filters = [
+            StageMetrics(sid, m.events_in, m.events_filtered, n)
+            for sid, n in entry.get("failures", {}).items()
+        ]
+        return m
+
     def to_dict(self) -> dict:
         return {
-            "events": {
-                "in": self.events_in,
-                "filtered": self.events_filtered,
-                "out": self.events_out,
-                "duration_in_millis": self.duration_in_millis,
-            },
+            "events": self._events(),
             "pipelines": {
                 self.pipeline_id: {
-                    "events": {
-                        "in": self.events_in,
-                        "filtered": self.events_filtered,
-                        "out": self.events_out,
-                        "duration_in_millis": self.duration_in_millis,
-                    },
+                    "events": self._events(),
                     "plugins": {
                         "filters": [m.to_dict() for m in self.filters],
                         "outputs": [

@@ -42,7 +42,7 @@ from pyspark.storagelevel import StorageLevel
 
 from .checkpoint import CheckpointManifest
 from .conditions import compile_condition
-from .metrics import PipelineMetrics, StageMetrics
+from .metrics import PipelineMetrics
 from .router import Router
 from .stages import build_stage
 from .stages.base import ensure_tags
@@ -106,23 +106,6 @@ class Pipeline:
             cached.unpersist()
         self._branch_caches = []
 
-    # ---- failure-tag census (per-stage metrics) ----------------------------
-    def _stage_failure_tags(self) -> dict[str, list[str]]:
-        out = {}
-        defaults = {
-            "grok": ["_grokparsefailure"],
-            "dissect": ["_dissectfailure"],
-            "json": ["_jsonparsefailure"],
-            "csv": ["_csvparsefailure"],
-            "date": ["_dateparsefailure"],
-            "geoip": ["_geoip_lookup_failure"],
-        }
-        for _, stage in self.stages:
-            tags = stage.conf.get("tag_on_failure") or defaults.get(stage.plugin_name, [])
-            if tags:
-                out[stage.id] = tags
-        return out
-
     # ---- execution ----------------------------------------------------------
     def run(
         self,
@@ -156,10 +139,11 @@ class Pipeline:
                     shutil.rmtree(f"{run_dir}/{sink.name}",
                                   ignore_errors=True)
         completed = manifest.completed_batches()
+        # one driver-side file listing per run: the resume check and
+        # every ack's lineage share it
+        src_desc = _describe_source(source)
 
-        bucketed = source.withColumn(
-            BUCKET_COL, F.pmod(F.xxhash64(F.col(bucket_on)), F.lit(n_buckets))
-        )
+        bucketed = with_bucket(source, bucket_on, n_buckets)
 
         groups: list[list[int]] = [[] for _ in range(n_batches)]
         for b in range(n_buckets):
@@ -171,7 +155,6 @@ class Pipeline:
             # a different n_buckets/n_batches/bucket_on would silently
             # skip work (e.g. a 4-batch run resumed as 1 batch skips
             # everything because batch 0 is acked)
-            src_now = _describe_source(source)
             for bid, entry in sorted(completed.items()):
                 expect = groups[bid] if bid < len(groups) else None
                 got = entry.get("buckets")
@@ -192,96 +175,103 @@ class Pipeline:
                 # file-backed identities are comparable.
                 src_was = entry.get("lineage", {}).get("source")
                 if (src_was and src_was != "in-memory"
-                        and src_now != "in-memory" and src_was != src_now):
+                        and src_desc != "in-memory" and src_was != src_desc):
                     raise ValueError(
                         f"resume: manifest batch {bid} was produced "
                         f"from {src_was!r} but this run reads "
-                        f"{src_now!r} — skipping it would mix two "
+                        f"{src_desc!r} — skipping it would mix two "
                         "inputs in the sinks; resume with the original "
                         "input, or start fresh (resume=False)")
 
         total = PipelineMetrics(self.id)
-        stage_tags = self._stage_failure_tags()
-
         for batch_id, buckets in enumerate(groups):
             if batch_id in completed:
-                total = total.merge(_metrics_from_manifest(self.id, completed[batch_id]))
+                total = total.merge(
+                    PipelineMetrics.from_manifest(self.id, completed[batch_id]))
                 continue
-            t0 = time.monotonic()
             batch_src = (
                 bucketed.filter(F.col(BUCKET_COL).isin(buckets))
                 if n_batches > 1
                 else bucketed
             )
-            obs = Observation(f"in_{batch_id}")
-            batch_src = batch_src.observe(obs, F.count(F.lit(1)).alias("events_in"))
-            # One shuffle on the bucket key before the multi-sink fan-out:
-            # without it every task writes into every bucket directory of
-            # every sink (tasks x buckets x sinks tiny files — measured to
-            # INVERT scaling at local[32]). With it each bucket is one
-            # task's output file per sink, and the persisted layout is
-            # co-located with the checkpoint/ack unit. The shuffle carries
-            # only post-parse columns (html is projected away by the
-            # extract stage before this point).
-            compiled = self.compile(batch_src)
-            if BUCKET_COL not in compiled.columns:
-                raise ValueError(
-                    f"a filter removed the internal {BUCKET_COL!r} column "
-                    "(remove_field / prune whitelist?) — it must survive "
-                    "to the sinks: it is the partition key of the "
-                    "checkpointed idempotent bucket-overwrite contract")
-            routed = (
-                compiled
-                .repartition(len(buckets), F.col(BUCKET_COL))
-                .persist(StorageLevel.MEMORY_AND_DISK)
-            )
-            try:
-                # ONE materializing agg: total row count + per-stage failure
-                # counts (fills the cache; separate count() jobs removed)
-                filtered_count, failure_counts = _failure_census(routed, stage_tags)
-                in_count = int(obs.get["events_in"])
-                sink_counts = self.router.write_batch(
-                    routed, run_dir,
-                    truncate_tables=(not resume) and batch_id == 0)
-            finally:
-                routed.unpersist()
-                self.release_branch_caches()
-            duration_ms = int((time.monotonic() - t0) * 1000)
-
-            m = PipelineMetrics(self.id)
-            m.events_in = in_count
-            m.events_filtered = filtered_count
-            m.events_out = sum(sink_counts.values())
-            m.duration_in_millis = duration_ms
-            m.sinks = sink_counts
-            m.filters = [
-                StageMetrics(sid, in_count, filtered_count, failure_counts.get(sid, 0))
-                for sid in stage_tags
-            ]
-            manifest.ack(
-                batch_id,
-                {
-                    "buckets": buckets,
-                    "events": {
-                        "in": m.events_in,
-                        "filtered": m.events_filtered,
-                        "out": m.events_out,
-                        "duration_in_millis": duration_ms,
-                    },
-                    "sinks": sink_counts,
-                    "failures": failure_counts,
-                    "lineage": {"source": _describe_source(source),
-                                "run_dir": run_dir,
-                                "bucket_on": bucket_on,
-                                "n_buckets": n_buckets},
-                },
-            )
+            m = self._run_batch(
+                batch_src, run_dir, len(buckets), mode="overwrite",
+                truncate_tables=(not resume) and batch_id == 0)
+            manifest.ack(batch_id, {
+                "buckets": buckets,
+                "lineage": {"source": src_desc,
+                            "run_dir": run_dir,
+                            "bucket_on": bucket_on,
+                            "n_buckets": n_buckets},
+                **m.to_manifest(),
+            })
             total = total.merge(m)
             if _fail_after_batch is not None and batch_id >= _fail_after_batch:
                 raise RuntimeError(f"simulated crash after batch {batch_id}")
 
         total.write(f"{run_dir}/metrics.json")
         return total
+
+    def _run_batch(
+        self, batch_src: DataFrame, run_dir: str, n_buckets: int,
+        mode: str, truncate_tables: bool,
+    ) -> PipelineMetrics:
+        """The micro-batch body both execution modes share: compile the
+        bucketed input, shuffle it onto the bucket key, persist it, take
+        the failure census, fan out to the sinks, release the caches."""
+        t0 = time.monotonic()
+        # events.in is the PRE-compile ingress count (node-stats
+        # semantics): a drop/split filter changes the post-compile
+        # count, which is events.filtered
+        obs = Observation()
+        batch_src = batch_src.observe(obs, F.count(F.lit(1)).alias("events_in"))
+        compiled = self.compile(batch_src)
+        if BUCKET_COL not in compiled.columns:
+            raise ValueError(
+                f"a filter removed the internal {BUCKET_COL!r} column "
+                "(remove_field / prune whitelist?) — it must survive "
+                "to the sinks: it is the partition key of the "
+                "checkpointed idempotent bucket-overwrite contract")
+        # One shuffle on the bucket key before the multi-sink fan-out:
+        # without it every task writes into every bucket directory of
+        # every sink (tasks x buckets x sinks tiny files — measured to
+        # INVERT scaling at local[32]). With it each bucket is one
+        # task's output file per sink, and the persisted layout is
+        # co-located with the checkpoint/ack unit. The shuffle carries
+        # only post-parse columns (html is projected away by the
+        # extract stage before this point).
+        routed = (
+            compiled
+            .repartition(n_buckets, F.col(BUCKET_COL))
+            .persist(StorageLevel.MEMORY_AND_DISK)
+        )
+        stage_tags = {stage.id: stage.failure_tags
+                      for _, stage in self.stages if stage.failure_tags}
+        try:
+            # ONE materializing agg: total row count + per-stage failure
+            # counts (fills the cache; separate count() jobs removed)
+            filtered_count, failure_counts = _failure_census(routed, stage_tags)
+            in_count = int(obs.get["events_in"])
+            sink_counts = self.router.write_batch(
+                routed, run_dir, mode=mode, truncate_tables=truncate_tables)
+        finally:
+            routed.unpersist()
+            self.release_branch_caches()
+
+        return PipelineMetrics.from_manifest(self.id, {
+            "events": {"in": in_count, "filtered": filtered_count,
+                       "out": sum(sink_counts.values()),
+                       "duration_in_millis": int((time.monotonic() - t0) * 1000)},
+            "sinks": sink_counts,
+            "failures": {sid: failure_counts.get(sid, 0) for sid in stage_tags},
+        })
+
+
+def with_bucket(df: DataFrame, bucket_on: str, n_buckets: int) -> DataFrame:
+    """Tag each row with its url-hash bucket, the partition key of every
+    path sink and the unit a batch run groups and acks."""
+    return df.withColumn(
+        BUCKET_COL, F.pmod(F.xxhash64(F.col(bucket_on)), F.lit(n_buckets)))
 
 
 _COND = "__when_cond"
@@ -449,21 +439,6 @@ def _failure_census(
         {sid: int(row[sid] or 0) for sid in stage_tags} if "tags" in df.columns else {}
     )
     return int(row["__total"]), failures
-
-
-def _metrics_from_manifest(pipeline_id: str, entry: dict) -> PipelineMetrics:
-    m = PipelineMetrics(pipeline_id)
-    ev = entry.get("events", {})
-    m.events_in = ev.get("in", 0)
-    m.events_filtered = ev.get("filtered", 0)
-    m.events_out = ev.get("out", 0)
-    m.duration_in_millis = ev.get("duration_in_millis", 0)
-    m.sinks = dict(entry.get("sinks", {}))
-    m.filters = [
-        StageMetrics(sid, m.events_in, m.events_filtered, n)
-        for sid, n in entry.get("failures", {}).items()
-    ]
-    return m
 
 
 def _describe_source(df: DataFrame) -> str:

@@ -41,11 +41,10 @@ def failure_tag_predicate(df: DataFrame) -> Column:
     return F.exists(F.col(TAGS_FIELD), lambda t: t.endswith("failure") | t.endswith("_miss"))
 
 
-# write_batch's partitionOverwriteMode pin is depth-counted per session
-# (see write_batch) — module-level so concurrent Router instances on the
-# same session coordinate
-_MODE_PIN_LOCK = threading.Lock()
-_MODE_PIN: dict[int, tuple[int, str | None]] = {}
+# Set per write, never in the session conf: under Spark's default STATIC
+# mode an overwrite truncates the whole sink, not just the batch's
+# buckets, so resume would keep only the last batch.
+DYNAMIC_OVERWRITE = {"partitionOverwriteMode": "dynamic"}
 
 
 @dataclass
@@ -178,7 +177,8 @@ def _write_catalog_table(branch: DataFrame, sink: SinkSpec, mode: str) -> None:
 
     spark = branch.sparkSession
     if not spark.catalog.tableExists(sink.table):
-        creator = branch.writeTo(sink.table).using(sink.fmt)
+        creator = (branch.writeTo(sink.table).using(sink.fmt)
+                   .options(**DYNAMIC_OVERWRITE))
         if "bucket" in branch.columns:
             creator = creator.partitionedBy(F.col("bucket"))
         creator.create()
@@ -203,10 +203,12 @@ def _write_catalog_table(branch: DataFrame, sink: SinkSpec, mode: str) -> None:
             raise
         # The built-in session catalog exposes parquet tables as v1,
         # which rejects DataFrameWriterV2 writes — fall back to the v1
-        # writer. insertInto is position-based, so align to the table's
-        # column order first; `partitionOverwriteMode=dynamic`
-        # (session.py) gives overwrite the same replace-partitions
-        # semantics the V2 path has.
+        # writer. insertInto ignores writer options but honours the
+        # table's storage properties, so dynamic overwrite is set there.
+        # insertInto is position-based: align to the table's columns.
+        if mode == "overwrite":
+            spark.sql(f"ALTER TABLE {sink.table} SET SERDEPROPERTIES "
+                      "('partitionOverwriteMode'='dynamic')")
         aligned = branch.select(*spark.table(sink.table).columns)
         aligned.write.insertInto(sink.table, overwrite=(mode == "overwrite"))
 
@@ -312,24 +314,14 @@ class Router:
         """Write every sink branch of an (already persisted) batch.
 
         Returns per-sink row counts. Partitioned-by-bucket dynamic
-        overwrite keeps re-runs of the same batch idempotent.
-
-        The at-least-once resume guarantee must not depend on who built
-        the SparkSession: ``mode("overwrite").partitionBy("bucket")`` is
-        only bucket-scoped when ``spark.sql.sources.partitionOverwriteMode``
-        is ``dynamic`` — under the Spark default (STATIC) it truncates the
-        whole sink root, so every micro-batch would erase its predecessors
-        and resume would silently keep only the last batch. The conf is a
-        runtime-settable SQL conf; pin it here for the duration of the
-        fan-out and restore the caller's value after (reference parity:
+        overwrite (``DYNAMIC_OVERWRITE``) keeps re-runs of the same batch
+        idempotent whatever the session conf says (reference parity:
         ackedqueue/Queue.java ack semantics — a replayed batch must land
         idempotently regardless of process-level configuration).
         """
         from concurrent.futures import ThreadPoolExecutor
 
         from pyspark.sql import Observation
-
-        OVERWRITE_MODE_CONF = "spark.sql.sources.partitionOverwriteMode"
 
         def write_one(sink: SinkSpec) -> tuple[str, int]:
             branch = self.branch(df, sink)
@@ -377,7 +369,8 @@ class Router:
                     raise
             else:
                 path = f"{run_dir}/{sink.name}"
-                writer = branch.write.format(sink.fmt).mode(mode)
+                writer = (branch.write.format(sink.fmt).mode(mode)
+                          .options(**DYNAMIC_OVERWRITE))
                 if "bucket" in branch.columns:
                     writer = writer.partitionBy("bucket")
                 writer.save(path)
@@ -388,31 +381,5 @@ class Router:
         # the reference writes outputs from the same worker pass,
         # DatasetCompiler#outputDataset). Serializing them would leave
         # the cluster idle between job tails.
-        # Depth-counted pin: two concurrent write_batch calls share one
-        # session conf, so a plain save/restore races — the first
-        # finisher would flip the mode back to STATIC while the other
-        # is mid-write, resurrecting the whole-sink-root truncation this
-        # pin exists to prevent. The prior value is captured by the
-        # OUTERMOST writer and restored only when the last one leaves.
-        spark = df.sparkSession
-        key = id(spark)
-        with _MODE_PIN_LOCK:
-            depth, prior_mode = _MODE_PIN.get(
-                key, (0, spark.conf.get(OVERWRITE_MODE_CONF, None))
-            )
-            _MODE_PIN[key] = (depth + 1, prior_mode)
-            spark.conf.set(OVERWRITE_MODE_CONF, "dynamic")
-        try:
-            with ThreadPoolExecutor(max_workers=max(1, len(self.sinks))) as pool:
-                return dict(pool.map(write_one, self.sinks))
-        finally:
-            with _MODE_PIN_LOCK:
-                depth, prior_mode = _MODE_PIN[key]
-                if depth == 1:
-                    del _MODE_PIN[key]
-                    if prior_mode is None:
-                        spark.conf.unset(OVERWRITE_MODE_CONF)
-                    else:
-                        spark.conf.set(OVERWRITE_MODE_CONF, prior_mode)
-                else:
-                    _MODE_PIN[key] = (depth - 1, prior_mode)
+        with ThreadPoolExecutor(max_workers=max(1, len(self.sinks))) as pool:
+            return dict(pool.map(write_one, self.sinks))

@@ -304,6 +304,8 @@ class Stage:
     """Base class. Subclasses implement ``transform``."""
 
     plugin_name = "stage"
+    # tags a failed event gets when ``tag_on_failure`` is not configured
+    FAILURE_TAGS: tuple[str, ...] = ()
 
     def __init__(self, conf: dict):
         self.conf = dict(conf)
@@ -313,6 +315,12 @@ class Stage:
         self.remove_field: list[str] = self.conf.pop("remove_field", []) or []
         self.remove_tag: list[str] = self.conf.pop("remove_tag", []) or []
         self._resolved: dict[str, tuple[object, object]] = {}
+
+    @property
+    def failure_tags(self) -> list[str]:
+        """Tags this stage adds to events it fails on; the pipeline's
+        failure census counts rows carrying any of them."""
+        return list(self.conf.get("tag_on_failure", self.FAILURE_TAGS))
 
     def resolve_once(self, sc, key: str, build: Callable[[], object]):
         """Dimension-derived plan-time state (a dim count, a collected

@@ -174,6 +174,8 @@ class GeoipStage(Stage):
     Spark job for the dim per micro-batch (``Stage.resolve_once``).
     """
 
+    FAILURE_TAGS = ("_geoip_lookup_failure",)
+
     AUTO_THRESHOLD = 2000
 
     def _targets(self, df: DataFrame) -> list[str] | None:
@@ -253,7 +255,7 @@ class GeoipStage(Stage):
             )
         matched = F.col(f"{target}.country").isNotNull()
         df = add_tags(
-            df, self.conf.get("tag_on_failure", ["_geoip_lookup_failure"]),
+            df, self.failure_tags,
             src_ip.isNotNull() & ~matched,
         )
         return df, matched
@@ -1075,7 +1077,7 @@ class ElasticsearchStage(Stage):
     ``tag_on_failure`` default).
     """
 
-    TAG = "_elasticsearch_lookup_failure"
+    FAILURE_TAGS = ("_elasticsearch_lookup_failure",)
 
     def _targets(self, df: DataFrame) -> list[str] | None:
         return [field_name(t) for t in self.conf.get("fields", {}).values()] + ["tags"]
@@ -1173,7 +1175,7 @@ class ElasticsearchStage(Stage):
         out = out.drop("__es_hit", *probes.values())
         out = add_tags(
             out,
-            list(self.conf.get("tag_on_failure", [self.TAG])),
+            self.failure_tags,
             ~F.col("__matched"),
         )
         return out, F.col("__matched")

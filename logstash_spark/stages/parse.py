@@ -66,6 +66,8 @@ class GrokStage(Stage):
     whole-stage-codegen JVM path, no Python at all.
     """
 
+    FAILURE_TAGS = (GROK_FAILURE_TAG,)
+
     def _targets(self, df: DataFrame) -> list[str] | None:
         from ..grok import compile_grok
 
@@ -91,7 +93,7 @@ class GrokStage(Stage):
         defs = self.conf.get("pattern_definitions")
         target = self.conf.get("target")
         overwrite = self.conf.get("overwrite", [])
-        tags = self.conf.get("tag_on_failure", [GROK_FAILURE_TAG])
+        tags = self.failure_tags
 
         lowered = lower_multi_capture(patterns[0], defs) if (
             len(patterns) == 1
@@ -141,6 +143,8 @@ class DissectStage(Stage):
     conf: mapping {source: dissect_spec}, tag_on_failure.
     """
 
+    FAILURE_TAGS = (DISSECT_FAILURE_TAG,)
+
     def _targets(self, df: DataFrame) -> list[str] | None:
         if self.conf.get("target"):
             return [self.conf["target"], "tags"]
@@ -162,7 +166,7 @@ class DissectStage(Stage):
             self.conf.get("target"),
             self.conf.get("overwrite", []),
         )
-        df = add_tags(df, self.conf.get("tag_on_failure", [DISSECT_FAILURE_TAG]), ~F.col(_MATCHED))
+        df = add_tags(df, self.failure_tags, ~F.col(_MATCHED))
         return df, F.col(_MATCHED)
 
 
@@ -237,6 +241,8 @@ class JsonStage(Stage):
     column is never destroyed).
     """
 
+    FAILURE_TAGS = ("_jsonparsefailure",)
+
     def _targets(self, df: DataFrame) -> list[str] | None:
         if self.conf.get("schema"):
             tgt = self.conf.get("target") or field_name(self.conf.get("source", "message")) + "_parsed"
@@ -262,7 +268,7 @@ class JsonStage(Stage):
             df = df.withColumn(tgt, F.when(parsed.isNotNull(), merged).otherwise(F.col(tgt)))
         else:
             df = df.withColumn(tgt, parsed)
-        df = add_tags(df, self.conf.get("tag_on_failure", ["_jsonparsefailure"]), failure)
+        df = add_tags(df, self.failure_tags, failure)
         return df, matched & src.isNotNull()
 
 
@@ -273,6 +279,8 @@ class CsvStage(Stage):
     conf: source, columns [names] or schema DDL, separator, quote_char,
     target. Native ``F.from_csv`` 1:1.
     """
+
+    FAILURE_TAGS = ("_csvparsefailure",)
 
     def _targets(self, df: DataFrame) -> list[str] | None:
         if self.conf.get("autodetect_column_names"):
@@ -333,9 +341,12 @@ class CsvStage(Stage):
             for fld in [f.strip().split()[0].strip("`") for f in ddl.split(",")]:
                 df = df.withColumn(fld, F.col(f"{tmp}.`{fld}`"))
             df = df.drop(tmp)
-        df = add_tags(df, self.conf.get("tag_on_failure", ["_csvparsefailure"]),
+        df = add_tags(df, self.failure_tags,
                       src.isNotNull() & ~matched)
         return df, matched
+
+
+_XML_CORRUPT = "__xml_corrupt_record"
 
 
 @register("xml")
@@ -348,18 +359,23 @@ class XmlStage(Stage):
     (Spark 4) — JVM-side, no Python.
     """
 
+    FAILURE_TAGS = ("_xmlparsefailure",)
+
     def _targets(self, df: DataFrame) -> list[str] | None:
         return [self.conf.get("target", "xml"), "tags"]
 
     def transform(self, df: DataFrame) -> tuple[DataFrame, Column]:
         source = self.conf.get("source", "message")
-        schema = self.conf["schema"]
         target = self.conf.get("target", "xml")
         src = field_col(source)
-        parsed = F.from_xml(src, schema)
-        df = df.withColumn(target, parsed)
-        matched = src.isNotNull() & parsed.isNotNull()
-        df = add_tags(df, self.conf.get("tag_on_failure", ["_xmlparsefailure"]),
+        # from_xml is PERMISSIVE: malformed input yields a struct of
+        # nulls, not null. Its corrupt-record slot is what tells a
+        # failed parse apart from a document without the fields.
+        schema = f"{self.conf['schema']}, `{_XML_CORRUPT}` string"
+        parsed = F.from_xml(src, schema, {"columnNameOfCorruptRecord": _XML_CORRUPT})
+        df = df.withColumn(target, parsed.dropFields(_XML_CORRUPT))
+        matched = src.isNotNull() & parsed.getField(_XML_CORRUPT).isNull()
+        df = add_tags(df, self.failure_tags,
                       src.isNotNull() & ~matched)
         return df, matched
 
@@ -393,6 +409,8 @@ class DateStage(Stage):
     whole query in round 1.
     """
 
+    FAILURE_TAGS = ("_dateparsefailure",)
+
     def _targets(self, df: DataFrame) -> list[str] | None:
         return [self.conf.get("target", "event_ts"), "tags"]
 
@@ -421,7 +439,7 @@ class DateStage(Stage):
             df = df.withColumn(target, F.when(matched, parsed).otherwise(F.col(target)))
         else:
             df = df.withColumn(target, parsed)
-        df = add_tags(df, self.conf.get("tag_on_failure", ["_dateparsefailure"]),
+        df = add_tags(df, self.failure_tags,
                       src.isNotNull() & ~matched)
         return df, matched
 

@@ -11,9 +11,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-import os
-
-from ..extract import extract_text_column
+from ..extract import extract_text_udf
 from ..fieldref import field_col
 from .base import Stage, register
 
@@ -26,23 +24,9 @@ class ExtractTextStage(Stage):
     huge ``html`` binary column, so the pipeline should project ``html``
     away immediately after (SURVEY §4: keep html-touching UDFs early &
     select-pruned so the binary never reaches a shuffle).
-    conf: source (default html), target (default text), drop_source,
-    mode (python|auto|native — default python; env LS_SPARK_EXTRACT_MODE
-    overrides for A/B benchmarking).
-
-    Round-5 finding (measure, don't guess): we built the JVM-native
-    Catalyst lowering the round-4 verdict asked for
-    (extract.extract_text_column mode=auto/native, byte-differential
-    gated, guard-routed oracle fallback) and MEASURED it slower than
-    the Arrow path — 2.6 MB/s/core vs 20.1 MB/s/core for the
-    CPython-regex oracle through Spark local[1], 32.2 MB/s/core raw
-    (BASELINE.md round-5 extractor study). Java
-    regex pays a UTF8String→UTF-16 conversion per regexp_replace pass
-    plus slower alternation scanning; CPython's sre + C-level
-    str.translate/split win. The default therefore stays on the
-    vectorized Arrow oracle path; auto/native remain available and
-    byte-identity-tested (tests/test_extract_native.py) for engines/
-    clusters where Python workers are the scarce resource.
+    conf: source (default html), target (default text), drop_source.
+    A JVM-native Catalyst lowering was built and measured slower than
+    this path (BASELINE.md "Round-5 extractor study").
     """
 
     def _targets(self, df: DataFrame) -> list[str] | None:
@@ -53,10 +37,7 @@ class ExtractTextStage(Stage):
     def transform(self, df: DataFrame) -> tuple[DataFrame, Column]:
         source = self.conf.get("source", "html")
         target = self.conf.get("target", "text")
-        mode = os.environ.get(
-            "LS_SPARK_EXTRACT_MODE", self.conf.get("mode", "python")
-        )
-        df = df.withColumn(target, extract_text_column(field_col(source), mode=mode))
+        df = df.withColumn(target, extract_text_udf()(field_col(source)))
         if self.conf.get("drop_source", False):
             df = df.drop(source)
         return df, F.col(target).isNotNull()

@@ -11,6 +11,9 @@ Reference counterparts:
   batch's sinks are written, giving the same at-least-once contract.
 * per-batch metrics ≙ the node-stats events counters (§3.3), emitted
   as one JSON line per micro-batch (``metrics_stream.jsonl``).
+* the micro-batch body is ``Pipeline._run_batch`` — the same executor
+  batch mode runs per bucket group — and each jsonl line is its
+  ``PipelineMetrics.to_manifest()`` record plus the ``batch_id``.
 
 Semantics notes (documented deviations, SURVEY §2.6):
 * Logstash is processing-time only; event-time watermarking is an
@@ -35,13 +38,13 @@ from __future__ import annotations
 
 import json
 import os
-import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
-from .pipeline import BUCKET_COL, Pipeline, _failure_census
+from .pipeline import Pipeline, with_bucket
+# the benchmark's traced run wraps this name (perfbench/layers.py)
+from .pipeline import _failure_census  # noqa: F401
 
 STREAM_BUCKETS = 8
 
@@ -74,47 +77,13 @@ def run_streaming(
     """
     os.makedirs(run_dir, exist_ok=True)
     metrics_path = f"{run_dir}/metrics_stream.jsonl"
-    stage_tags = pipe._stage_failure_tags()
 
     def handle_batch(batch_df: DataFrame, batch_id: int) -> None:
-        from pyspark.sql import Observation
-
-        t0 = time.monotonic()
-        bucketed = batch_df.withColumn(
-            BUCKET_COL, F.pmod(F.xxhash64(F.col(bucket_on)), F.lit(n_buckets))
-        )
-        # events.in must be the PRE-compile ingress count (batch-mode
-        # parity / node-stats semantics): a drop/split filter changes
-        # the post-compile count, which is events.filtered
-        obs = Observation(f"sin_{batch_id}")
-        bucketed = bucketed.observe(obs, F.count(F.lit(1)).alias("events_in"))
-        routed = (
-            pipe.compile(bucketed)
-            .repartition(n_buckets, F.col(BUCKET_COL))
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        try:
-            total, failures = _failure_census(routed, stage_tags)
-            in_count = int(obs.get["events_in"])
-            sink_counts = pipe.router.write_batch(
-                routed, run_dir, mode="append"
-            )
-        finally:
-            routed.unpersist()
-            pipe.release_branch_caches()
-        rec = {
-            "batch_id": batch_id,
-            "events": {
-                "in": in_count,
-                "filtered": total,
-                "out": sum(sink_counts.values()),
-                "duration_in_millis": int((time.monotonic() - t0) * 1000),
-            },
-            "sinks": sink_counts,
-            "failures": failures,
-        }
+        m = pipe._run_batch(with_bucket(batch_df, bucket_on, n_buckets),
+                            run_dir, n_buckets, mode="append",
+                            truncate_tables=False)
         with open(metrics_path, "a") as f:
-            f.write(json.dumps(rec) + "\n")
+            f.write(json.dumps({"batch_id": batch_id, **m.to_manifest()}) + "\n")
 
     writer = (
         stream.writeStream.foreachBatch(handle_batch)

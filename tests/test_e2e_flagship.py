@@ -180,11 +180,11 @@ def test_resume_is_session_conf_independent(spark, tmp_path):
     session, where spark.sql.sources.partitionOverwriteMode is Spark's
     default STATIC — under which mode("overwrite").partitionBy("bucket")
     truncated the whole sink root per micro-batch, so resume silently
-    kept only the last batch. Router.write_batch now pins the conf to
-    dynamic for the duration of the fan-out and restores the caller's
-    value; this test runs the full crash+resume flow with the session
-    forced to STATIC (a vanilla/driver-like session) and asserts exact
-    per-sink row counts and conf restoration."""
+    kept only the last batch. Router.write_batch now asks for dynamic
+    overwrite per write and never touches the session conf; this test
+    runs the full crash+resume flow with the session forced to STATIC
+    (a vanilla/driver-like session) and asserts exact per-sink row
+    counts and an unchanged conf."""
     conf = "spark.sql.sources.partitionOverwriteMode"
     prior = spark.conf.get(conf, None)
     spark.conf.set(conf, "static")

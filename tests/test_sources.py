@@ -397,10 +397,9 @@ def test_collectd_codec(spark, tmp_path):
 
 
 def test_write_batch_mode_pin_survives_concurrency(spark, tmp_path):
-    """Two concurrent write_batch calls on one session must not race the
-    partitionOverwriteMode pin: the depth-counted pin keeps the conf
-    dynamic until the LAST writer leaves, then restores the caller's
-    value (here: unset/STATIC default)."""
+    """Two concurrent write_batch calls on one STATIC session must each
+    write their sink in full and leave the session conf untouched:
+    dynamic overwrite is a per-write option, not a session setting."""
     from concurrent.futures import ThreadPoolExecutor
 
     from logstash_spark.router import Router, SinkSpec
@@ -426,6 +425,40 @@ def test_write_batch_mode_pin_survives_concurrency(spark, tmp_path):
         assert spark.read.parquet(str(tmp_path / "r2/out2")).count() == 100
     finally:
         df.unpersist()
+        spark.conf.set(conf_key, prior)
+
+
+def test_catalog_table_bucket_overwrite_under_static_session(spark):
+    """Under the Spark default partitionOverwriteMode=STATIC, re-writing
+    one bucket of a catalog-table sink must keep every other bucket's
+    rows — for a table the router created and for one pre-created with
+    a plain writeTo().create() — and must not touch the session conf."""
+    from pyspark.sql import functions as F
+
+    from logstash_spark.router import Router, SinkSpec
+
+    conf_key = "spark.sql.sources.partitionOverwriteMode"
+    prior = spark.conf.get(conf_key)
+    spark.conf.set(conf_key, "STATIC")
+    full = spark.createDataFrame(
+        [("u%d" % i, i) for i in range(10)], "url string, bucket int")
+    one = full.filter(F.col("bucket") == 0)
+    tables = ("ls_static_router", "ls_static_plain")
+    try:
+        for t in tables:
+            spark.sql(f"DROP TABLE IF EXISTS {t}")
+        full.writeTo("ls_static_plain").using("parquet").partitionedBy(
+            F.col("bucket")).create()
+        for t in tables:
+            router = Router([SinkSpec(name="out", table=t)])
+            router.write_batch(full, run_dir="/tmp/unused", mode="overwrite")
+            assert router.write_batch(one, run_dir="/tmp/unused",
+                                      mode="overwrite") == {"out": 1}
+            assert spark.table(t).count() == 10, t
+        assert spark.conf.get(conf_key) == "STATIC"
+    finally:
+        for t in tables:
+            spark.sql(f"DROP TABLE IF EXISTS {t}")
         spark.conf.set(conf_key, prior)
 
 
