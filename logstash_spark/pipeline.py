@@ -12,7 +12,8 @@ Reference counterparts:
   group, which is also the checkpoint/ack unit (ackedqueue parity, see
   checkpoint.py).
 * conditionals around filters: IfVertex branches — a stage with a
-  ``when`` key applies to matching rows only (filter → stage → union).
+  ``when`` key applies to matching rows only (``gated_merge``, or
+  filter → stage → union for stages that change row shape).
 
 Spec shape::
 
@@ -35,9 +36,6 @@ import time
 
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    ArrayType, MapType, NullType, StructField, StructType,
-)
 from pyspark.storagelevel import StorageLevel
 
 from .checkpoint import CheckpointManifest
@@ -45,7 +43,7 @@ from .conditions import compile_condition
 from .metrics import PipelineMetrics
 from .router import Router
 from .stages import build_stage
-from .stages.base import ensure_tags
+from .stages.base import ensure_tags, gated_merge
 
 BUCKET_COL = "bucket"
 
@@ -72,10 +70,11 @@ class Pipeline:
         naive ``filter(cond) → stage → union filter(~cond)`` executes
         everything upstream twice per conditional (round-1 finding).
         Row-preserving stages with a statically known write-set instead
-        lower to when/otherwise column merges on the single DataFrame —
-        the stage runs over all rows, its outputs gated per row by the
+        lower to one ``stages.base.gated_merge`` on the single DataFrame
+        — the stage runs over all rows, its outputs gated per row by the
         condition (the reference's Dataset#compute memoization
-        equivalent). Cardinality/shape-changing stages keep the branch
+        equivalent); the same gate applies a stage's success-gated
+        common options. Cardinality/shape-changing stages keep the branch
         lowering but persist the upstream first so it executes once;
         those persists are released by ``release_branch_caches()``
         (pipeline.run calls it after each batch).
@@ -274,150 +273,11 @@ def with_bucket(df: DataFrame, bucket_on: str, n_buckets: int) -> DataFrame:
         BUCKET_COL, F.pmod(F.xxhash64(F.col(bucket_on)), F.lit(n_buckets)))
 
 
-_COND = "__when_cond"
-
-
-def _union_struct(old_t, new_t):
-    """Recursive field union of two struct types: new_t's fields first
-    (keeping NEW types on name overlap; nested structs union
-    recursively), then old-only fields appended. Non-struct pairs →
-    new_t. Lets a conditional merge keep values a stage's schema
-    change would otherwise silently drop (nested remove_field)."""
-    if not (isinstance(old_t, StructType) and isinstance(new_t, StructType)):
-        return new_t
-    old_by = {f.name: f for f in old_t.fields}
-    new_names = {f.name for f in new_t.fields}
-    fields = [
-        StructField(
-            f.name,
-            _union_struct(old_by[f.name].dataType, f.dataType)
-            if f.name in old_by else f.dataType,
-            True,
-        )
-        for f in new_t.fields
-    ]
-    fields += [StructField(f.name, f.dataType, True)
-               for f in old_t.fields if f.name not in new_names]
-    return StructType(fields)
-
-
-def _align_to(col, old_t, new_t):
-    """Project a column of schema ``old_t`` into schema ``new_t``:
-    struct-vs-struct recurses field-by-field (fields absent from the
-    old shape → typed null; shared fields keep their values, aligned
-    recursively); non-struct mismatches try_cast (the convert-op
-    discipline: dirty → null, flow on). A null old struct stays a null
-    new struct."""
-    if old_t == new_t:
-        return col
-    if isinstance(old_t, StructType) and isinstance(new_t, StructType):
-        parts = []
-        for f in new_t.fields:
-            if f.name in old_t.fieldNames():
-                parts.append(_align_to(
-                    col.getField(f.name), old_t[f.name].dataType, f.dataType
-                ).alias(f.name))
-            else:
-                parts.append(F.lit(None).cast(f.dataType).alias(f.name))
-        return F.when(col.isNull(), F.lit(None).cast(new_t)).otherwise(
-            F.struct(*parts))
-    def _category(t):
-        for cls in (StructType, ArrayType, MapType):
-            if isinstance(t, cls):
-                return cls
-        return "scalar"
-
-    if isinstance(old_t, NullType):
-        # a void (all-null) backup casts into ANY type while preserving
-        # every (null) value — the refusal below would false-positive
-        return col.try_cast(new_t)
-    if _category(old_t) != _category(new_t):
-        # CROSS-category retype (scalar↔struct/array/map, array↔map…)
-        # has no value-preserving cast: a conditional stage (e.g.
-        # `if [x] { mutate { split ... } }`) retyped the column, and
-        # unmatched rows cannot keep their original value in the new
-        # type. try_cast would fail ANALYSIS (opaque DATA_DIFF_TYPES)
-        # or silently null/stringify — refuse loudly instead.
-        raise ValueError(
-            f"conditional stage retypes a column from "
-            f"{old_t.simpleString()} to {new_t.simpleString()}; "
-            "unmatched rows cannot keep the original value in a typed "
-            "schema — write unconditionally or use a different target")
-    return col.try_cast(new_t)
-
-
 def _conditional_merge(df: DataFrame, stage, cond, targets: list[str]) -> DataFrame:
-    """Lower ``if cond { stage }`` into column merges on one DataFrame.
-
-    1. pin the condition (evaluated against PRE-stage columns);
-    2. back up every target column that already exists;
-    3. run the stage over ALL rows (one subtree execution);
-    4. per target: matched rows take the stage's value, others keep the
-       backup (or null for brand-new columns). A target the stage
-       REMOVED outright (remove_field on a matched=None stage drops the
-       column) is rebuilt from the backup: null for matched rows — the
-       remove applied to them — and the original value for the rest.
-    """
-    pre = df.withColumn(_COND, F.coalesce(cond, F.lit(False)))
-    backups: dict[str, str] = {}
-    for c in targets:
-        if c in df.columns:
-            backups[c] = f"__orig_{c}"
-            pre = pre.withColumn(backups[c], F.col(c))
-    out = stage.apply(pre)
-    # safety net: a stage whose _targets() under-declares would silently
-    # apply its effects to non-matching rows — fail loudly instead.
-    undeclared = [
-        c for c in out.columns
-        if c not in pre.columns and c not in targets
-    ]
-    if undeclared:
-        raise RuntimeError(
-            f"stage {stage.id!r} wrote undeclared columns {undeclared} under a "
-            f"conditional; fix its _targets() declaration"
-        )
-    for c in targets:
-        if c in backups:
-            if c in out.columns:
-                # a stage that RETYPED the column (nested add_field /
-                # set_field adding a struct key) would make the CASE
-                # branches two different struct types → analysis error;
-                # align the backup into the new shape (missing keys →
-                # null, shared keys keep their original values)
-                new_t = out.schema[c].dataType
-                old_t = pre.schema[backups[c]].dataType
-                ob = F.col(backups[c])
-                _complex = (StructType, ArrayType, MapType)
-                if old_t != new_t and (
-                    isinstance(old_t, _complex)
-                    or isinstance(new_t, _complex)
-                ):
-                    # a stage that DROPPED struct fields (nested
-                    # remove_field) must not erase them for UNMATCHED
-                    # rows: align BOTH sides into the union shape —
-                    # matched rows carry null in the dropped slots
-                    # (the engine's documented per-row-removal
-                    # deviation), unmatched rows keep their values
-                    union_t = _union_struct(old_t, new_t)
-                    if union_t != new_t:
-                        out = out.withColumn(
-                            c, _align_to(F.col(c), new_t, union_t))
-                        new_t = union_t
-                    # scalar mismatches (convert double→long) are left
-                    # to Spark's own CASE coercion — same as a branch
-                    # lowering's unionByName would produce
-                    ob = _align_to(ob, old_t, new_t)
-                out = out.withColumn(
-                    c, F.when(F.col(_COND), F.col(c)).otherwise(ob)
-                )
-            else:
-                # stage dropped the column (e.g. `if [x] { mutate {
-                # remove_field => [c] } }`): null for matched rows,
-                # backup for the rest
-                out = out.withColumn(c, F.when(~F.col(_COND), F.col(backups[c])))
-        elif c in out.columns:
-            out = out.withColumn(c, F.when(F.col(_COND), F.col(c)))
-    return out.drop(_COND, *backups.values())
+    """Lower ``if cond { stage }`` into one ``gated_merge`` on one
+    DataFrame: the stage runs over all rows, its targets are kept only
+    on the rows ``cond`` matches."""
+    return gated_merge(df, cond, stage.apply, targets, stage.id)
 
 
 def _failure_census(

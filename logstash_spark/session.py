@@ -68,7 +68,6 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(ARROW_BATCH))
-        .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
         # task-side parallel commit (v2): the v1 driver-side serial file
         # moves were a visible serial fraction at high parallelism. A
         # non-atomic commit is acceptable: the per-batch checkpoint

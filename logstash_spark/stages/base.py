@@ -7,8 +7,10 @@ on events the filter matched) plus an ``id``. The per-event
 ``filter(event)`` contract becomes here a per-DataFrame ``transform``
 contract: a stage takes a DataFrame and returns
 ``(DataFrame, matched_predicate | None)``; the base class then applies
-the common options as ``F.when(matched, …)`` column rewrites — the
-uniform success-conditioned wrapper SURVEY §2.4 requires.
+the common options to every row and keeps them only on matched rows
+through ``gated_merge`` — the uniform success-conditioned wrapper
+SURVEY §2.4 requires, and the same gate ``Pipeline.compile`` lowers an
+LSCL ``if`` around a stage with.
 
 Stages are registered by their Logstash plugin name so a pipeline spec
 reads like a logstash.conf: ``{"grok": {...}}``, ``{"mutate": {...}}``.
@@ -16,11 +18,14 @@ reads like a logstash.conf: ``{"grok": {...}}``, ``{"mutate": {...}}``.
 
 from __future__ import annotations
 
+import itertools
 from typing import Callable
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, MapType, StructType
+from pyspark.sql.types import (
+    ArrayType, MapType, NullType, StructField, StructType,
+)
 
 from ..fieldref import (
     TAGS_FIELD, field_col, field_name, is_index, sprintf_col,
@@ -74,22 +79,6 @@ def _set_struct_path(col: Column, dtype, path: list[str], val: Column) -> Column
         ".".join(_qseg(p) for p in prefix + [remainder[0]]), inner)
 
 
-def _struct_path_value(dtype, name: str, path: list[str]) -> Column:
-    """The current value at ``path`` inside struct column ``name`` cast
-    to string (sprintf leaf type), or a null string when the path does
-    not fully exist in the schema — used as the type-matched otherwise
-    branch of a conditional nested add_field."""
-    cur = dtype
-    for p in path:
-        if not (isinstance(cur, StructType) and p in cur.fieldNames()):
-            return F.lit(None).cast("string")
-        cur = cur[p].dataType
-    expr = F.col(name)
-    for p in path:
-        expr = expr.getField(p)
-    return expr.cast("string")
-
-
 def _struct_leaf_type(dtype, path: list[str]):
     """The DataType at ``path`` inside struct schema ``dtype``, or None
     when the path does not fully exist."""
@@ -101,24 +90,6 @@ def _struct_leaf_type(dtype, path: list[str]):
             return None
         cur = cur[p].dataType
     return cur
-
-
-def _existing_nonstruct_intermediate(dtype, path: list[str]) -> str | None:
-    """First intermediate segment of ``path`` that EXISTS in ``dtype``
-    with a non-struct type (so a write through it would overwrite a
-    real value with a vivified struct), or None when every existing
-    intermediate is a struct. Missing segments are fine — vivification
-    creates them without destroying anything."""
-    cur = dtype
-    for p in path[:-1]:
-        if not isinstance(cur, StructType):
-            return None  # parent already non-struct: caught one level up
-        if p not in cur.fieldNames():
-            return None  # missing → vivify, nothing to destroy
-        cur = cur[p].dataType
-        if not isinstance(cur, StructType):
-            return p
-    return None
 
 
 def _map_drop_key(col: Column, key: str) -> Column:
@@ -300,6 +271,131 @@ def add_tags(df: DataFrame, tags: list[str], cond: Column | None = None) -> Data
     return df.withColumn(TAGS_FIELD, col)
 
 
+_GATE_IDS = itertools.count()
+_COMPLEX = (StructType, ArrayType, MapType)
+
+
+def _union_struct(old_t, new_t):
+    """Recursive field union of two struct types: new_t's fields first
+    (keeping NEW types on name overlap; nested structs union
+    recursively), then old-only fields appended. Non-struct pairs →
+    new_t. Lets a gated write keep values its schema change would
+    otherwise drop for unmatched rows (nested remove_field)."""
+    if not (isinstance(old_t, StructType) and isinstance(new_t, StructType)):
+        return new_t
+    old_by = {f.name: f for f in old_t.fields}
+    new_names = {f.name for f in new_t.fields}
+    fields = [
+        StructField(
+            f.name,
+            _union_struct(old_by[f.name].dataType, f.dataType)
+            if f.name in old_by else f.dataType,
+            True,
+        )
+        for f in new_t.fields
+    ]
+    fields += [StructField(f.name, f.dataType, True)
+               for f in old_t.fields if f.name not in new_names]
+    return StructType(fields)
+
+
+def _align_to(col: Column, old_t, new_t, who: str = "", ref: str = "") -> Column:
+    """Project a column of schema ``old_t`` into schema ``new_t``:
+    struct-vs-struct recurses field-by-field (fields absent from the
+    old shape → typed null; shared fields keep their values, aligned
+    recursively); other same-category mismatches try_cast (the
+    convert-op discipline: dirty → null, flow on). A null old struct
+    stays a null new struct."""
+    if old_t == new_t:
+        return col
+    if isinstance(old_t, StructType) and isinstance(new_t, StructType):
+        parts = []
+        for f in new_t.fields:
+            if f.name in old_t.fieldNames():
+                parts.append(_align_to(
+                    col.getField(f.name), old_t[f.name].dataType,
+                    f.dataType, who, f"{ref}[{f.name}]").alias(f.name))
+            else:
+                parts.append(F.lit(None).cast(f.dataType).alias(f.name))
+        return F.when(col.isNull(), F.lit(None).cast(new_t)).otherwise(
+            F.struct(*parts))
+
+    def _category(t):
+        return next((c for c in _COMPLEX if isinstance(t, c)), "scalar")
+
+    # a void (all-null) value casts into ANY type, keeping every (null)
+    if (not isinstance(old_t, NullType)
+            and _category(old_t) != _category(new_t)):
+        # CROSS-category retype (scalar↔struct/array/map, array↔map…)
+        # has no value-preserving cast: try_cast would fail ANALYSIS
+        # (opaque DATA_DIFF_TYPES) or silently null/stringify the rows
+        # the gate leaves alone — refuse loudly instead.
+        raise ValueError(
+            f"stage {who!r} retypes {ref} from {old_t.simpleString()} "
+            f"to {new_t.simpleString()} under a condition; unmatched "
+            "rows cannot keep their non-struct or complex value in a "
+            "typed schema — remove the field first, write "
+            "unconditionally or use a different target")
+    return col.try_cast(new_t)
+
+
+def gated_merge(
+    df: DataFrame, cond: Column, write: Callable[[DataFrame], DataFrame],
+    targets: list[str], who: str,
+) -> DataFrame:
+    """Apply ``write`` to the rows where ``cond`` holds and leave every
+    other row as it was — the one lowering of an LSCL ``if`` around a
+    stage AND of a stage's success-gated common options.
+
+    1. pin the condition (evaluated against the INPUT columns);
+    2. back up every target column that already exists;
+    3. run ``write`` over ALL rows (one subtree execution);
+    4. per target: matched rows take the written value, others keep the
+       backup (or null for brand-new columns). A target ``write``
+       dropped is rebuilt from the backup: null for matched rows, the
+       original value for the rest. A target ``write`` retyped is
+       aligned: struct fields it dropped are kept (null on matched
+       rows), and a cross-category retype is refused.
+
+    Gates nest (a ``when``-wrapped grok with add_tag), so each call
+    pins and backs up under its own column names."""
+    n = next(_GATE_IDS)
+    pin = F.col(f"__gate{n}")
+    pre = df.withColumn(f"__gate{n}", F.coalesce(cond, F.lit(False)))
+    backups = {c: f"__orig{n}_{c}" for c in targets if c in df.columns}
+    pre = pre.withColumns({b: F.col(c) for c, b in backups.items()})
+    out = write(pre)
+    # safety net: a write that under-declares its targets would
+    # silently apply its effects to non-matching rows — fail loudly
+    undeclared = [c for c in out.columns
+                  if c not in pre.columns and c not in targets]
+    if undeclared:
+        raise RuntimeError(
+            f"stage {who!r} wrote undeclared columns {undeclared} under a "
+            f"conditional; fix its _targets() declaration")
+    old_types = {f.name: f.dataType for f in df.schema.fields}
+    new_types = {f.name: f.dataType for f in out.schema.fields}
+    merged = {}
+    for c in targets:
+        if c not in backups:
+            if c in new_types:
+                merged[c] = F.when(pin, F.col(c))
+        elif c not in new_types:
+            merged[c] = F.when(~pin, F.col(backups[c]))
+        else:
+            old_t, new_t = old_types[c], new_types[c]
+            new, kept = F.col(c), F.col(backups[c])
+            if old_t != new_t and (isinstance(old_t, _COMPLEX)
+                                   or isinstance(new_t, _COMPLEX)):
+                union_t = _union_struct(old_t, new_t)
+                new = _align_to(new, new_t, union_t)
+                kept = _align_to(kept, old_t, union_t, who, f"[{c}]")
+            # scalar mismatches (convert double→long) are left to
+            # Spark's own CASE coercion, as a branch union would be
+            merged[c] = F.when(pin, new).otherwise(kept)
+    return out.withColumns(merged).drop(f"__gate{n}", *backups.values())
+
+
 class Stage:
     """Base class. Subclasses implement ``transform``."""
 
@@ -350,186 +446,65 @@ class Stage:
         would change their semantics, not just their cost."""
         return None
 
-    def conditional_targets(self, df: DataFrame) -> list[str] | None:
-        """Full write-set under an LSCL ``if`` wrapper: the stage's own
-        targets plus the common-option targets (add_field/add_tag/
-        remove_field/remove_tag land on columns too). Used by
-        Pipeline.compile to lower ``if cond { stage }`` into
-        when/otherwise column merges on the SINGLE DataFrame — the
-        reference's Dataset#compute memoization equivalent (without it
-        the upstream subtree executes once per conditional branch)."""
-        own = self._targets(df)
-        if own is None:
-            return None
+    def _common_targets(self) -> list[str]:
+        """Top-level columns the common options write (add_field/
+        remove_field land on their top column, add_tag/remove_tag on
+        ``tags``)."""
         extra = [field_name(r) for r in self.add_field]
         extra += [field_name(r) for r in self.remove_field]
         if self.add_tag or self.remove_tag:
             extra.append(TAGS_FIELD)
-        return list(dict.fromkeys(list(own) + extra))
+        return list(dict.fromkeys(extra))
+
+    def conditional_targets(self, df: DataFrame) -> list[str] | None:
+        """Full write-set under an LSCL ``if`` wrapper: the stage's own
+        targets plus the common-option targets. Used by Pipeline.compile
+        to lower ``if cond { stage }`` into one ``gated_merge`` on the
+        SINGLE DataFrame — the reference's Dataset#compute memoization
+        equivalent (without it the upstream subtree executes once per
+        conditional branch)."""
+        own = self._targets(df)
+        if own is None:
+            return None
+        return list(dict.fromkeys(list(own) + self._common_targets()))
 
     # ---- common-option wrapper (filters/base.rb filter_matched) ------------
-    def apply(self, df: DataFrame) -> DataFrame:
-        out, matched = self.transform(df)
-        if not (self.add_field or self.add_tag or self.remove_field or self.remove_tag):
-            return out.drop("__matched") if "__matched" in out.columns else out
+    def _common_options(self, df: DataFrame) -> DataFrame:
+        """Apply add_field, add_tag, remove_field, remove_tag to EVERY
+        row of ``df``; ``apply`` gates the result on the matched rows."""
         from ..fieldref import _canonical, parse_ref
 
-        cond = matched if matched is not None else F.lit(True)
         for ref, template in self.add_field.items():
-            parts = _canonical(parse_ref(ref))
-            name = parts[0]
-            val = sprintf_col(template)
-            if len(parts) > 1:
-                # nested target: set ONE key inside the struct — a
-                # whole-column write would clobber the siblings and
-                # retype the column (the reference sets only [a][b])
-                if name in out.columns:
-                    top_t = out.schema[name].dataType
-                    if isinstance(top_t, MapType):
-                        # map top ([@metadata][k]): key upsert — both
-                        # CASE branches are the same map type, so the
-                        # conditional form needs no alignment tricks
-                        if len(parts) != 2:
-                            raise ValueError(
-                                f"add_field: {ref!r} targets a key "
-                                f"inside map values of column {name!r}"
-                                " — only single-level key writes are "
-                                "supported")
-                        new = _map_set_key(F.col(name), top_t, parts[1], val)
-                        out = out.withColumn(
-                            name, new if matched is None else
-                            F.when(cond, new).otherwise(F.col(name)))
-                        continue
-                    if not dict(out.dtypes)[name].startswith("struct"):
-                        if matched is None:
-                            # unconditional: event.set parity — Ruby
-                            # overwrites a non-hash top with a hash,
-                            # exactly like set_field/replace do
-                            out = set_field(out, ref, val)
-                            continue
-                        raise ValueError(
-                            f"add_field: {ref!r} targets a nested key "
-                            f"but column {name!r} is not a struct — a "
-                            "conditional write cannot retype it "
-                            "without clobbering unmatched rows")
-                    dtype = out.schema[name].dataType
-                    if matched is not None:
-                        # an existing COMPLEX leaf cannot survive the
-                        # conditional rewrite: the otherwise branch
-                        # must carry the new (string) leaf type, which
-                        # would stringify unmatched rows' struct/array/
-                        # map values (review finding) — refuse loudly
-                        leaf_t = _struct_leaf_type(dtype, parts[1:])
-                        if isinstance(leaf_t, (ArrayType, MapType,
-                                               StructType)):
-                            raise ValueError(
-                                f"add_field: {ref!r} overwrites an "
-                                f"existing {leaf_t.simpleString()} "
-                                "leaf under a conditional — unmatched "
-                                "rows cannot keep the complex value "
-                                "in the retyped column; remove the "
-                                "field first or write unconditionally")
-                        # a conditional write THROUGH an existing
-                        # non-struct intermediate would have to vivify
-                        # it into a struct on every row — destroying
-                        # the original value on rows the filter did NOT
-                        # match (the reference leaves unmatched events
-                        # untouched). A typed column cannot hold both
-                        # shapes; refuse loudly instead of corrupting.
-                        bad = _existing_nonstruct_intermediate(
-                            dtype, parts[1:])
-                        if bad is not None:
-                            raise ValueError(
-                                f"add_field: {ref!r} writes through "
-                                f"[{bad}], which exists with a "
-                                "non-struct type — a conditional write "
-                                "cannot retype it without clobbering "
-                                "unmatched rows; rename the "
-                                "intermediate or write unconditionally")
-                    new = _set_struct_path(F.col(name), dtype, parts[1:], val)
-                    if matched is None:
-                        # unconditional: assign directly — a
-                        # when/otherwise over the original column is a
-                        # CASE WHEN with mismatched struct types the
-                        # moment the path adds a NEW key
-                        out = out.withColumn(name, new)
-                    else:
-                        # conditional: the otherwise branch must carry
-                        # the SAME struct type, so it sets the same
-                        # path — to the pre-existing value (rendered as
-                        # string, matching the sprintf leaf type) when
-                        # the full path already exists, else to null
-                        keep = _struct_path_value(dtype, name, parts[1:])
-                        unset = _set_struct_path(
-                            F.col(name), dtype, parts[1:], keep)
-                        out = out.withColumn(
-                            name, F.when(cond, new).otherwise(unset))
-                else:
-                    inner = val
-                    for p in reversed(parts[1:]):
-                        inner = F.struct(inner.alias(p))
-                    out = out.withColumn(name, F.when(cond, inner))
-            elif name in out.columns:
-                out = out.withColumn(name, F.when(cond, val).otherwise(F.col(name)))
-            else:
-                out = out.withColumn(name, F.when(cond, val))
-        if self.add_tag:
-            out = add_tags(out, self.add_tag, cond)
+            df = set_field(df, ref, sprintf_col(template))
+        df = add_tags(df, self.add_tag)
         for ref in self.remove_field:
             parts = _canonical(parse_ref(ref))
-            name = parts[0]
-            if name not in out.columns:
+            if parts[0] not in df.columns:
                 continue
-            if len(parts) > 1:
-                # nested removal: drop ONE key, keep the siblings
-                top_t = out.schema[name].dataType
-                if isinstance(top_t, MapType) and len(parts) == 2:
-                    filtered = _map_drop_key(F.col(name), parts[1])
-                    out = out.withColumn(
-                        name, filtered if matched is None else
-                        F.when(cond, filtered).otherwise(F.col(name)))
-                    continue
-                if not dict(out.dtypes)[name].startswith("struct"):
-                    continue  # non-struct top → nested key cannot exist
-                leaf_t = _struct_leaf_type(out.schema[name].dataType, parts[1:])
-                if leaf_t is None:
-                    continue  # path absent → reference no-op (dropFields
-                    # on a missing field would fail analysis)
-                dotted = ".".join(_qseg(p) for p in parts[1:])
-                if matched is None:
-                    # _drop_field_path collapses ancestors the removal
-                    # would leave empty (dropFields errors on emptying
-                    # a struct)
-                    out = _drop_field_path(out, parts)
-                else:
-                    # conditional: a CASE over dropped-vs-original is two
-                    # DIFFERENT struct types → analysis error. Null the
-                    # leaf in place instead (typed schemas can't express
-                    # per-row key absence; null is Spark's absent)
-                    leaf = F.col(name)
-                    for p in parts[1:]:
-                        leaf = leaf.getField(p)
-                    nulled = F.col(name).withField(
-                        dotted,
-                        F.when(cond, F.lit(None).cast(leaf_t)).otherwise(leaf))
-                    out = out.withColumn(name, nulled)
-            elif matched is None:
-                out = out.drop(name)
-            else:
-                out = out.withColumn(
-                    name, F.when(cond, F.lit(None).cast(dict(out.dtypes)[name])).otherwise(F.col(name))
-                )
+            top_t = df.schema[parts[0]].dataType
+            # an absent nested path is a reference no-op (dropFields on
+            # a missing field would fail analysis)
+            if (len(parts) == 1
+                    or (isinstance(top_t, MapType) and len(parts) == 2)
+                    or _struct_leaf_type(top_t, parts[1:]) is not None):
+                df = _drop_field_path(df, parts)
         if self.remove_tag:
-            out = ensure_tags(out)
-            removed = F.array_except(
+            df = df.withColumn(TAGS_FIELD, F.array_except(
                 F.col(TAGS_FIELD),
-                F.array(*[_tag_col(t) for t in self.remove_tag]))
-            out = out.withColumn(
-                TAGS_FIELD, F.when(cond, removed).otherwise(F.col(TAGS_FIELD))
-            )
-        if "__matched" in out.columns:
-            out = out.drop("__matched")
-        return out
+                F.array(*[_tag_col(t) for t in self.remove_tag])))
+        return df
+
+    def apply(self, df: DataFrame) -> DataFrame:
+        out, matched = self.transform(df)
+        if self.add_tag or self.remove_tag:
+            out = ensure_tags(out)  # unmatched rows keep [], not null
+        targets = self._common_targets()
+        if matched is None:
+            out = self._common_options(out)
+        elif targets:
+            out = gated_merge(
+                out, matched, self._common_options, targets, self.id)
+        return out.drop("__matched") if "__matched" in out.columns else out
 
 
 def build_stage(spec: dict | tuple[str, dict]) -> Stage:

@@ -381,3 +381,23 @@ def test_refine_ivf_centroids_null_embedding_row(spark):
     assert out.shape == (2, 2)
     # both centroids refined from real rows — neither equals the other
     assert not np.allclose(out[0], out[1])
+
+
+def test_index_rebuild_replaces_every_partition(spark, sf_dir, tmp_path):
+    """Rebuilding an ANN or IVF index over a smaller corpus at the same
+    path must leave only the new corpus: the rebuild's overwrite replaces
+    the whole index, including partitions the new build does not write
+    (under a session-wide dynamic partition overwrite they survived)."""
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    small = emb.limit(3).withColumn("vec_id", F.col("vec_id") + 10_000_000)
+    new_ids = sorted(r.vec_id for r in small.select("vec_id").collect())
+    for name, build in (
+        ("ann", lambda df, p: similarity.write_ann_index(df, p, n_planes=8, dim=64)),
+        ("ivf", lambda df, p: similarity.write_ivf_index(df, p, n_centroids=2,
+                                                         kmeans_iters=1)),
+    ):
+        path = str(tmp_path / name)
+        build(emb, path)
+        build(small, path)
+        got = sorted(r.vec_id for r in spark.read.parquet(path).select("vec_id").collect())
+        assert got == new_ids, name
