@@ -68,11 +68,12 @@ def is_index(seg: str) -> bool:
     return bool(_INDEX_RE.fullmatch(seg))
 
 
-def _quoted_top(name: str) -> Column:
-    """Top-level column ref, backtick-quoted when the NAME itself
-    contains dots/backticks (k8s labels, ECS dotted names — the
-    reason de_dot exists): bare ``F.col('host.name')`` would resolve
-    as a nested path and fail."""
+def top_col(name: str) -> Column:
+    """Top-level column by its literal name, backtick-quoted when the
+    NAME itself contains dots/backticks (k8s labels, ECS dotted names —
+    the reason de_dot exists): bare ``F.col('host.name')`` would resolve
+    as a nested path and fail. Every select/struct over whole-frame
+    column lists goes through this."""
     if "." in name or "`" in name:
         return F.col("`" + name.replace("`", "``") + "`")
     return F.col(name)
@@ -85,7 +86,7 @@ def field_col(ref: str) -> Column:
         # the canonical metadata column is a MAP: every key — including
         # an all-digit one — is a string KEY lookup, never a list index
         return F.col(METADATA_FIELD).getItem(parts[1])
-    col = _quoted_top(parts[0])
+    col = top_col(parts[0])
     for p in parts[1:]:
         if _INDEX_RE.fullmatch(p):
             # numeric path element = 0-based list index (FieldReference

@@ -12,8 +12,9 @@ Reference counterparts:
   group, which is also the checkpoint/ack unit (ackedqueue parity, see
   checkpoint.py).
 * conditionals around filters: IfVertex branches — a stage with a
-  ``when`` key applies to matching rows only (``gated_merge``, or
-  filter → stage → union for stages that change row shape).
+  ``when`` key applies to matching rows only: a row-local stage
+  through ``gated_merge``, which gates every column, any other stage
+  (``Stage.row_local`` False) through filter → stage → union.
 
 Spec shape::
 
@@ -69,15 +70,15 @@ class Pipeline:
         common subtree across the two branches of a filter/union, so the
         naive ``filter(cond) → stage → union filter(~cond)`` executes
         everything upstream twice per conditional (round-1 finding).
-        Row-preserving stages with a statically known write-set instead
-        lower to one ``stages.base.gated_merge`` on the single DataFrame
-        — the stage runs over all rows, its outputs gated per row by the
+        Row-local stages (``Stage.row_local``) instead lower to one
+        ``stages.base.gated_merge`` on the single DataFrame — the stage
+        runs over all rows and every column is gated per row by the
         condition (the reference's Dataset#compute memoization
         equivalent); the same gate applies a stage's success-gated
-        common options. Cardinality/shape-changing stages keep the branch
-        lowering but persist the upstream first so it executes once;
-        those persists are released by ``release_branch_caches()``
-        (pipeline.run calls it after each batch).
+        common options. Any other stage keeps the branch lowering but
+        persists the upstream first so it executes once; those persists
+        are released by ``release_branch_caches()`` (pipeline.run calls
+        it after each batch).
         """
         df = ensure_tags(df)
         # a second compile() on the same Pipeline must not orphan the
@@ -89,9 +90,8 @@ class Pipeline:
                 df = stage.apply(df)
                 continue
             cond = compile_condition(when, df)
-            targets = stage.conditional_targets(df)
-            if targets is not None:
-                df = _conditional_merge(df, stage, cond, targets)
+            if stage.row_local:
+                df = gated_merge(df, cond, stage.apply, stage.id)
             else:
                 df = df.persist(StorageLevel.MEMORY_AND_DISK)
                 self._branch_caches.append(df)
@@ -271,13 +271,6 @@ def with_bucket(df: DataFrame, bucket_on: str, n_buckets: int) -> DataFrame:
     path sink and the unit a batch run groups and acks."""
     return df.withColumn(
         BUCKET_COL, F.pmod(F.xxhash64(F.col(bucket_on)), F.lit(n_buckets)))
-
-
-def _conditional_merge(df: DataFrame, stage, cond, targets: list[str]) -> DataFrame:
-    """Lower ``if cond { stage }`` into one ``gated_merge`` on one
-    DataFrame: the stage runs over all rows, its targets are kept only
-    on the rows ``cond`` matches."""
-    return gated_merge(df, cond, stage.apply, targets, stage.id)
 
 
 def _failure_census(

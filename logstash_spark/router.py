@@ -29,7 +29,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .conditions import compile_condition
-from .fieldref import METADATA_FIELD, TAGS_FIELD
+from .fieldref import METADATA_FIELD, TAGS_FIELD, top_col
 
 # default DLQ predicate: any parse/enrich failure tag present
 DLQ_DEFAULT_CONDITION = "failure_tags_present"
@@ -104,7 +104,7 @@ def dlq_projection(df: DataFrame) -> DataFrame:
         # zero failure tags — element_at on an empty array throws under ANSI
         F.get(fail_tags, 0).alias("error_stage"),
         F.array_join(fail_tags, ",").alias("error_reason"),
-        F.struct(*payload).alias("original"),
+        F.struct(*map(top_col, payload)).alias("original"),
         ts.alias("failed_ts"),
         *([F.col("bucket")] if "bucket" in cols else []),
     )
@@ -127,7 +127,7 @@ def kafka_sink_frame(branch: DataFrame, sink: SinkSpec) -> tuple[DataFrame, dict
         raise ValueError(f"kafka sink {sink.name!r} requires topic")
     key_field = opts.pop("message_key", None)
     payload = [c for c in branch.columns if c not in (METADATA_FIELD, "bucket")]
-    cols = [F.to_json(F.struct(*payload)).alias("value")]
+    cols = [F.to_json(F.struct(*map(top_col, payload))).alias("value")]
     if key_field:
         # logstash-output-kafka message_key is a SPRINTF template
         # ('%{request_id}') or a field reference ('[user][id]') — a raw
@@ -150,7 +150,7 @@ def _csv_safe(df: DataFrame) -> DataFrame:
     (the same flattening logstash-output-csv users do by hand)."""
     cols = []
     for name, dtype in df.dtypes:
-        c = F.col(name)
+        c = top_col(name)
         if dtype.startswith("array<string>"):
             cols.append(F.array_join(c, ",").alias(name))
         elif dtype.startswith(("array", "map", "struct")):
@@ -209,7 +209,7 @@ def _write_catalog_table(branch: DataFrame, sink: SinkSpec, mode: str) -> None:
         if mode == "overwrite":
             spark.sql(f"ALTER TABLE {sink.table} SET SERDEPROPERTIES "
                       "('partitionOverwriteMode'='dynamic')")
-        aligned = branch.select(*spark.table(sink.table).columns)
+        aligned = branch.select(*map(top_col, spark.table(sink.table).columns))
         aligned.write.insertInto(sink.table, overwrite=(mode == "overwrite"))
 
 
@@ -302,7 +302,7 @@ class Router:
             keep = [c for c in sink.select if c in branch.columns]
             if "bucket" in branch.columns and "bucket" not in keep:
                 keep.append("bucket")
-            branch = branch.select(*keep)
+            branch = branch.select(*map(top_col, keep))
         if sink.fmt == "csv":
             branch = _csv_safe(branch)
         return branch

@@ -24,11 +24,11 @@ from typing import Callable
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    ArrayType, MapType, NullType, StructField, StructType,
+    ArrayType, MapType, NullType, NumericType, StructField, StructType,
 )
 
 from ..fieldref import (
-    TAGS_FIELD, field_col, field_name, is_index, sprintf_col,
+    TAGS_FIELD, field_col, field_name, is_index, sprintf_col, top_col,
 )
 
 STAGE_REGISTRY: dict[str, type["Stage"]] = {}
@@ -278,11 +278,13 @@ _COMPLEX = (StructType, ArrayType, MapType)
 def _union_struct(old_t, new_t):
     """Recursive field union of two struct types: new_t's fields first
     (keeping NEW types on name overlap; nested structs union
-    recursively), then old-only fields appended. Non-struct pairs →
-    new_t. Lets a gated write keep values its schema change would
-    otherwise drop for unmatched rows (nested remove_field)."""
+    recursively), then old-only fields appended. Lets a gated write
+    keep values its schema change would otherwise drop for unmatched
+    rows (nested remove_field). Other pairs → new_t: the type the stage
+    wrote wins, so its output type does not depend on the condition;
+    a void (all-null) write takes old_t."""
     if not (isinstance(old_t, StructType) and isinstance(new_t, StructType)):
-        return new_t
+        return old_t if isinstance(new_t, NullType) else new_t
     old_by = {f.name: f for f in old_t.fields}
     new_names = {f.name for f in new_t.fields}
     fields = [
@@ -339,67 +341,85 @@ def _align_to(col: Column, old_t, new_t, who: str = "", ref: str = "") -> Column
     return col.try_cast(new_t)
 
 
+def _attributes(d: DataFrame) -> dict[str, str]:
+    """Column name → its analyzed attribute (``name#exprId`` plus type
+    suffix). Two frames whose column renders the same hold the same
+    Catalyst attribute, so the same value on every row they share."""
+    out = d._jdf.queryExecution().analyzed().output().mkString("\x00")
+    return dict(zip(d.columns, out.split("\x00")))
+
+
 def gated_merge(
     df: DataFrame, cond: Column, write: Callable[[DataFrame], DataFrame],
-    targets: list[str], who: str,
+    who: str,
 ) -> DataFrame:
     """Apply ``write`` to the rows where ``cond`` holds and leave every
     other row as it was — the one lowering of an LSCL ``if`` around a
     stage AND of a stage's success-gated common options.
 
     1. pin the condition (evaluated against the INPUT columns);
-    2. back up every target column that already exists;
+    2. back up every input column, under positional names (a column
+       may be literally named ``a.b``);
     3. run ``write`` over ALL rows (one subtree execution);
-    4. per target: matched rows take the written value, others keep the
-       backup (or null for brand-new columns). A target ``write``
-       dropped is rebuilt from the backup: null for matched rows, the
-       original value for the rest. A target ``write`` retyped is
-       aligned: struct fields it dropped are kept (null on matched
-       rows), and a cross-category retype is refused.
+    4. per column ``write`` added, dropped or replaced: matched rows
+       take the written value, others keep the backup. An added column
+       is null on the other rows; a dropped one is rebuilt from the
+       backup (null for matched rows). A retyped column takes the type
+       ``write`` gave it and the backup is aligned to it: struct fields
+       ``write`` dropped are kept (null on matched rows), other scalars
+       ``try_cast`` (dirty → null), numbers widen as a branch union
+       would, and a cross-category retype is refused.
 
-    Gates nest (a ``when``-wrapped grok with add_tag), so each call
-    pins and backs up under its own column names."""
+    A column ``write`` passed through (the same analyzed attribute in
+    its output as in its input) is not merged: its backup goes unused
+    and column pruning removes it, so only the columns ``write``
+    touches carry a backup through the stage's plan (a join, a Python
+    UDF's row buffer). Gates nest (a ``when``-wrapped grok with
+    add_tag), so each call pins and backs up under its own names."""
     n = next(_GATE_IDS)
-    pin = F.col(f"__gate{n}")
-    pre = df.withColumn(f"__gate{n}", F.coalesce(cond, F.lit(False)))
-    backups = {c: f"__orig{n}_{c}" for c in targets if c in df.columns}
-    pre = pre.withColumns({b: F.col(c) for c, b in backups.items()})
-    out = write(pre)
-    # safety net: a write that under-declares its targets would
-    # silently apply its effects to non-matching rows — fail loudly
-    undeclared = [c for c in out.columns
-                  if c not in pre.columns and c not in targets]
-    if undeclared:
-        raise RuntimeError(
-            f"stage {who!r} wrote undeclared columns {undeclared} under a "
-            f"conditional; fix its _targets() declaration")
+    gate = f"__gate{n}"
+    pin = F.col(gate)
+    backups = {c: f"__orig{n}_{i}" for i, c in enumerate(df.columns)}
+    out = write(df.withColumns({
+        gate: F.coalesce(cond, F.lit(False)),
+        **{b: top_col(c) for c, b in backups.items()}}))
+    own = {gate, *backups.values()}
+    before, after = _attributes(df), _attributes(out)
     old_types = {f.name: f.dataType for f in df.schema.fields}
-    new_types = {f.name: f.dataType for f in out.schema.fields}
+    new_types = {f.name: f.dataType for f in out.schema.fields
+                 if f.name not in own}
     merged = {}
-    for c in targets:
-        if c not in backups:
-            if c in new_types:
-                merged[c] = F.when(pin, F.col(c))
+    for c in list(new_types) + [c for c in old_types if c not in new_types]:
+        if c not in old_types:
+            merged[c] = F.when(pin, top_col(c))
         elif c not in new_types:
             merged[c] = F.when(~pin, F.col(backups[c]))
-        else:
+        elif before[c] != after[c]:
             old_t, new_t = old_types[c], new_types[c]
-            new, kept = F.col(c), F.col(backups[c])
-            if old_t != new_t and (isinstance(old_t, _COMPLEX)
-                                   or isinstance(new_t, _COMPLEX)):
+            new, kept = top_col(c), F.col(backups[c])
+            if old_t != new_t and not all(
+                    isinstance(t, NumericType) for t in (old_t, new_t)):
                 union_t = _union_struct(old_t, new_t)
                 new = _align_to(new, new_t, union_t)
                 kept = _align_to(kept, old_t, union_t, who, f"[{c}]")
-            # scalar mismatches (convert double→long) are left to
-            # Spark's own CASE coercion, as a branch union would be
             merged[c] = F.when(pin, new).otherwise(kept)
-    return out.withColumns(merged).drop(f"__gate{n}", *backups.values())
+    return out.withColumns(merged).drop(*own)
 
 
 class Stage:
-    """Base class. Subclasses implement ``transform``."""
+    """Base class. Subclasses implement ``transform``.
+
+    ``row_local``: under an LSCL ``if``, ``Pipeline.compile`` runs a
+    row-local stage over every row once and keeps its writes only on
+    the matching rows (``gated_merge``, which gates every column, so a
+    stage declares nothing about what it writes). A stage sets it to
+    False when it changes the row set, reads other rows, has a per-row
+    side effect, or touches columns it does not name (the gate's own
+    columns ride through it); such a stage runs on the matching rows
+    only, through filter → stage → union over a persisted input."""
 
     plugin_name = "stage"
+    row_local = True
     # tags a failed event gets when ``tag_on_failure`` is not configured
     FAILURE_TAGS: tuple[str, ...] = ()
 
@@ -437,37 +457,6 @@ class Stage:
     def transform(self, df: DataFrame) -> tuple[DataFrame, Column | None]:
         raise NotImplementedError
 
-    def _targets(self, df: DataFrame) -> list[str] | None:
-        """Columns this stage writes (new or overwritten), or None when
-        not statically expressible — None forces the conditional
-        compiler onto the persist+filter/union fallback. Stages whose
-        output depends on OTHER rows (windows, groupBys, explodes) MUST
-        return None: merging a full-df computation into a conditional
-        would change their semantics, not just their cost."""
-        return None
-
-    def _common_targets(self) -> list[str]:
-        """Top-level columns the common options write (add_field/
-        remove_field land on their top column, add_tag/remove_tag on
-        ``tags``)."""
-        extra = [field_name(r) for r in self.add_field]
-        extra += [field_name(r) for r in self.remove_field]
-        if self.add_tag or self.remove_tag:
-            extra.append(TAGS_FIELD)
-        return list(dict.fromkeys(extra))
-
-    def conditional_targets(self, df: DataFrame) -> list[str] | None:
-        """Full write-set under an LSCL ``if`` wrapper: the stage's own
-        targets plus the common-option targets. Used by Pipeline.compile
-        to lower ``if cond { stage }`` into one ``gated_merge`` on the
-        SINGLE DataFrame — the reference's Dataset#compute memoization
-        equivalent (without it the upstream subtree executes once per
-        conditional branch)."""
-        own = self._targets(df)
-        if own is None:
-            return None
-        return list(dict.fromkeys(list(own) + self._common_targets()))
-
     # ---- common-option wrapper (filters/base.rb filter_matched) ------------
     def _common_options(self, df: DataFrame) -> DataFrame:
         """Apply add_field, add_tag, remove_field, remove_tag to EVERY
@@ -498,12 +487,10 @@ class Stage:
         out, matched = self.transform(df)
         if self.add_tag or self.remove_tag:
             out = ensure_tags(out)  # unmatched rows keep [], not null
-        targets = self._common_targets()
         if matched is None:
             out = self._common_options(out)
-        elif targets:
-            out = gated_merge(
-                out, matched, self._common_options, targets, self.id)
+        elif self.add_field or self.add_tag or self.remove_field or self.remove_tag:
+            out = gated_merge(out, matched, self._common_options, self.id)
         return out.drop("__matched") if "__matched" in out.columns else out
 
 

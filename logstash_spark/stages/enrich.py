@@ -90,12 +90,6 @@ class TranslateStage(Stage):
     the field unset) and optionally tags ``tag_on_miss``.
     """
 
-    def _targets(self, df: DataFrame) -> list[str] | None:
-        out = [self.conf.get("target", "translation")]
-        if self.conf.get("tag_on_miss"):
-            out.append("tags")
-        return out
-
     def transform(self, df: DataFrame) -> tuple[DataFrame, Column]:
         source = self.conf["source"]
         target = self.conf.get("target", "translation")
@@ -177,9 +171,6 @@ class GeoipStage(Stage):
     FAILURE_TAGS = ("_geoip_lookup_failure",)
 
     AUTO_THRESHOLD = 2000
-
-    def _targets(self, df: DataFrame) -> list[str] | None:
-        return [self.conf.get("target", "geo"), "tags"]
 
     def transform(self, df: DataFrame) -> tuple[DataFrame, Column]:
         source = self.conf["source"]
@@ -289,9 +280,6 @@ class UseragentStage(Stage):
 
     NATIVE_THRESHOLD = 64
 
-    def _targets(self, df: DataFrame) -> list[str] | None:
-        return [self.conf.get("target", "ua")]
-
     def transform(self, df: DataFrame) -> tuple[DataFrame, Column]:
         source = self.conf["source"]
         target = self.conf.get("target", "ua")
@@ -356,9 +344,6 @@ class CidrStage(Stage):
     """logstash-filter-cidr: ip ∈ any of N CIDR networks → matched
     (tags/fields via common options). Networks resolve to [lo, hi] at
     plan time; the test is a native OR-chain of BETWEENs."""
-
-    def _targets(self, df: DataFrame) -> list[str] | None:
-        return []  # writes only __matched (dropped); common options do the rest
 
     def transform(self, df: DataFrame) -> tuple[DataFrame, Column]:
         import ipaddress
@@ -433,13 +418,6 @@ class DnsStage(Stage):
     """
 
     MAP_LITERAL_MAX = 10_000  # above this, dict snapshots become a broadcast join
-
-    def _targets(self, df: DataFrame) -> list[str] | None:
-        out = [field_name(f) for f in
-               list(self.conf.get("resolve", [])) + list(self.conf.get("reverse", []))]
-        if self.conf.get("tag_on_miss"):
-            out.append("tags")
-        return out
 
     def _snapshot(self) -> dict[str, str] | None:
         if "hosts" in self.conf:
@@ -562,9 +540,6 @@ class TldStage(Stage):
     ordered by label count, all JVM-side). Adds ``domain`` and ``tld``.
     """
 
-    def _targets(self, df: DataFrame) -> list[str] | None:
-        return ["domain", "tld"]
-
     def transform(self, df: DataFrame) -> tuple[DataFrame, Column]:
         source = self.conf.get("source", "url")
         suffixes: list[str] = self.conf["suffixes"]
@@ -628,12 +603,6 @@ class JdbcStreamingStage(Stage):
     conjuncts (LIKE, expressions, nested SELECT, GROUP BY…) keep the
     loud error — that shape is genuinely unbounded; use jdbc_static.
     """
-
-    def _targets(self, df: DataFrame) -> list[str] | None:
-        out = [self.conf.get("target", "jdbc_result")]
-        if self.conf.get("default_hash") is not None:
-            out.append("tags")
-        return out
 
     def transform(self, df: DataFrame) -> tuple[DataFrame, Column]:
         import re as _re
@@ -1079,9 +1048,6 @@ class ElasticsearchStage(Stage):
 
     FAILURE_TAGS = ("_elasticsearch_lookup_failure",)
 
-    def _targets(self, df: DataFrame) -> list[str] | None:
-        return [field_name(t) for t in self.conf.get("fields", {}).values()] + ["tags"]
-
     def transform(self, df: DataFrame) -> tuple[DataFrame, Column]:
         index_df: DataFrame = self.conf["index_df"]
         match: dict[str, str] = self.conf["match"]
@@ -1206,12 +1172,6 @@ class MemcachedStage(Stage):
 
     MAP_LITERAL_MAX = 10_000
 
-    def _targets(self, df: DataFrame) -> list[str] | None:
-        out = [field_name(t) for t in self.conf.get("get", {}).values()]
-        if self.conf.get("tag_on_miss") or self.conf.get("tag_on_success"):
-            out.append("tags")
-        return out
-
     def transform(self, df: DataFrame) -> tuple[DataFrame, Column]:
         from ..fieldref import sprintf_col
 
@@ -1323,17 +1283,13 @@ class HttpStage(Stage):
     precedent; route events to a sink instead).
     """
 
+    # gated, the distinct fetch set would hold the URLs of rows the
+    # config excluded: requests to an external endpoint for them
+    row_local = False
+
     TAG = "_httprequestfailure"
     DIM_SCHEMA = ("__http_url string, __http_status int, "
                   "__http_body string, __http_headers map<string,string>")
-
-    def _targets(self, df: DataFrame) -> list[str] | None:
-        # None → conditional filter/union fallback: a single-subtree
-        # merge would put NON-matching rows' URLs into the distinct
-        # fetch set — requests to an external endpoint for events the
-        # config excluded (a side effect, unlike the pure lookups that
-        # opt into the merge)
-        return None
 
     def transform(self, df: DataFrame) -> tuple[DataFrame, Column]:
         from ..fieldref import sprintf_col
@@ -1495,12 +1451,6 @@ class WurflStage(Stage):
     output schema is fixed at plan time by the ``capabilities`` list
     (struct<device_id, cap…> — all strings, the WURFL wire convention).
     """
-
-    def _targets(self, df: DataFrame) -> list[str] | None:
-        out = [field_name(self.conf.get("target", "wurfl"))]
-        if self.conf.get("tag_on_miss"):
-            out.append("tags")
-        return out
 
     @staticmethod
     def _resolve(devs: dict[str, tuple[str | None, dict]],

@@ -21,6 +21,8 @@ class DropStage(Stage):
     (``deterministic_on``) instead of rand() so reruns/resumes drop the
     SAME rows — required for the checkpoint/resume equality test."""
 
+    row_local = False  # removes rows
+
     def transform(self, df: DataFrame) -> tuple[DataFrame, Column | None]:
         pct = float(self.conf.get("percentage", 100))
         cond = self.conf.get("when")
@@ -49,6 +51,8 @@ class CloneStage(Stage):
     """logstash-filter-clone: original + one copy per clone name, copy's
     ``type`` set to the name. One explode — no self-union scans."""
 
+    row_local = False  # adds rows
+
     def transform(self, df: DataFrame) -> tuple[DataFrame, Column | None]:
         clones: list[str] = self.conf["clones"]
         variants = F.array(F.lit(None).cast("string"), *[F.lit(c) for c in clones])
@@ -64,6 +68,8 @@ class CloneStage(Stage):
 class SplitStage(Stage):
     """logstash-filter-split: one event per array element (or per
     terminator-separated string chunk) — exactly ``F.explode``."""
+
+    row_local = False  # adds rows
 
     def transform(self, df: DataFrame) -> tuple[DataFrame, Column | None]:
         ref = self.conf["field"]
@@ -90,6 +96,8 @@ class ThrottleStage(Stage):
     window(ts, period))`` and matched ⇢ rn > after_count. The common
     options then apply the throttle tag. One shuffle on (key, window).
     """
+
+    row_local = False  # counts other rows of its key
 
     def transform(self, df: DataFrame) -> tuple[DataFrame, Column]:
         key = self.conf["key"]
@@ -122,6 +130,8 @@ class AggregateStage(Stage):
     end-of-micro-batch); the streaming path with real per-key
     ProcessingTimeTimeout lives in streaming.aggregate_stream.
     """
+
+    row_local = False  # reduces rows across events
 
     def transform(self, df: DataFrame) -> tuple[DataFrame, Column | None]:
         task_id = self.conf["task_id"]
@@ -161,6 +171,8 @@ class MultilineStage(Stage):
     consecutive lines is a flush boundary — the batch re-expression of
     the reference's wall-clock flush timer.
     """
+
+    row_local = False  # merges rows
 
     def transform(self, df: DataFrame) -> tuple[DataFrame, Column | None]:
         pattern = self.conf["pattern"]
@@ -238,6 +250,8 @@ class MetricsStage(Stage):
     timestamp_field.
     """
 
+    row_local = False  # replaces the rows with meter rows
+
     def transform(self, df: DataFrame) -> tuple[DataFrame, Column | None]:
         meter = self.conf["meter"]
         interval = int(self.conf.get("flush_interval", 5))
@@ -302,11 +316,8 @@ class SleepStage(Stage):
     audited no-op (records ``__slept`` 0) for dry planning.
     """
 
-    def _targets(self, df: DataFrame) -> list[str] | None:
-        # None → the conditional compiler's filter/union fallback: under
-        # `if [x] { sleep {} }` only the MATCHING rows may pay the pacing
-        # (a single-subtree merge would sleep for every row)
-        return None
+    # only the matching rows may pay the pacing; gated, every row would
+    row_local = False
 
     def transform(self, df: DataFrame) -> tuple[DataFrame, Column | None]:
         conf_time = self.conf.get("time", 0)

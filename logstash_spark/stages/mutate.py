@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 
 from ..fieldref import (
     _canonical, field_col, field_name, is_index, parse_ref, sprintf_col,
+    top_col,
 )
 from .base import (
     Stage, _drop_field_path, _struct_leaf_type, field_exists, register,
@@ -62,26 +63,6 @@ class MutateStage(Stage):
     Every op is a native Column expression; the whole stage is one
     projection — zero Python at runtime.
     """
-
-    def _targets(self, df: DataFrame) -> list[str] | None:
-        if "rename" in self.conf:
-            return None  # schema reshape → conditional falls back to branch
-        out: list[str] = []
-        for op in MUTATE_ORDER:
-            if op not in self.conf:
-                continue
-            arg = self.conf[op]
-            if op == "gsub":
-                out += [field_name(arg[i]) for i in range(0, len(arg), 3)]
-            elif op == "copy":
-                out += [field_name(v) for v in arg.values()]
-            elif op == "merge":
-                out += [field_name(k) for k in arg]
-            elif isinstance(arg, dict):
-                out += [field_name(k) for k in arg]
-            else:  # case/strip lists
-                out += [field_name(r) for r in arg]
-        return list(dict.fromkeys(out))
 
     def transform(self, df: DataFrame) -> tuple[DataFrame, Column | None]:
         for op in MUTATE_ORDER:
@@ -470,6 +451,8 @@ class PruneStage(Stage):
     residue pruned via ``map_filter``.
     """
 
+    row_local = False  # keeps columns by pattern, the gate's own among them
+
     def transform(self, df: DataFrame) -> tuple[DataFrame, Column | None]:
         import re
 
@@ -482,12 +465,14 @@ class PruneStage(Stage):
         if bl:
             pats = [re.compile(p) for p in bl]
             keep = [c for c in keep if not any(p.search(c) for p in pats)]
-        return df.select(*keep), None
+        return df.select(*map(top_col, keep)), None
 
 
 @register("de_dot")
 class DeDotStage(Stage):
     """logstash-filter-de_dot: '.' in column names → '_' (plan-time rename)."""
+
+    row_local = False  # renames every dotted name, inside the gate's backups too
 
     def transform(self, df: DataFrame) -> tuple[DataFrame, Column | None]:
         sep = self.conf.get("separator", "_")
@@ -502,9 +487,6 @@ class UrlDecodeStage(Stage):
     """logstash-filter-urldecode → native F.try_url_decode: a broken
     %-escape yields null, never an ANSI throw (urldecode.rb likewise
     never aborts — it tags the event and keeps flowing)."""
-
-    def _targets(self, df: DataFrame) -> list[str] | None:
-        return [field_name(self.conf.get("field", "message"))]
 
     def transform(self, df: DataFrame) -> tuple[DataFrame, Column | None]:
         ref = self.conf.get("field", "message")
@@ -524,10 +506,6 @@ class TruncateStage(Stage):
     UTF-8 either (truncate.rb cuts the Ruby string, which is
     codepoint-aware). All native: byte probing via hex/conv — no UDF.
     """
-
-    def _targets(self, df: DataFrame) -> list[str] | None:
-        fields = self.conf.get("fields", ["message"])
-        return [field_name(r) for r in ([fields] if isinstance(fields, str) else fields)]
 
     def transform(self, df: DataFrame) -> tuple[DataFrame, Column | None]:
         n = int(self.conf["length_bytes"])
@@ -579,10 +557,6 @@ _SYSLOG_SEVERITIES = [
 class SyslogPriStage(Stage):
     """logstash-filter-syslog_pri: <PRI> → facility/severity (arithmetic
     + small literal create_map lookups; all JVM-side)."""
-
-    def _targets(self, df: DataFrame) -> list[str] | None:
-        return ["syslog_facility_code", "syslog_severity_code",
-                "syslog_facility", "syslog_severity"]
 
     def transform(self, df: DataFrame) -> tuple[DataFrame, Column | None]:
         ref = self.conf.get("syslog_pri_field_name", "syslog_pri")
@@ -648,9 +622,6 @@ class FingerprintStage(Stage):
     All native hash/concat expressions — JVM codegen path.
     """
 
-    def _targets(self, df: DataFrame) -> list[str] | None:
-        return [self.conf.get("target", "fingerprint")]
-
     def transform(self, df: DataFrame) -> tuple[DataFrame, Column | None]:
         sources = self.conf.get("source", ["message"])
         if isinstance(sources, str):
@@ -709,11 +680,6 @@ class AnonymizeStage(Stage):
     expressions; nulls pass through untouched.
     """
 
-    def _targets(self, df: DataFrame) -> list[str] | None:
-        fields = self.conf.get("fields", [])
-        return [field_name(f)
-                for f in ([fields] if isinstance(fields, str) else fields)]
-
     def transform(self, df: DataFrame) -> tuple[DataFrame, Column | None]:
         fields = self.conf.get("fields")
         if not fields:
@@ -763,9 +729,6 @@ class UuidStage(Stage):
     """logstash-filter-uuid. Deterministic test mode: hash-derived UUID
     from a seed field (SURVEY §7 determinism note)."""
 
-    def _targets(self, df: DataFrame) -> list[str] | None:
-        return [self.conf.get("target", "uuid")]
-
     def transform(self, df: DataFrame) -> tuple[DataFrame, Column | None]:
         target = self.conf.get("target", "uuid")
         seed_field = self.conf.get("deterministic_from")
@@ -791,9 +754,6 @@ class ExtractNumbersStage(Stage):
 
     _NUM_RE = r"[+-]?\d+(?:\.\d+)?"
 
-    def _targets(self, df: DataFrame) -> list[str] | None:
-        return [self.conf.get("target", "extracted_numbers")]
-
     def transform(self, df: DataFrame) -> tuple[DataFrame, Column | None]:
         source = self.conf.get("source", "message")
         target = self.conf.get("target", "extracted_numbers")
@@ -815,10 +775,9 @@ class RangeStage(Stage):
     ("tag" default — common options fire on match; "drop" removes
     matching rows)."""
 
-    def _targets(self, df: DataFrame) -> list[str] | None:
-        if self.conf.get("action", "tag") == "drop":
-            return None  # cardinality-changing
-        return []
+    @property
+    def row_local(self) -> bool:
+        return self.conf.get("action", "tag") != "drop"  # drop removes rows
 
     def transform(self, df: DataFrame) -> tuple[DataFrame, Column | None]:
         ranges: list = self.conf["ranges"]
@@ -843,9 +802,6 @@ class EnvironmentStage(Stage):
     reads the env once at filter init too). conf:
     add_field_from_env = {field: ENV_VAR_NAME}."""
 
-    def _targets(self, df: DataFrame) -> list[str] | None:
-        return [field_name(r) for r in self.conf.get("add_field_from_env", {})]
-
     def transform(self, df: DataFrame) -> tuple[DataFrame, Column | None]:
         import os
 
@@ -864,11 +820,6 @@ class RubyStage(Stage):
     ``code`` = callable, ``source`` field, ``target`` field,
     ``returns`` = DDL type of the result (default string).
     """
-
-    def _targets(self, df: DataFrame) -> list[str] | None:
-        source = self.conf.get("source", "message")
-        sources = [source] if isinstance(source, str) else list(source)
-        return [self.conf.get("target", field_name(sources[0]))]
 
     def transform(self, df: DataFrame) -> tuple[DataFrame, Column | None]:
         fn = self.conf["code"]
@@ -924,9 +875,6 @@ class I18nStage(Stage):
     decomposition (e.g. CJK) are removed, matching the reference's
     best-effort contract. Rows that change are the matched set.
     """
-
-    def _targets(self, df: DataFrame) -> list[str] | None:
-        return [field_name(f) for f in self.conf.get("transliterate", [])]
 
     def transform(self, df: DataFrame) -> tuple[DataFrame, Column]:
         from pyspark.sql.functions import pandas_udf

@@ -68,21 +68,6 @@ class GrokStage(Stage):
 
     FAILURE_TAGS = (GROK_FAILURE_TAG,)
 
-    def _targets(self, df: DataFrame) -> list[str] | None:
-        from ..grok import compile_grok
-
-        if self.conf.get("target"):
-            return [self.conf["target"], "tags"]
-        match: dict = self.conf["match"]
-        (_, patterns), *_rest = match.items()
-        if isinstance(patterns, str):
-            patterns = [patterns]
-        defs = self.conf.get("pattern_definitions")
-        fields: list[str] = []
-        for p in patterns:
-            fields += list(compile_grok(p, defs).fields)
-        return list(dict.fromkeys(fields)) + ["tags"]
-
     def transform(self, df: DataFrame) -> tuple[DataFrame, Column]:
         match: dict = self.conf["match"]
         (source, patterns), *rest = match.items()
@@ -145,12 +130,6 @@ class DissectStage(Stage):
 
     FAILURE_TAGS = (DISSECT_FAILURE_TAG,)
 
-    def _targets(self, df: DataFrame) -> list[str] | None:
-        if self.conf.get("target"):
-            return [self.conf["target"], "tags"]
-        (_, spec), *_rest = self.conf["mapping"].items()
-        return list(compile_dissect(spec).fields) + ["tags"]
-
     def transform(self, df: DataFrame) -> tuple[DataFrame, Column]:
         mapping: dict = self.conf["mapping"]
         (source, spec), *rest = mapping.items()
@@ -186,9 +165,6 @@ class KvStage(Stage):
     documented deviation). Fully native: ``str_to_map`` +
     ``map_filter``/``transform_keys``.
     """
-
-    def _targets(self, df: DataFrame) -> list[str] | None:
-        return [self.conf.get("target", "attrs")]
 
     def transform(self, df: DataFrame) -> tuple[DataFrame, Column]:
         source = self.conf.get("source", "message")
@@ -243,13 +219,6 @@ class JsonStage(Stage):
 
     FAILURE_TAGS = ("_jsonparsefailure",)
 
-    def _targets(self, df: DataFrame) -> list[str] | None:
-        if self.conf.get("schema"):
-            tgt = self.conf.get("target") or field_name(self.conf.get("source", "message")) + "_parsed"
-        else:
-            tgt = self.conf.get("target") or "attrs"
-        return [tgt, "tags"]
-
     def transform(self, df: DataFrame) -> tuple[DataFrame, Column]:
         source = self.conf.get("source", "message")
         schema = self.conf.get("schema")
@@ -282,16 +251,10 @@ class CsvStage(Stage):
 
     FAILURE_TAGS = ("_csvparsefailure",)
 
-    def _targets(self, df: DataFrame) -> list[str] | None:
-        if self.conf.get("autodetect_column_names"):
-            return None  # column set depends on the data → branch fallback
-        if self.conf.get("target"):
-            return [self.conf["target"], "tags"]
-        if "schema" in self.conf:
-            flds = [f.strip().split()[0].strip("`") for f in self.conf["schema"].split(",")]
-        else:
-            flds = list(self.conf["columns"])
-        return flds + ["tags"]
+    @property
+    def row_local(self) -> bool:
+        # autodetect_column_names names the columns from the first row
+        return not self.conf.get("autodetect_column_names")
 
     def transform(self, df: DataFrame) -> tuple[DataFrame, Column]:
         source = self.conf.get("source", "message")
@@ -361,9 +324,6 @@ class XmlStage(Stage):
 
     FAILURE_TAGS = ("_xmlparsefailure",)
 
-    def _targets(self, df: DataFrame) -> list[str] | None:
-        return [self.conf.get("target", "xml"), "tags"]
-
     def transform(self, df: DataFrame) -> tuple[DataFrame, Column]:
         source = self.conf.get("source", "message")
         target = self.conf.get("target", "xml")
@@ -410,9 +370,6 @@ class DateStage(Stage):
     """
 
     FAILURE_TAGS = ("_dateparsefailure",)
-
-    def _targets(self, df: DataFrame) -> list[str] | None:
-        return [self.conf.get("target", "event_ts"), "tags"]
 
     def transform(self, df: DataFrame) -> tuple[DataFrame, Column]:
         match = self.conf["match"]
@@ -468,9 +425,6 @@ class CefStage(Stage):
     """
 
     TAG = "_cefparsefailure"
-
-    def _targets(self, df: DataFrame) -> list[str] | None:
-        return [self.conf.get("target", "cef"), "tags"]
 
     def transform(self, df: DataFrame) -> tuple[DataFrame, Column]:
         source = self.conf.get("source", "message")

@@ -29,11 +29,6 @@ class ExtractTextStage(Stage):
     this path (BASELINE.md "Round-5 extractor study").
     """
 
-    def _targets(self, df: DataFrame) -> list[str] | None:
-        if self.conf.get("drop_source", False):
-            return None  # drops a column → schema reshape
-        return [self.conf.get("target", "text")]
-
     def transform(self, df: DataFrame) -> tuple[DataFrame, Column]:
         source = self.conf.get("source", "html")
         target = self.conf.get("target", "text")
@@ -51,9 +46,6 @@ class ParseUrlStage(Stage):
     try_ variant: a malformed url yields nulls (→ failure routing),
     never an ANSI throw.
     """
-
-    def _targets(self, df: DataFrame) -> list[str] | None:
-        return ["domain", "path"]
 
     def transform(self, df: DataFrame) -> tuple[DataFrame, Column]:
         source = self.conf.get("source", "url")
@@ -84,9 +76,6 @@ class SynthIpStage(Stage):
             F.pmod(F.shiftright(h_col, 16), F.lit(256)).cast("string"),
             (F.pmod(F.shiftright(h_col, 24), F.lit(254)) + 1).cast("string"),
         )
-
-    def _targets(self, df: DataFrame) -> list[str] | None:
-        return [self.conf.get("target", "ip")]
 
     def transform(self, df: DataFrame) -> tuple[DataFrame, Column]:
         source = self.conf.get("source", "url")

@@ -44,9 +44,67 @@ def test_nested_gate_when_wrapped_grok_common_options(spark):
     assert rows[3]["dur"] is None
 
 
+def test_gated_scalar_retype_keeps_the_written_type(spark):
+    """A gated write that retypes a scalar column keeps the type it
+    wrote, and the rows it leaves alone are cast to it: a string written
+    over a number makes a string column (the cast loses nothing), a
+    number written over a string keeps the number and try_casts the
+    kept side (dirty → null). CASE coercion picked the number in both
+    cases and, under ANSI, failed the run on the first non-numeric
+    string."""
+    df = spark.createDataFrame(
+        [(1, "en", "dur=5", 200, "12"), (2, "de", "nope", 404, "abc"),
+         (3, "de", "nope", 500, "9")],
+        "id int, lang string, message string, status int, code string")
+
+    def run(*filters):
+        out = Pipeline({"id": "t", "filters": list(filters)}).compile(df)
+        return {r["id"]: r.asDict() for r in out.collect()}, out
+
+    rows, out = run({"when": WHEN, "mutate": {"add_field": {"status": "ok"}}})
+    assert dict(out.dtypes)["status"] == "string"
+    assert (rows[1]["status"], rows[2]["status"]) == ("ok", "404")
+
+    rows, _ = run({"grok": {**GROK, "add_field": {"status": "ok"}}})
+    assert (rows[1]["status"], rows[2]["status"]) == ("ok", "404")
+
+    convert = {"when": WHEN, "mutate": {"convert": {"code": "integer"}}}
+    rows, out = run(convert)
+    assert dict(out.dtypes)["code"] == "bigint"
+    assert [rows[i]["code"] for i in (1, 2, 3)] == [12, None, 9]
+
+    # a later range compares the converted field by value, not length
+    rows, _ = run(convert, {"range": {
+        "ranges": [["code", 10, 100]], "add_tag": ["big"]}})
+    assert [rows[i]["tags"] for i in (1, 2, 3)] == [["big"], [], []]
+
+
+def test_gate_backs_up_only_touched_columns(spark):
+    """Columns a gated stage passes through are not merged, so no backup
+    of them survives optimization, even below a join or a Python UDF."""
+    df = spark.createDataFrame(
+        [(1, "en", "id=1 k=a", "x"), (2, "de", "id=2 k=b", "y")],
+        "id int, lang string, message string, pad string")
+    dim = spark.createDataFrame([("en", "english")], "k string, v string")
+    for spec in (
+        {"translate": {"source": "lang", "target": "lname",
+                       "dictionary_df": dim}},
+        {"grok": {"match": {"message": ["id=%{INT:gid} k=%{WORD:kk}",
+                                        "foo %{WORD:w}"]}}},
+        {"mutate": {"uppercase": ["message"]}},
+    ):
+        out = Pipeline({"id": "t", "filters": [{"when": WHEN, **spec}]}
+                       ).compile(df)
+        plan = out._jdf.queryExecution().optimizedPlan().toString()
+        assert "__orig" not in plan, spec
+        rows = {r["id"]: r for r in out.collect()}
+        assert rows[2]["pad"] == "y" and rows[2]["message"] == "id=2 k=b"
+
+
 # ---------------------------------------------------------------- property
-# Scalar leaves are strings: a string-vs-number union widens to a number
-# under ANSI, so both lowerings fail alike at run time on such a schema.
+# Scalar leaves are strings: the naive union widens a string-vs-number
+# pair to the number and fails at run time under ANSI, while the gate
+# keeps the written type (test_gated_scalar_retype_keeps_the_written_type).
 _leaf = st.sampled_from(["string", "string", "array<string>"])
 _level2 = st.one_of(_leaf, st.dictionaries(
     st.sampled_from("xyz"), _leaf, min_size=1, max_size=2))

@@ -190,18 +190,21 @@ def test_conditional_merge_equals_branch_semantics(spark):
     """Differential check over every merge-lowered stage family: the
     when/otherwise column-merge lowering must produce EXACTLY the rows
     the naive filter(cond) -> stage -> union filter(~cond) lowering
-    produces (order-insensitive). Catches any under-declared _targets."""
+    produces (order-insensitive). Catches a row-local stage whose write
+    reaches unmatched rows, including renames, dropped sources and a
+    column literally named ``a.b``."""
     from pyspark.sql import functions as F
 
     from logstash_spark.conditions import compile_condition
-    from logstash_spark.pipeline import _conditional_merge
-    from logstash_spark.stages.base import build_stage
+    from logstash_spark.stages.base import build_stage, gated_merge
 
     df = spark.createDataFrame(
         [(i, "en" if i % 2 else "de",
-          f"id={i} k=v{i}", f'{{"k": {i}}}', f"t{i},{i}", float(i))
+          f"id={i} k=v{i}", f'{{"k": {i}}}', f"t{i},{i}", float(i),
+          f"<p>hi {i}</p>".encode(), f"d{i}")
          for i in range(40)],
-        "id int, lang string, message string, jsonmsg string, csvmsg string, val double",
+        "id int, lang string, message string, jsonmsg string, csvmsg string, "
+        "val double, html binary, `a.b` string",
     )
     when = "[lang] == 'en'"
     specs = [
@@ -224,20 +227,47 @@ def test_conditional_merge_equals_branch_semantics(spark):
         {"mutate": {"add_field": {"note": "%{lang}!"}, "add_tag": ["seen"]}},
         {"mutate": {"remove_field": ["csvmsg"]}},
         {"urldecode": {"field": "message", "remove_field": ["jsonmsg"]}},
+        {"mutate": {"rename": {"message": "msg", "a.b": "ab"}}},
+        {"mutate": {"replace": {"a.b": "%{lang}"}}},
+        {"extract_text": {"source": "html", "drop_source": True}},
     ]
     for spec in specs:
         stage = build_stage(spec)
         cond = compile_condition(when, df)
-        targets = stage.conditional_targets(df)
-        assert targets is not None, spec
-        merged = _conditional_merge(df, stage, cond, targets)
+        assert stage.row_local, spec
+        merged = gated_merge(df, cond, stage.apply, stage.id)
         branch_stage = build_stage(spec)
         naive = branch_stage.apply(df.filter(cond)).unionByName(
             df.filter(~F.coalesce(cond, F.lit(False))), allowMissingColumns=True
         )
-        m_rows = sorted(map(str, merged.select(*sorted(merged.columns)).collect()))
-        n_rows = sorted(map(str, naive.select(*sorted(naive.columns)).collect()))
+        m_rows = sorted(map(str, merged.select(
+            *[F.col(f"`{c}`") for c in sorted(merged.columns)]).collect()))
+        n_rows = sorted(map(str, naive.select(
+            *[F.col(f"`{c}`") for c in sorted(naive.columns)]).collect()))
         assert m_rows == n_rows, f"divergence for {spec}"
+
+
+def test_row_local_stages_skip_the_branch_persist(spark):
+    """`if … { mutate { rename } }` is row-local: it lowers through the
+    gate with no persist of the upstream; `if … { split }` changes the
+    row set and still takes the persisted branch lowering."""
+    from logstash_spark.pipeline import Pipeline
+
+    df = spark.createDataFrame(
+        [(1, "en", "a b"), (2, "de", "c d")], "id int, lang string, message string"
+    )
+    pipe = Pipeline({"id": "t", "filters": [
+        {"when": "[lang] == 'en'", "mutate": {"rename": {"message": "msg"}}}]})
+    rows = {r.id: r for r in pipe.compile(df).collect()}
+    assert pipe._branch_caches == []
+    assert (rows[1].msg, rows[1].message) == ("a b", None)
+    assert (rows[2].msg, rows[2].message) == (None, "c d")
+
+    pipe = Pipeline({"id": "t", "filters": [
+        {"when": "[lang] == 'en'", "split": {"field": "message", "terminator": " "}}]})
+    pipe.compile(df)
+    assert len(pipe._branch_caches) == 1
+    pipe.release_branch_caches()
 
 
 def test_conditional_remove_field_merge(spark):

@@ -231,6 +231,47 @@ def test_kafka_sink_contract(spark):
     df.unpersist()
 
 
+def test_dotted_top_level_names_reach_every_sink(spark, tmp_path):
+    """A top-level column literally named ``x.y`` (ECS/k8s dotted names)
+    survives prune, the DLQ payload, a csv sink and a sink ``select``
+    instead of resolving as a nested path (UNRESOLVED_COLUMN); so does
+    the kafka value JSON."""
+    import json as _json
+
+    from logstash_spark.pipeline import Pipeline
+    from logstash_spark.router import SinkSpec, kafka_sink_frame
+
+    df = spark.createDataFrame(
+        [(1, "id=7", "v1", "j"), (2, "garbage", "v2", "j")],
+        "id int, message string, `x.y` string, junk string")
+    spec = {
+        "id": "dotted",
+        "filters": [
+            {"grok": {"match": {"message": "id=%{INT:gid}"}}},
+            {"prune": {"blacklist_names": ["^junk$"]}},
+        ],
+        "outputs": [
+            {"name": "sel", "select": ["id", "x.y"]},
+            {"name": "out_csv", "format": "csv"},
+            {"name": "dead_letter", "dlq": True},
+        ],
+    }
+    run_dir = str(tmp_path / "run")
+    metrics = Pipeline(spec).run(df, run_dir, bucket_on="id", n_buckets=2)
+    assert metrics.sinks == {"sel": 2, "out_csv": 2, "dead_letter": 1}
+    sel = spark.read.parquet(f"{run_dir}/sel")
+    assert "junk" not in sel.columns
+    assert {(r["id"], r["x.y"]) for r in sel.collect()} == {(1, "v1"), (2, "v2")}
+    csv_text = "".join(r.value for r in spark.read.text(f"{run_dir}/out_csv").collect())
+    assert "v1" in csv_text and "v2" in csv_text
+    (dead,) = spark.read.parquet(f"{run_dir}/dead_letter").collect()
+    assert dead.original["x.y"] == "v2"
+
+    frame, _ = kafka_sink_frame(df.filter("id = 1"), SinkSpec(
+        name="s", fmt="kafka", options={"kafka.bootstrap.servers": "k", "topic": "t"}))
+    assert _json.loads(frame.collect()[0].value)["x.y"] == "v1"
+
+
 def test_kafka_lscl_lowering():
     """kafka output {} in a logstash config lowers to a kafka SinkSpec."""
     from logstash_spark.lscl import to_pipeline_spec
