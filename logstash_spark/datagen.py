@@ -27,6 +27,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from .extract import extract_text
+from .session import local_frame
 
 SEED = 42
 N_DOMAINS = 1000
@@ -185,8 +186,8 @@ def gen_geo_ranges(spark: SparkSession, n: int = 500) -> DataFrame:
                 round(-180 + ((h >> 16) % 36000) / 100.0, 2),
             )
         )
-    return spark.createDataFrame(
-        rows, "ip_start_int long, ip_end_int long, country string, city string, lat double, lon double"
+    return local_frame(
+        spark, rows, "ip_start_int long, ip_end_int long, country string, city string, lat double, lon double"
     )
 
 
@@ -200,8 +201,8 @@ def gen_ua_rules(spark: SparkSession) -> DataFrame:
         (r"Firefox/", "Firefox", "Linux", "Other", 4),
         (r"Safari/", "Safari", "Mac OS X", "Other", 5),
     ]
-    return spark.createDataFrame(
-        rules, "pattern string, name string, os string, device string, priority int"
+    return local_frame(
+        spark, rules, "pattern string, name string, os string, device string, priority int"
     )
 
 
@@ -214,11 +215,11 @@ def gen_domain_dict(spark: SparkSession, n: int = N_DOMAINS) -> DataFrame:
         if h % 10 == 0:
             continue  # deliberate dictionary misses → fallback path
         rows.append((_domain_name(r), cats[h % len(cats)], round((h % 1000) / 1000.0, 3)))
-    return spark.createDataFrame(rows, "key string, category string, trust double")
+    return local_frame(spark, rows, "key string, category string, trust double")
 
 
 def gen_tld_suffixes(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame([(t,) for t in TLDS], "suffix string")
+    return local_frame(spark, [(t,) for t in TLDS], "suffix string")
 
 
 def gen_access_logs(spark: SparkSession, n: int, partitions: int | None = None) -> DataFrame:

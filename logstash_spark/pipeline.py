@@ -122,6 +122,11 @@ class Pipeline:
         thousands on a cluster); ``n_batches`` groups buckets into
         micro-batches — each is one checkpointed unit of work.
         """
+        check_bucket_count(n_buckets)
+        if not 1 <= n_batches <= n_buckets:
+            raise ValueError(
+                f"n_batches={n_batches} must be between 1 and "
+                f"n_buckets={n_buckets}: each batch is a group of buckets")
         manifest = CheckpointManifest(run_dir)
         if not resume:
             manifest.reset()
@@ -194,7 +199,8 @@ class Pipeline:
                 else bucketed
             )
             m = self._run_batch(
-                batch_src, run_dir, len(buckets), mode="overwrite",
+                batch_src, run_dir, len(buckets), n_batches,
+                mode="overwrite",
                 truncate_tables=(not resume) and batch_id == 0)
             manifest.ack(batch_id, {
                 "buckets": buckets,
@@ -213,11 +219,15 @@ class Pipeline:
 
     def _run_batch(
         self, batch_src: DataFrame, run_dir: str, n_buckets: int,
-        mode: str, truncate_tables: bool,
+        bucket_stride: int, mode: str, truncate_tables: bool,
     ) -> PipelineMetrics:
         """The micro-batch body both execution modes share: compile the
         bucketed input, shuffle it onto the bucket key, persist it, take
-        the failure census, fan out to the sinks, release the caches."""
+        the failure census, fan out to the sinks, release the caches.
+
+        The batch holds ``n_buckets`` buckets, ``bucket_stride`` apart
+        (a batch run's group i is every bucket ≡ i mod n_batches; a
+        stream micro-batch holds every bucket, stride 1)."""
         t0 = time.monotonic()
         # events.in is the PRE-compile ingress count (node-stats
         # semantics): a drop/split filter changes the post-compile
@@ -234,14 +244,22 @@ class Pipeline:
         # One shuffle on the bucket key before the multi-sink fan-out:
         # without it every task writes into every bucket directory of
         # every sink (tasks x buckets x sinks tiny files — measured to
-        # INVERT scaling at local[32]). With it each bucket is one
-        # task's output file per sink, and the persisted layout is
-        # co-located with the checkpoint/ack unit. The shuffle carries
-        # only post-parse columns (html is projected away by the
-        # extract stage before this point).
+        # INVERT scaling at local[32]). The bucket is the layout unit:
+        # it lands in exactly one partition, so each sink gets one file
+        # per bucket. The partition is the compute unit: one per core,
+        # the batch's i-th bucket in partition i mod P, so partitions
+        # differ by at most one bucket and each gets one. (Hashing the
+        # bucket values instead collides: 8 stream buckets filled 4 of
+        # 8 partitions, and every empty write task still pays its
+        # 30-60 ms of task set-up.) The shuffle carries only post-parse
+        # columns (html is projected away by the extract stage before
+        # this point).
+        n_parts = min(n_buckets,
+                      compiled.sparkSession.sparkContext.defaultParallelism)
         routed = (
             compiled
-            .repartition(n_buckets, F.col(BUCKET_COL))
+            .repartitionById(n_parts, F.expr(
+                f"CAST({BUCKET_COL} DIV {bucket_stride} AS INT)"))
             .persist(StorageLevel.MEMORY_AND_DISK)
         )
         stage_tags = {stage.id: stage.failure_tags
@@ -264,6 +282,11 @@ class Pipeline:
             "sinks": sink_counts,
             "failures": {sid: failure_counts.get(sid, 0) for sid in stage_tags},
         })
+
+
+def check_bucket_count(n_buckets: int) -> None:
+    if not (isinstance(n_buckets, int) and n_buckets >= 1):
+        raise ValueError(f"n_buckets={n_buckets!r} must be an integer >= 1")
 
 
 def with_bucket(df: DataFrame, bucket_on: str, n_buckets: int) -> DataFrame:

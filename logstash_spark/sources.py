@@ -15,6 +15,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .session import local_frame
+
 # codec → spark reader format for line-shaped sources
 _CODEC_FORMAT = {
     "plain": "text",
@@ -696,4 +698,4 @@ def _read_http_poller(spark: SparkSession, args: dict,
                          None))
         except Exception as e:  # one failed endpoint ≠ a failed tick
             rows.append((str(name), u, None, str(e)[:200], None, [tag]))
-    return spark.createDataFrame(rows, _POLLER_SCHEMA)
+    return local_frame(spark, rows, _POLLER_SCHEMA)

@@ -17,6 +17,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..fieldref import field_col, field_name
+from ..session import local_frame
 from .base import Stage, add_tags, register
 
 
@@ -448,8 +449,9 @@ class DnsStage(Stage):
         # is right for small dims but bloats analysis k× at tens of
         # thousands of entries
         if snap is not None and len(snap) > self.MAP_LITERAL_MAX:
-            hosts_df = df.sparkSession.createDataFrame(
-                list(snap.items()), "name string, address string"
+            hosts_df = local_frame(
+                df.sparkSession, list(snap.items()),
+                "name string, address string"
             )
             snap = None
 
@@ -730,7 +732,7 @@ class JdbcStreamingStage(Stage):
             ", ".join(f"__p_{p} string" for p in key_cols)
             + f", {target} array<struct<{struct_t}>>"
         )
-        dim = spark.createDataFrame(dim_rows, schema)
+        dim = local_frame(spark, dim_rows, schema)
         return self._join_dim(df, F.broadcast(dim), key_cols, parameters,
                               target, names, types)
 
@@ -1194,7 +1196,8 @@ class MemcachedStage(Stage):
                 "job is rejected by design (dns/translate precedent)"
             )
         if snap is not None and len(snap) > self.MAP_LITERAL_MAX:
-            snap_df = df.sparkSession.createDataFrame(
+            snap_df = local_frame(
+                df.sparkSession,
                 [(str(k), str(v)) for k, v in snap.items()],
                 "key string, value string",
             )
@@ -1321,7 +1324,8 @@ class HttpStage(Stage):
         spark = df.sparkSession
         df = df.withColumn("__http_url", url_col)
         if responses is not None:
-            dim = spark.createDataFrame(
+            dim = local_frame(
+                spark,
                 [(str(u), 200, str(b), {}) for u, b in responses.items()],
                 self.DIM_SCHEMA,
             )

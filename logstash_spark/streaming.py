@@ -25,13 +25,14 @@ Semantics notes (documented deviations, SURVEY §2.6):
 Bucket count: ``STREAM_BUCKETS`` (8), not batch mode's 32. In batch
 mode the bucket group is the checkpoint/ack unit; in a stream the
 recovery unit is Spark's offset and commit logs, so the bucket count
-only sets how many write tasks and files each micro-batch makes:
-files per micro-batch = buckets × sinks (at 32 buckets a 5-sink
+only sets the ``bucket=`` layout and how many files each micro-batch
+makes: files per micro-batch = buckets × sinks (at 32 buckets a 5-sink
 pipeline writes 160 parquet files of a few dozen rows, each with a
-~5 KB footer). Eight matches the shuffle-partition floor ``session.py``
-sets. It is a constant on purpose: a default read from the session
-conf would move the ``bucket=`` layout when a restart changes the conf.
-An explicit ``n_buckets`` is honoured.
+~5 KB footer). The write tasks are a separate count: one per core, up
+to one per bucket (``Pipeline._run_batch``). It is a constant on
+purpose: a default read from the session or the core count would move
+the ``bucket=`` layout when a restart changes either. An explicit
+``n_buckets`` is honoured.
 """
 
 from __future__ import annotations
@@ -42,7 +43,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .pipeline import Pipeline, with_bucket
+from .pipeline import Pipeline, check_bucket_count, with_bucket
 # the benchmark's traced run wraps this name (perfbench/layers.py)
 from .pipeline import _failure_census  # noqa: F401
 
@@ -75,12 +76,13 @@ def run_streaming(
     ``available_now=True`` drains what exists and stops (the batch-test
     and backfill mode); False runs continuously.
     """
+    check_bucket_count(n_buckets)
     os.makedirs(run_dir, exist_ok=True)
     metrics_path = f"{run_dir}/metrics_stream.jsonl"
 
     def handle_batch(batch_df: DataFrame, batch_id: int) -> None:
         m = pipe._run_batch(with_bucket(batch_df, bucket_on, n_buckets),
-                            run_dir, n_buckets, mode="append",
+                            run_dir, n_buckets, 1, mode="append",
                             truncate_tables=False)
         with open(metrics_path, "a") as f:
             f.write(json.dumps({"batch_id": batch_id, **m.to_manifest()}) + "\n")

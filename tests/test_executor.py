@@ -4,6 +4,7 @@ and one per-batch serializer (``PipelineMetrics.to_manifest``)."""
 from __future__ import annotations
 
 import json
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -124,3 +125,92 @@ def test_bucket_removal_is_rejected_in_both_modes(spark, tmp_path):
     with pytest.raises(Exception, match="removed the internal 'bucket'"):
         run_streaming(Pipeline(spec), stream, str(tmp_path / "s"),
                       n_buckets=2, timeout_sec=300)
+
+
+def _placement(spark, tmp_path, monkeypatch, run):
+    """(bucket, partition) pairs and partition count of each persisted
+    micro-batch ``run(src_dir)`` executes."""
+    import logstash_spark.pipeline as pipeline
+
+    seen = []
+    census = pipeline._failure_census
+
+    def recording_census(df, stage_tags):
+        pairs = df.select(F.col("bucket").cast("int"),
+                          F.spark_partition_id()).distinct().collect()
+        seen.append((sorted(tuple(p) for p in pairs),
+                     df.rdd.getNumPartitions()))
+        return census(df, stage_tags)
+
+    monkeypatch.setattr(pipeline, "_failure_census", recording_census)
+    src_dir = str(tmp_path / "src")
+    _rows(spark, 2000).coalesce(1).write.parquet(src_dir)
+    run(src_dir)
+    return seen
+
+
+def _assert_one_partition_per_bucket(spark, pairs, n_parts, buckets):
+    cores = spark.sparkContext.defaultParallelism
+    assert n_parts == min(len(buckets), cores)
+    by_bucket: dict[int, set[int]] = {}
+    for b, p in pairs:
+        by_bucket.setdefault(b, set()).add(p)
+    assert sorted(by_bucket) == sorted(buckets)
+    assert all(len(ps) == 1 for ps in by_bucket.values()), by_bucket
+    per_part: dict[int, int] = {}
+    for (p,) in by_bucket.values():
+        per_part[p] = per_part.get(p, 0) + 1
+    assert sorted(per_part) == list(range(n_parts))  # none empty
+    assert max(per_part.values()) - min(per_part.values()) <= 1, per_part
+
+
+def test_batch_buckets_sit_in_one_partition_each(spark, tmp_path, monkeypatch):
+    """A batch run's group of buckets is shuffled into one partition per
+    core: every bucket in exactly one partition, every partition used,
+    bucket counts within one of each other."""
+    seen = _placement(spark, tmp_path, monkeypatch, lambda src: Pipeline(
+        SPEC).run(spark.read.parquet(src), str(tmp_path / "b"),
+                  n_buckets=32, n_batches=2))
+    assert len(seen) == 2
+    for batch_id, (pairs, n_parts) in enumerate(seen):
+        _assert_one_partition_per_bucket(
+            spark, pairs, n_parts, range(batch_id, 32, 2))
+
+
+def test_stream_buckets_sit_in_one_partition_each(spark, tmp_path, monkeypatch):
+    seen = _placement(spark, tmp_path, monkeypatch, lambda src: run_streaming(
+        Pipeline(SPEC), stream_from_directory(spark, src, SCHEMA),
+        str(tmp_path / "s"), n_buckets=8, timeout_sec=300))
+    assert len(seen) == 1
+    pairs, n_parts = seen[0]
+    _assert_one_partition_per_bucket(spark, pairs, n_parts, range(8))
+
+
+@pytest.mark.parametrize("n_buckets,n_batches", [(2, 4), (4, 0), (0, 1), (-1, 1)])
+def test_bad_bucket_counts_fail_before_any_write(spark, tmp_path, n_buckets,
+                                                 n_batches):
+    """Bucket/batch counts are checked at plan time: a previous run's
+    sinks and manifest are left as they were, nothing new is acked."""
+    src = _rows(spark, 20)
+    run_dir = str(tmp_path / "run")
+
+    def files():
+        return sorted(os.path.relpath(os.path.join(d, f), run_dir)
+                      for d, _, fs in os.walk(run_dir) for f in fs)
+
+    Pipeline(SPEC).run(src, run_dir, n_buckets=2)
+    before = files()
+    with pytest.raises(ValueError, match="n_b"):
+        Pipeline(SPEC).run(src, run_dir, n_buckets=n_buckets,
+                           n_batches=n_batches)
+    assert files() == before
+    assert os.listdir(f"{run_dir}/_checkpoints") == ["batch-00000.json"]
+
+
+def test_stream_rejects_a_bad_bucket_count(spark, tmp_path):
+    src_dir = str(tmp_path / "src")
+    _rows(spark, 10).coalesce(1).write.parquet(src_dir)
+    with pytest.raises(ValueError, match="n_buckets=0"):
+        run_streaming(Pipeline(SPEC), stream_from_directory(
+            spark, src_dir, SCHEMA), str(tmp_path / "s"), n_buckets=0)
+    assert not os.path.exists(tmp_path / "s")
