@@ -9,10 +9,10 @@ append to a prior field (joined with the intervening delimiter),
 padding of the next delimiter.
 
 Spark mapping (SURVEY §2.4): the dissect spec compiles at plan time to
-a single anchored regex with non-greedy inter-delimiter groups — which
-Spark's native ``regexp_extract`` could evaluate per-field, but a
-struct-returning extraction reuses the same vectorized machinery as
-grok (one pass, all fields). Failure tag: ``_dissectfailure``.
+a single anchored ``re.DOTALL`` regex with non-greedy inter-delimiter
+groups, a ``CompiledGrok`` that the grok stage's native capture writer
+runs (``(?s)`` in its Java spelling, one ``regexp_extract`` per field
+group). Failure tag: ``_dissectfailure``.
 """
 
 from __future__ import annotations
@@ -27,7 +27,7 @@ _FIELD = re.compile(r"%\{([^}]*)\}")
 
 
 def compile_dissect(mapping: str) -> CompiledGrok:
-    """Dissect mapping → CompiledGrok (reuses the grok executor)."""
+    """Dissect mapping → CompiledGrok (runs on the grok capture writer)."""
     fields: dict[str, tuple[list[str], str]] = {}
     pattern_parts: list[str] = ["^"]
     counter = 0

@@ -1,4 +1,4 @@
-"""Grok: named-pattern regex extraction, compiled once, applied vectorized.
+"""Grok: named-pattern regex extraction, compiled once, run in the JVM.
 
 Reference counterparts:
 * filter — logstash-filter-grok:lib/logstash/filters/grok.rb
@@ -10,30 +10,25 @@ Reference counterparts:
   equivalent set; name coverage is audited per upstream pattern file in
   tests/test_grok_manifest.py). Oniguruma dialect status (SURVEY §7
   risk, resolved round 4): possessive quantifiers (``a++``) and atomic
-  groups (``(?>…)``) are natively supported by BOTH execution dialects
-  (Python ≥ 3.11 ``re``; java.util.regex); POSIX bracket classes
-  (``[[:alpha:]]``) translate at compile time
-  (``translate_posix_classes``); negated POSIX classes and named
-  Oniguruma callouts remain unsupported with loud errors.
+  groups (``(?>…)``) are native to both Python >= 3.11 ``re`` (which
+  compiles the pattern and numbers its groups) and java.util.regex
+  (which runs it); POSIX bracket classes (``[[:alpha:]]``) translate
+  at compile time (``translate_posix_classes``); negated POSIX classes
+  and named Oniguruma callouts remain unsupported with loud errors.
 
-Spark mapping (SURVEY §2.4): the grok expression compiles at plan time
-into ONE Python regex with named groups; execution is a vectorized
-``Series.str.extract`` over Arrow batches inside a pandas UDF that
-returns a struct of captures plus a ``_matched`` flag. Multiple
-patterns = first-match-wins: later patterns run only on rows the
-earlier ones missed. Single-pattern specs prefer the native
-``F.regexp_extract`` lowering (``lower_multi_capture``).
+Spark mapping (SURVEY §2.4): each grok expression compiles at plan
+time into ONE regex with numbered groups (``compile_grok``), and
+``lower_multi_capture`` turns a pattern list into its Java spelling
+plus the groups that feed each field. Execution is native: one
+``rlike`` per pattern and one ``F.regexp_extract`` per group, in
+java.util.regex, whose ``\\w``/``\\d``/``\\s`` are ASCII like the
+reference's Ruby classes. Dissect mappings compile to the same form.
 """
 
 from __future__ import annotations
 
 import re
-import warnings
-from collections.abc import Iterator
 from dataclasses import dataclass, field
-
-import numpy as np
-import pandas as pd
 
 GROK_FAILURE_TAG = "_grokparsefailure"
 
@@ -422,7 +417,7 @@ CORE_PATTERNS: dict[str, str] = {
     # (?m) dropped vs upstream: Python re requires global flags at
     # expression start; no ^/$ anchors are used, so behavior is identical
     "RAILS3HEAD": r"Started %{WORD:verb} \"%{URIPATHPARAM:request}\" for %{IPORHOST:clientip} at (?P<timestamp>%{YEAR}-%{MONTHNUM}-%{MONTHDAY} %{HOUR}:%{MINUTE}:%{SECOND} %{ISO8601_TIMEZONE})",
-    "RPROCESSING": r"\W*Processing by %{RCONTROLLER} as (?P<format>\S+)(?:\W*Parameters: {%{DATA:params}}\W*)?",
+    "RPROCESSING": r"\W*Processing by %{RCONTROLLER} as (?P<format>\S+)(?:\W*Parameters: \{%{DATA:params}\}\W*)?",
     "RAILS3FOOT": r"Completed %{NUMBER:response}%{DATA} in %{NUMBER:totalms}ms %{RAILS3PROFILE}%{GREEDYDATA}",
     "RAILS3PROFILE": r"(?:\(Views: %{NUMBER:viewms}ms \| ActiveRecord: %{NUMBER:activerecordms}ms|\(ActiveRecord: %{NUMBER:activerecordms}ms)?",
     "RAILS3": r"%{RAILS3HEAD}(?:%{RPROCESSING})?(?P<context>(?:%{DATA}\n)*)(?:%{RAILS3FOOT})?",
@@ -756,8 +751,7 @@ _MAX_DEPTH = 50
 # re and Java regex lack the syntax, so the compiler substitutes the
 # equivalent ASCII ranges (grok semantics are ASCII here). Possessive
 # quantifiers (a++/a*+/a?+) and atomic groups ((?>...)) need NO
-# translation: Python >= 3.11 and Java support both natively on the
-# pandas and regexp_extract paths alike.
+# translation: Python >= 3.11 and Java support both natively.
 _POSIX_CLASSES = {
     "alnum": "0-9A-Za-z",
     "alpha": "A-Za-z",
@@ -803,6 +797,10 @@ _ONIG_NAMED = re.compile(r"\(\?<(?![=!])")
 
 def _py_dialect(pattern: str) -> str:
     return _ONIG_NAMED.sub("(?P<", pattern)
+
+
+# a Python named group, not preceded by an escaping backslash
+_PY_NAMED = re.compile(r"(?<!\\)\(\?P<\w+>")
 
 
 @dataclass
@@ -882,202 +880,29 @@ def compile_grok(
     return CompiledGrok(regex=compiled, fields=fields)
 
 
-_PD_CAST = {"int": "Int64", "float": "Float64", "string": "object"}
-_SPARK_TYPE = {"int": "long", "float": "double", "string": "string"}
-
-
-def grok_output_schema(compiled: list[CompiledGrok]) -> str:
-    """DDL schema of the capture struct (union over patterns + _matched)."""
-    cols: dict[str, str] = {}
-    for cg in compiled:
-        for fname, (_, typ) in cg.fields.items():
-            cols.setdefault(fname, _SPARK_TYPE.get(typ, "string"))
-    parts = [f"`{n}` {t}" for n, t in cols.items()]
-    parts.append("`_matched` boolean")
-    return ", ".join(parts)
-
-
-def grok_extract_batch(
-    s: pd.Series, compiled: list[CompiledGrok], keep_empty_captures: bool = False,
-    break_on_match: bool = True,
-) -> pd.DataFrame:
-    """Extraction over a string Series → capture frame.
-
-    Vectorized: each pattern runs one ``str.extract``. break_on_match
-    (grok.rb default true): each row stops at its first matching
-    pattern. break_on_match=false: EVERY pattern runs on every row and
-    captures accumulate (earlier patterns win per-field coalesce).
-    """
-    all_fields: dict[str, str] = {}
-    for cg in compiled:
-        for fname, (_, typ) in cg.fields.items():
-            all_fields.setdefault(fname, typ)
-
-    out = pd.DataFrame(index=s.index)
-    for fname in all_fields:
-        out[fname] = pd.Series([None] * len(s), index=s.index, dtype="object")
-    matched = pd.Series(False, index=s.index)
-
-    todo = s.notna() & ~matched
-    for cg in compiled:
-        if break_on_match and not todo.any():
-            break
-        if not break_on_match:
-            todo = s.notna()
-        sub = s[todo].astype("string")
-        if cg.regex.groups == 0:
-            # pure match-test pattern (e.g. ``%{IPV4}`` with no
-            # semantic): str.extract would raise on a groupless regex
-            ext = pd.DataFrame(index=sub.index)
-            hit = sub.str.contains(cg.regex, regex=True).fillna(False).astype(bool)
-        else:
-            # extract: one column per regex group
-            ext = sub.str.extract(cg.regex)
-            hit = ext.notna().any(axis=1)
-            # a row can MATCH while every capture group stays empty
-            # (all groups optional, or no semantic captures at all) —
-            # grok.rb counts that as a match, not _grokparsefailure.
-            # Recheck only the all-NaN rows: matched rows are already
-            # settled, so the second scan touches only the miss set.
-            miss = ~hit
-            if miss.any():
-                with warnings.catch_warnings():
-                    # pandas warns that a grouped pattern "has match
-                    # groups" — the groups are extracted above; this
-                    # pass only wants the match flag
-                    warnings.simplefilter("ignore", UserWarning)
-                    re_hit = sub[miss].str.contains(
-                        cg.regex, regex=True).fillna(False).astype(bool)
-                hit.loc[re_hit[re_hit].index] = True
-        hit_idx = hit[hit].index
-        for fname, (groups, _typ) in cg.fields.items():
-            vals = None
-            for g in groups:
-                col = ext[g] if g in ext.columns else pd.Series(dtype="object")
-                if vals is None:
-                    vals = col
-                else:
-                    # grok same-name alternation: only one side matched →
-                    # coalesce. dissect %{+name} append: both matched →
-                    # join with a space (the append default).
-                    both = vals.notna() & col.notna()
-                    vals = vals.fillna(col)
-                    if both.any():
-                        vals.loc[both] = vals[both].astype(str) + " " + col[both].astype(str)
-            if vals is not None:
-                new_vals = vals[hit].astype("object")
-                if break_on_match:
-                    out.loc[hit_idx, fname] = new_vals
-                else:
-                    # accumulate: earlier patterns win per field
-                    cur = out.loc[hit_idx, fname]
-                    fill_idx = cur[cur.isna()].index
-                    out.loc[fill_idx, fname] = new_vals.loc[fill_idx]
-        matched.loc[hit_idx] = True
-        todo = s.notna() & ~matched
-
-    if not keep_empty_captures:
-        for fname in all_fields:
-            empties = out[fname] == ""
-            if empties.any():
-                out.loc[empties, fname] = None
-
-    for fname, typ in all_fields.items():
-        if typ == "int":
-            # grok.rb :int is Ruby to_i — TRUNCATES float captures
-            # (%{NUMBER:x:int} on '1.5' → 1). Non-numeric → null (our
-            # try_ discipline; Ruby's fabricated 0 is a documented
-            # deviation). Plain astype('Int64') would instead abort the
-            # whole Arrow batch on the first non-integral value.
-            num = pd.to_numeric(out[fname], errors="coerce")
-            as_int64 = None
-            if pd.api.types.is_integer_dtype(num):
-                try:
-                    as_int64 = num.astype("Int64")  # exact, no float hop
-                except TypeError:
-                    # uint64 captures in [2**63, 2**64) make to_numeric
-                    # return uint64, whose safe-cast to Int64 raises —
-                    # fall through to the prefix path, which nulls the
-                    # out-of-range values instead of aborting the batch
-                    as_int64 = None
-            if as_int64 is not None:
-                out[fname] = as_int64
-            else:
-                # mixed/float captures: Ruby to_i is the integer PREFIX
-                # of the decimal string, parsed exactly — no float hop
-                # (a float trunc loses precision past 2**53 and, for
-                # out-of-int64-range values, pd.array's safe-cast raises
-                # and aborts the whole Arrow batch). Out-of-int64-range
-                # → null (try_ discipline; Ruby's bignum cannot live in
-                # a long column).
-                prefix = out[fname].astype("string").str.extract(
-                    r"^\s*([+-]?\d+)", expand=False)
-
-                def _to_i64(v):
-                    if v is None or v is pd.NA:
-                        return None
-                    iv = int(v)
-                    return iv if -(2 ** 63) <= iv < 2 ** 63 else None
-
-                out[fname] = pd.array(
-                    [_to_i64(v) for v in prefix], dtype="Int64")
-        elif typ == "float":
-            out[fname] = pd.to_numeric(out[fname], errors="coerce").astype("Float64")
-    out["_matched"] = matched
-    return out
-
-
-def struct_extract_udf(compiled: list[CompiledGrok], keep_empty_captures: bool = False,
-                       break_on_match: bool = True):
-    """(pandas_udf, schema_ddl) applying compiled patterns.
-
-    Shared executor for grok and dissect stages.
-    """
-    from pyspark.sql.functions import pandas_udf
-
-    schema = grok_output_schema(compiled)
-
-    @pandas_udf(f"struct<{schema}>")
-    def _extract(batches: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
-        for s in batches:
-            yield grok_extract_batch(s, compiled, keep_empty_captures, break_on_match)
-
-    return _extract, schema
-
-
-def grok_udf(patterns: list[str], extra_patterns: dict[str, str] | None = None,
-             keep_empty_captures: bool = False, break_on_match: bool = True):
-    """Build (pandas_udf, output_schema_ddl) for a grok match spec."""
-    compiled = [compile_grok(p, extra_patterns) for p in patterns]
-    return struct_extract_udf(compiled, keep_empty_captures, break_on_match)
-
-
 def lower_multi_capture(
-    pattern: str, extra_patterns: dict[str, str] | None = None
-) -> tuple[str, list[tuple[str, int, str]]] | None:
-    """General native lowering: one grok pattern → a Java regex plus
-    [(field, group_index, type)] so the stage can evaluate it as k
-    ``F.regexp_extract`` calls + one ``rlike`` — all whole-stage-codegen
-    JVM (measured ~2× a single vectorized-Python pass at 12 captures in
-    steady state, and far cheaper cold: no Python workers, no Arrow).
+    compiled: list[CompiledGrok],
+) -> tuple[list[tuple[str, dict[str, list[int]]]], dict[str, str]]:
+    """Native lowering of a pattern list: per pattern, its Java regex
+    and {field: [group index, ...]}; plus {field: type} over the list in
+    output order, the type from the first pattern that has the field.
+    The grok stage evaluates each pattern as one ``rlike`` plus one
+    ``F.regexp_extract`` per group, all whole-stage-codegen JVM.
 
-    Returns None (→ the pandas path) when any field aggregates several
-    groups (same-name alternation needs coalesce-with-append semantics)
-    or the expansion carries syntax Java's regex dialect lacks. Dialect
-    caveat (same stance as lower_single_capture, documented SURVEY §7):
-    java.util.regex and Python ``re`` agree on this library's constructs
-    for ASCII input; \\w/\\b differ on non-ASCII letters.
-    """
-    cg = compile_grok(pattern, extra_patterns)
-    if not cg.fields:
-        return None
-    plan: list[tuple[str, int, str]] = []
-    java_pat = cg.regex.pattern
-    for fname, (groups, typ) in cg.fields.items():
-        if len(groups) != 1:
-            return None
-        plan.append((fname, cg.regex.groupindex[groups[0]], typ))
-        java_pat = java_pat.replace(f"(?P<{groups[0]}>", "(")
-    if "(?P" in java_pat:  # leftover Python-only named syntax/backrefs
-        return None
-    return java_pat, plan
+    In the Java spelling named groups become plain groups (the
+    numbering is unchanged) and ``re.DOTALL`` becomes ``(?s)``. Java
+    rejects any Python-only syntax left over (a ``(?P=name)``
+    backreference); the grok stage compiles each pattern in the JVM at
+    plan time to say so."""
+    lowered: list[tuple[str, dict[str, list[int]]]] = []
+    types: dict[str, str] = {}
+    for cg in compiled:
+        java_pat = _PY_NAMED.sub("(", cg.regex.pattern)
+        if cg.regex.flags & re.DOTALL:
+            java_pat = "(?s)" + java_pat
+        groups = {f: [cg.regex.groupindex[g] for g in gs]
+                  for f, (gs, _t) in cg.fields.items()}
+        lowered.append((java_pat, groups))
+        for f, (_gs, typ) in cg.fields.items():
+            types.setdefault(f, typ)
+    return lowered, types

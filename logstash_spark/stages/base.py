@@ -420,8 +420,10 @@ class Stage:
 
     plugin_name = "stage"
     row_local = True
-    # tags a failed event gets when ``tag_on_failure`` is not configured
+    # tags a failed event gets when FAILURE_TAG_OPTION is not configured
     FAILURE_TAGS: tuple[str, ...] = ()
+    # the conf key that replaces FAILURE_TAGS (None: the tags are fixed)
+    FAILURE_TAG_OPTION: str | None = "tag_on_failure"
 
     def __init__(self, conf: dict):
         self.conf = dict(conf)
@@ -436,7 +438,10 @@ class Stage:
     def failure_tags(self) -> list[str]:
         """Tags this stage adds to events it fails on; the pipeline's
         failure census counts rows carrying any of them."""
-        return list(self.conf.get("tag_on_failure", self.FAILURE_TAGS))
+        tags = self.conf.get(self.FAILURE_TAG_OPTION, self.FAILURE_TAGS)
+        # LSCL delivers a bare string; list("_fail") would explode it
+        # into per-character tags
+        return [tags] if isinstance(tags, str) else list(tags)
 
     def resolve_once(self, sc, key: str, build: Callable[[], object]):
         """Dimension-derived plan-time state (a dim count, a collected

@@ -1290,7 +1290,8 @@ class HttpStage(Stage):
     # config excluded: requests to an external endpoint for them
     row_local = False
 
-    TAG = "_httprequestfailure"
+    FAILURE_TAGS = ("_httprequestfailure",)
+    FAILURE_TAG_OPTION = "tag_on_request_failure"
     DIM_SCHEMA = ("__http_url string, __http_status int, "
                   "__http_body string, __http_headers map<string,string>")
 
@@ -1306,10 +1307,6 @@ class HttpStage(Stage):
             )
         target_body = field_name(self.conf.get("target_body", "body"))
         target_headers = self.conf.get("target_headers")
-        tf = self.conf.get("tag_on_request_failure", [self.TAG])
-        # LSCL delivers a bare string; list("_fail") would explode it
-        # into per-character tags
-        tag_fail = [tf] if isinstance(tf, str) else list(tf)
         max_urls = int(self.conf.get("max_distinct_urls", 100_000))
         url_col = sprintf_col(self.conf["url"])
 
@@ -1369,7 +1366,7 @@ class HttpStage(Stage):
         if target_headers:
             df = df.withColumn(
                 field_name(target_headers), F.when(ok, F.col("__http_headers")))
-        df = add_tags(df, tag_fail, ~ok)
+        df = add_tags(df, self.failure_tags, ~ok)
         df = df.withColumn("__matched", ok).drop(
             "__http_url", "__http_status", "__http_body", "__http_headers")
         return df, F.col("__matched")

@@ -8,50 +8,106 @@ the router's job, not the parser's).
 
 from __future__ import annotations
 
+from collections.abc import Callable
+from functools import reduce
+
+from pyspark.errors import IllegalArgumentException
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..dissect import DISSECT_FAILURE_TAG, compile_dissect
-from ..fieldref import field_col, field_name
-from ..grok import (
-    GROK_FAILURE_TAG,
-    grok_output_schema,
-    grok_udf,
-    lower_multi_capture,
-)
+from ..fieldref import field_col, field_name, top_col
+from ..grok import GROK_FAILURE_TAG, CompiledGrok, compile_grok, lower_multi_capture
 from .base import Stage, add_tags, register
 
 _MATCHED = "__matched"
+# Ruby to_i: the integer prefix of the capture ('1.5' → 1, '12ab' → 12)
+_INT_PREFIX = r"^\s*([+-]?\d+)"
 
 
-def _struct_apply(
-    df: DataFrame,
-    source: str,
-    udf_and_schema,
-    target: str | None,
-    overwrite: list[str],
-) -> tuple[DataFrame, Column]:
-    """Shared executor for grok/dissect: struct extraction + flatten."""
-    udf, schema = udf_and_schema
-    tmp = "__captures"
-    df = df.withColumn(tmp, udf(field_col(source)))
-    matched = F.col(f"{tmp}._matched")
-    df = df.withColumn(_MATCHED, matched)
-    capture_fields = [f.split("`")[1] for f in schema.split(", ") if "`" in f]
-    capture_fields = [f for f in capture_fields if f != "_matched"]
-    if target:
-        df = df.withColumn(target, F.col(tmp).dropFields("_matched"))
+def _java_lowering(spark, compiled: list[CompiledGrok], texts: list[str], who: str):
+    """``lower_multi_capture`` with every Java pattern compiled in the
+    JVM, so a pattern java.util.regex rejects fails at plan time and
+    names the pattern it came from, not later inside a Spark job."""
+    lowered, types = lower_multi_capture(compiled)
+    compile_java = spark.sparkContext._jvm.java.util.regex.Pattern.compile
+    for (java_pat, _groups), text in zip(lowered, texts):
+        try:
+            compile_java(java_pat)
+        except IllegalArgumentException as e:
+            raise ValueError(
+                f"{who} pattern {text!r} is not valid java.util.regex: "
+                f"{str(e).splitlines()[0]}") from None
+    return lowered, types
+
+
+def _write_captures(stage: Stage, df: DataFrame, source: str,
+                    build: Callable[[], list[CompiledGrok]], texts: list[str],
+                    keep_empty: bool, break_on_match: bool) -> DataFrame:
+    """The capture writer grok and dissect share, all native.
+
+    Three projections: the first pins which patterns match (one
+    ``rlike`` each), the second extracts every capture group once, on
+    the rows whose pattern supplies fields, and the third derives the
+    fields from those raw captures. A field fed by several groups joins
+    the non-empty ones with a space; it is then emptied to null (unless
+    ``keep_empty``) and typed (``:int`` is the integer prefix, Ruby
+    ``to_i``; ``:float`` a double). An existing column keeps its value
+    unless listed in ``overwrite`` (grok.rb), and ``target`` takes a
+    struct of the fields instead."""
+    lowered, types = stage.resolve_once(
+        df.sparkSession.sparkContext, "captures",
+        lambda: _java_lowering(df.sparkSession, build(), texts, stage.plugin_name))
+    src = field_col(source)
+    pats = [pat for pat, _groups in lowered]
+    if break_on_match:
+        # the first matching pattern supplies every field
+        pick = F.when(src.rlike(pats[0]), 0)
+        for i, pat in enumerate(pats[1:], 1):
+            pick = pick.when(src.rlike(pat), i)
+        pinned = {"__cap_pick": pick}
+        hits = [F.col("__cap_pick") == i for i in range(len(pats))]
+        matched = F.col("__cap_pick").isNotNull()
     else:
-        for fld in capture_fields:
-            new = F.col(f"{tmp}.`{fld}`")
-            if fld in df.columns and fld not in overwrite:
-                # reference grok does NOT clobber existing fields unless
-                # listed in `overwrite` (grok.rb `overwrite` option)
-                df = df.withColumn(fld, F.coalesce(F.col(fld), new))
-            else:
-                df = df.withColumn(fld, new)
-    df = df.drop(tmp)
-    return df, F.col(_MATCHED)
+        # every pattern runs; a field takes the earliest non-null value
+        pinned = {f"__cap_hit{i}": src.isNotNull() & src.rlike(pat)
+                  for i, pat in enumerate(pats)}
+        hits = [F.col(c) for c in pinned]
+        matched = reduce(lambda a, b: a | b, hits)
+    raws: dict[str, Column] = {}
+    for i, ((pat, groups), hit) in enumerate(zip(lowered, hits)):
+        for g in sorted({g for gs in groups.values() for g in gs}):
+            raws[f"__cap{i}_{g}"] = F.when(hit, F.regexp_extract(src, pat, g))
+    df = df.withColumns(pinned).withColumns({_MATCHED: matched, **raws})
+
+    values: dict[str, Column] = {}
+    for fld, typ in types.items():
+        per_pattern = []
+        for i, (_pat, groups) in enumerate(lowered):
+            if fld not in groups:
+                continue
+            cols = [F.col(f"__cap{i}_{g}") for g in groups[fld]]
+            val = cols[0] if len(cols) == 1 else F.when(
+                cols[0].isNotNull(),
+                F.concat_ws(" ", *[F.nullif(c, F.lit("")) for c in cols]))
+            per_pattern.append(val if keep_empty else F.nullif(val, F.lit("")))
+        val = F.coalesce(*per_pattern)
+        if typ == "int":
+            val = F.regexp_extract(val, _INT_PREFIX, 1).try_cast("long")
+        elif typ == "float":
+            val = val.try_cast("double")
+        values[fld] = val
+    target = stage.conf.get("target")
+    if target:
+        out = {target: F.struct(*[v.alias(f) for f, v in values.items()])}
+    else:
+        overwrite = stage.conf.get("overwrite", [])
+        if isinstance(overwrite, str):  # LSCL's bare string is one name
+            overwrite = [overwrite]
+        out = {f: F.coalesce(top_col(f), v) if f in df.columns and f not in overwrite else v
+               for f, v in values.items()}
+    df = df.withColumns(out).drop(*pinned, *raws)
+    return add_tags(df, stage.failure_tags, ~F.col(_MATCHED))
 
 
 @register("grok")
@@ -60,10 +116,27 @@ class GrokStage(Stage):
 
     conf: match {source: pattern | [patterns]}, pattern_definitions,
     target, overwrite, tag_on_failure, keep_empty_captures,
-    break_on_match (default true = first-match-wins across the pattern
-    list; false = every pattern runs, captures accumulate).
-    Single-capture patterns lower to native ``F.regexp_extract`` —
-    whole-stage-codegen JVM path, no Python at all.
+    break_on_match (default true = the first matching pattern supplies
+    the fields; false = every pattern runs and each field takes its
+    value from the earliest matching pattern that has one; an empty
+    capture is skipped unless kept, as grok.rb's ``handle`` does).
+
+    Every spec lowers to native ``rlike`` + ``F.regexp_extract``
+    (``_write_captures``): whole-stage-codegen JVM, no Python worker,
+    java.util.regex's ASCII ``\\w``/``\\d``/``\\s``. A pattern Java
+    rejects fails at plan time with a ValueError. Two corners follow
+    from ``regexp_extract``, which returns ``""`` both for a group that
+    captured nothing and for one that did not take part (Spark 4.1's
+    ``regexp_instr`` ignores its group index, so participation cannot
+    be read either):
+
+    * under ``keep_empty_captures => true`` an optional group that did
+      not take part reads ``""`` (grok.rb: nil), and under
+      ``break_on_match => false`` that ``""`` keeps a later pattern
+      from supplying the field;
+    * a field fed by several groups (same-name alternation, dissect
+      ``%{+name}``) joins the groups that captured text with one space,
+      so a group that captured ``""`` adds no separator.
     """
 
     FAILURE_TAGS = (GROK_FAILURE_TAG,)
@@ -76,48 +149,10 @@ class GrokStage(Stage):
         if isinstance(patterns, str):
             patterns = [patterns]
         defs = self.conf.get("pattern_definitions")
-        target = self.conf.get("target")
-        overwrite = self.conf.get("overwrite", [])
-        tags = self.failure_tags
-
-        lowered = lower_multi_capture(patterns[0], defs) if (
-            len(patterns) == 1
-            and not target
-            and not self.conf.get("keep_empty_captures", False)
-        ) else None
-        if lowered is not None:
-            # native lowering: one rlike + k regexp_extract, all JVM
-            # codegen (measured ~2x the vectorized-Python pass even at
-            # 12 captures; no Python workers at all)
-            java_pat, plan = lowered
-            src = field_col(source)
-            df = df.withColumn(_MATCHED, src.isNotNull() & src.rlike(java_pat))
-            for fld, gidx, typ in plan:
-                extracted = F.regexp_extract(src, java_pat, gidx)
-                val = F.when(F.col(_MATCHED) & (extracted != F.lit("")), extracted)
-                if typ == "int":
-                    # Ruby to_i parity with the pandas path: exact for
-                    # integer strings, TRUNCATES float captures
-                    # (%{NUMBER:x:int} on '1.5' → 1, not null)
-                    val = F.coalesce(
-                        val.try_cast("long"),
-                        val.try_cast("double").try_cast("long"),
-                    )
-                elif typ == "float":
-                    val = val.try_cast("double")
-                if fld in df.columns and fld not in overwrite:
-                    val = F.coalesce(F.col(fld), val)
-                df = df.withColumn(fld, val)
-        else:
-            df, _ = _struct_apply(
-                df,
-                source,
-                grok_udf(patterns, defs, self.conf.get("keep_empty_captures", False),
-                         self.conf.get("break_on_match", True)),
-                target,
-                overwrite,
-            )
-        df = add_tags(df, tags, ~F.col(_MATCHED))
+        df = _write_captures(
+            self, df, source, lambda: [compile_grok(p, defs) for p in patterns], patterns,
+            keep_empty=self.conf.get("keep_empty_captures", False),
+            break_on_match=self.conf.get("break_on_match", True))
         return df, F.col(_MATCHED)
 
 
@@ -125,7 +160,8 @@ class GrokStage(Stage):
 class DissectStage(Stage):
     """logstash-filter-dissect (Java tokenizer).
 
-    conf: mapping {source: dissect_spec}, tag_on_failure.
+    conf: mapping {source: dissect_spec}, target, overwrite,
+    tag_on_failure. Runs on grok's native capture writer.
     """
 
     FAILURE_TAGS = (DISSECT_FAILURE_TAG,)
@@ -135,17 +171,8 @@ class DissectStage(Stage):
         (source, spec), *rest = mapping.items()
         if rest:
             raise ValueError("one source field per dissect stage")
-        compiled = compile_dissect(spec)
-        from ..grok import struct_extract_udf
-
-        df, _ = _struct_apply(
-            df,
-            source,
-            struct_extract_udf([compiled], keep_empty_captures=True),
-            self.conf.get("target"),
-            self.conf.get("overwrite", []),
-        )
-        df = add_tags(df, self.failure_tags, ~F.col(_MATCHED))
+        df = _write_captures(self, df, source, lambda: [compile_dissect(spec)], [spec],
+                             keep_empty=True, break_on_match=True)
         return df, F.col(_MATCHED)
 
 
@@ -424,7 +451,8 @@ class CefStage(Stage):
     ``_cefparsefailure`` tag.
     """
 
-    TAG = "_cefparsefailure"
+    FAILURE_TAGS = ("_cefparsefailure",)
+    FAILURE_TAG_OPTION = None
 
     def transform(self, df: DataFrame) -> tuple[DataFrame, Column]:
         source = self.conf.get("source", "message")
@@ -481,5 +509,5 @@ class CefStage(Stage):
         )
         matched = ok & ver.isNotNull() & (F.size(parts) >= 7)
         df = df.withColumn(target, F.when(matched, struct))
-        df = add_tags(df, [self.TAG], src.isNotNull() & ~matched)
+        df = add_tags(df, self.failure_tags, src.isNotNull() & ~matched)
         return df, matched

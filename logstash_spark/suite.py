@@ -85,11 +85,10 @@ def _events_msg(spark, sf_dir, expr) -> DataFrame:
     """,
 )
 def grok_multi_capture(spark, sf_dir):
-    """grok with a PATTERN LIST (first-match-wins) → the vectorized
-    str.extract pandas-UDF path (single patterns lower to native JVM
-    regexp_extract — exercised by grok_syslogline; the list keeps this
-    query on the Python executor), WITH %{INT:field:int} typed
-    conversions (grok.rb's third ref part) on that path."""
+    """grok with a PATTERN LIST (first-match-wins: one rlike per
+    pattern picks the first match, then one native regexp_extract per
+    group), WITH %{INT:field:int} typed conversions (grok.rb's third
+    ref part)."""
     ev = _events_msg(
         spark, sf_dir,
         F.concat(F.col("event_type"), F.lit(" id="), F.col("user_id").cast("string"),
@@ -1594,9 +1593,8 @@ def grok_longtail(spark, sf_dir):
     composite (squid family — one of the round-3 library additions
     alongside nagios/zeek/bacula/bind/rails/postfix and the
     firewalls/junos/cloudfront families; 323 named patterns total).
-    12 captures incl. a typed %{INT:bytes:int} —
-    single-pattern, so it exercises the native multi-capture lowering
-    (one rlike + k regexp_extract, zero Python)."""
+    12 captures incl. a typed %{INT:bytes:int} through the native
+    multi-capture lowering (one rlike + k regexp_extract, zero Python)."""
     ev = _with_synth_ip(_t(spark, sf_dir, "events"))
     ev = ev.withColumn(
         "message",

@@ -110,6 +110,32 @@ def test_xml_failures_reach_the_census(spark, tmp_path):
     assert {s.id: s.failures for s in m.filters} == {"parse_xml": 1}
 
 
+def test_cef_failures_reach_the_census(spark, tmp_path):
+    """The cef stage declares the tag it adds, so the census counts it."""
+    df = spark.createDataFrame(
+        [("https://c1", "CEF:0|v|p|1.0|100|worm stopped|10|src=10.0.0.1"),
+         ("https://c2", "not a cef line")],
+        "url string, message string",
+    )
+    pipe = Pipeline({"id": "cef_census", "filters": [{"cef": {}}],
+                     "outputs": [{"name": "all"}]})
+    m = pipe.run(df, str(tmp_path / "run"), n_buckets=2)
+    assert {s.id: s.failures for s in m.filters} == {"cef": 1}
+
+
+def test_failure_tags_are_the_tags_each_stage_adds():
+    from logstash_spark.stages import build_stage
+
+    assert build_stage({"cef": {}}).failure_tags == ["_cefparsefailure"]
+    http = {"url": "http://x", "responses": {}}
+    assert build_stage({"http": http}).failure_tags == ["_httprequestfailure"]
+    assert build_stage({"http": {**http, "tag_on_request_failure": "_down"}}
+                       ).failure_tags == ["_down"]
+    # LSCL delivers a bare string: one tag, not one per character
+    assert build_stage({"grok": {"match": {"message": "x"},
+                                 "tag_on_failure": "_bad"}}).failure_tags == ["_bad"]
+
+
 def test_bucket_removal_is_rejected_in_both_modes(spark, tmp_path):
     """The executor's check that a filter kept the ``bucket`` partition
     key runs for batch and stream alike."""

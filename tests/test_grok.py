@@ -1,102 +1,181 @@
+import pytest
+from pyspark.sql import functions as F
+
+from logstash_spark.stages import apply_stage
+
+APACHE = (
+    '93.180.71.3 - frank [18/Jul/2026:08:25:11 +0000] '
+    '"GET /alpha/beta.html HTTP/1.1" 200 3707 '
+    '"http://referrer.example/" "Mozilla/5.0 (X11; Linux x86_64) Firefox/121.0"'
+)
+
+
+def _grok(spark, lines, conf):
+    """Run one grok stage over ``lines``; rows in input order, each with
+    ``matched`` (no _grokparsefailure tag)."""
+    df = spark.createDataFrame(list(enumerate(lines)), "rid int, message string")
+    if not isinstance(conf, dict):
+        conf = {"match": {"message": conf}}
+    rows = apply_stage(df, {"grok": conf}).orderBy("rid").collect()
+    return [dict(r.asDict(), matched="_grokparsefailure" not in r.tags) for r in rows]
+
+
+def _plan_has_python(df) -> bool:
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return "ArrowEvalPython" in plan or "BatchEvalPython" in plan
 
 
 def test_grok_unsupported_re_construct_message():
     """ADVICE r4: a regex construct Python's re cannot compile surfaces
     as a dialect-level ValueError, not a raw sre error."""
-    import pytest
     from logstash_spark.grok import compile_grok
 
     with pytest.raises(ValueError, match="unsupported by this Python re"):
         compile_grok(r"(?<name>\p{L}+)", {})
 
 
-def test_grok_zero_capture_pattern_is_match_test():
+def test_grok_zero_capture_pattern_is_match_test(spark):
     """A pure match-test pattern (no captures at all) must not crash
-    the batch executor — grok.rb configs use it for tagging."""
-    import pandas as pd
-    from logstash_spark.grok import compile_grok, grok_extract_batch
-
-    cg = compile_grok("%{IPV4}")
-    out = grok_extract_batch(pd.Series(["1.2.3.4", "nope", None]), [cg])
-    assert list(out["_matched"]) == [True, False, False]
+    the capture writer — grok.rb configs use it for tagging."""
+    out = _grok(spark, ["1.2.3.4", "nope", None], "%{IPV4}")
+    assert [r["matched"] for r in out] == [True, False, False]
 
 
-def test_grok_int_conversion_truncates_floats():
+def test_grok_int_conversion_truncates_floats(spark):
     """grok.rb :int is Ruby to_i — '1.5' → 1 (truncate), exact for
     integer strings; non-numeric → null (documented try_ deviation).
-    One dirty row must never abort the Arrow batch."""
-    import pandas as pd
-    from logstash_spark.grok import compile_grok, grok_extract_batch
+    One dirty row must never fail the batch."""
+    def xs(lines):
+        return [r["x"] for r in _grok(spark, lines, "%{NUMBER:x:int}")]
 
-    cg = compile_grok("%{NUMBER:x:int}")
-    out = grok_extract_batch(pd.Series(["1.5", "42", "-3.9"]), [cg])
-    assert list(out["x"]) == [1, 42, -3]
+    assert xs(["1.5", "42", "-3.9"]) == [1, 42, -3]
     # exact at int64 edge (no float round-trip for integral strings)
     big = "9223372036854775807"
-    out = grok_extract_batch(pd.Series([big]), [cg])
-    assert out.loc[0, "x"] == 9223372036854775807
-    # int64-max MIXED with a float in the same batch: the float hop
-    # made this unsafe-castable and aborted the whole Arrow batch
-    out = grok_extract_batch(pd.Series([big, "1.5"]), [cg])
-    assert list(out["x"]) == [9223372036854775807, 1]
+    assert xs([big]) == [9223372036854775807]
+    # int64-max MIXED with a float in the same batch
+    assert xs([big, "1.5"]) == [9223372036854775807, 1]
     # exact past 2**53 even when the batch has a float (no float hop)
-    out = grok_extract_batch(pd.Series(["9007199254740993", "2.5"]), [cg])
-    assert list(out["x"]) == [9007199254740993, 2]
+    assert xs(["9007199254740993", "2.5"]) == [9007199254740993, 2]
     # out-of-int64-range → null, batch survives (Ruby bignum cannot
     # live in a long column — try_ discipline)
-    out = grok_extract_batch(
-        pd.Series(["99999999999999999999", "7", "-1.5"]), [cg])
-    assert pd.isna(out.loc[0, "x"])
-    assert list(out["x"][1:]) == [7, -1]
+    assert xs(["99999999999999999999", "7", "-1.5"]) == [None, 7, -1]
 
 
-def test_grok_all_optional_captures_still_match():
+def test_grok_all_optional_captures_still_match(spark):
     """A row that MATCHES a pattern whose captures are all optional-
     and-absent is a match (no _grokparsefailure), grok.rb parity."""
-    import pandas as pd
-    from logstash_spark.grok import compile_grok, grok_extract_batch
-
-    cg = compile_grok(r"foo(?: %{WORD:w})?")
-    out = grok_extract_batch(pd.Series(["foo", "foo bar", "zzz"]), [cg])
-    assert list(out["_matched"]) == [True, True, False]
-    assert out.loc[1, "w"] == "bar" and pd.isna(out.loc[0, "w"])
+    out = _grok(spark, ["foo", "foo bar", "zzz"], r"foo(?: %{WORD:w})?")
+    assert [r["matched"] for r in out] == [True, True, False]
+    assert out[1]["w"] == "bar" and out[0]["w"] is None
 
 
-def test_grok_inline_named_captures_registered():
+def test_grok_inline_named_captures_registered(spark):
     """Inline named captures — Oniguruma (?<name>…) in user patterns
     and (?P<name>…) inside library patterns (RAILS family) — are output
     fields exactly like %{X:name} refs."""
-    import pandas as pd
-    from logstash_spark.grok import compile_grok, grok_extract_batch, lower_multi_capture
+    from logstash_spark.grok import compile_grok, lower_multi_capture
 
     cg = compile_grok(r"(?<queue_id>[0-9A-F]{10,11}):")
     assert "queue_id" in cg.fields
-    out = grok_extract_batch(pd.Series(["BEF25A72965: ok"]), [cg])
-    assert out.loc[0, "queue_id"] == "BEF25A72965"
+    out = _grok(spark, ["BEF25A72965: ok"], r"(?<queue_id>[0-9A-F]{10,11}):")
+    assert out[0]["queue_id"] == "BEF25A72965"
     # the library RAILS controller pattern carries inline captures
-    cg = compile_grok("%{RCONTROLLER}")
-    out = grok_extract_batch(pd.Series(["Users#show"]), [cg])
-    assert out.loc[0, "controller"] == "Users" and out.loc[0, "action"] == "show"
-    # and the native lowering handles the translated named group
-    low = lower_multi_capture(r"id=(?<qid>\w+)")
-    assert low is not None and low[1][0][0] == "qid"
+    out = _grok(spark, ["Users#show"], "%{RCONTROLLER}")
+    assert out[0]["controller"] == "Users" and out[0]["action"] == "show"
+    # the Java lowering turns the translated named group into a plain one
+    (java_pat, groups), = lower_multi_capture([compile_grok(r"id=(?<qid>\w+)")])[0]
+    assert groups == {"qid": [1]} and "?P" not in java_pat
     # lookbehind is NOT a named group — must survive translation
-    cg = compile_grok(r"(?<=-)%{WORD:w}")
-    out = grok_extract_batch(pd.Series(["-abc"]), [cg])
-    assert out.loc[0, "w"] == "abc"
+    out = _grok(spark, ["-abc"], r"(?<=-)%{WORD:w}")
+    assert out[0]["w"] == "abc"
 
 
-def test_grok_int_uint64_range_goes_null_not_abort():
-    """An integer capture in [2**63, 2**64) makes pandas to_numeric
-    return uint64; the safe-cast to Int64 raises — the conversion must
-    fall to the exact-prefix path and null the out-of-range value
-    instead of aborting the whole Arrow batch (review finding)."""
-    import pandas as pd
+def test_grok_int_uint64_range_goes_null_not_abort(spark):
+    """An integer capture in [2**63, 2**64) does not fit a long: it is
+    null and the rest of the batch keeps its values (review finding)."""
+    out = _grok(spark, ["9223372036854775808", "42"], "%{NUMBER:x:int}")
+    assert [r["x"] for r in out] == [None, 42]
 
-    from logstash_spark.grok import compile_grok, grok_extract_batch
 
-    c = compile_grok("%{NUMBER:x:int}")
-    out = grok_extract_batch(
-        pd.Series(["9223372036854775808", "42"]), [c])
-    assert out["x"].tolist()[0] is None or pd.isna(out["x"].tolist()[0])
-    assert out["x"].tolist()[1] == 42
+def test_grok_one_pattern_and_a_list_agree_on_non_ascii(spark):
+    """A single pattern and a pattern list run the same regex dialect:
+    java.util.regex's ASCII \\w, so neither extracts 'jörg' as a WORD."""
+    lines = ["user=jörg", "user=bob"]
+    one = _grok(spark, lines, "user=%{WORD:u}")
+    many = _grok(spark, lines, ["user=%{WORD:u}", "id=%{INT:n}"])
+    assert [(r["u"], r["matched"]) for r in one] == [(None, False), ("bob", True)]
+    assert [(r["u"], r["matched"]) for r in many] == [(r["u"], r["matched"]) for r in one]
+
+
+def test_grok_extracts_each_capture_once(spark):
+    """The raw captures are pinned before the fields are derived from
+    them, so each of COMBINEDAPACHELOG's 12 groups is extracted once."""
+    df = spark.range(1).select(
+        F.when(F.col("id") >= 0, F.lit(APACHE)).alias("message"))
+    out = apply_stage(df, {"grok": {"match": {"message": "%{COMBINEDAPACHELOG}"}}})
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("regexp_extract(") == 12
+    r = out.collect()[0]
+    assert (r.clientip, r.verb, r.bytes, r.rawrequest) == ("93.180.71.3", "GET", "3707", None)
+
+
+@pytest.mark.parametrize("stage", [
+    {"grok": {"match": {"message": ["id=%{INT:n:int}", "%{WORD:w}"]}}},
+    {"grok": {"match": {"message": "%{WORD:w}"}, "target": "g"}},
+    {"grok": {"match": {"message": "%{WORD:w}"}, "keep_empty_captures": True}},
+    {"grok": {"match": {"message": "%{HTTPD_ERRORLOG}"}}},
+    {"grok": {"match": {"message": "%{IPV4}"}}},
+    {"dissect": {"mapping": {"message": "%{a} %{+a} %{b}"}}},
+], ids=["list", "target", "keep_empty", "multi_group", "match_only", "dissect"])
+def test_capture_plans_hold_no_python_udf(spark, stage):
+    df = spark.createDataFrame([(1, "a b c"), (2, None)], "rid int, message string")
+    assert not _plan_has_python(apply_stage(df, stage))
+
+
+def test_grok_keep_empty_captures(spark):
+    """keep_empty_captures keeps an empty capture as "". An optional
+    group that did not take part reads "" too (regexp_extract cannot
+    tell it from an empty capture; grok.rb gives nil)."""
+    out = _grok(spark, ["k= v=1", "v=2"], {
+        "match": {"message": r"(?:k=%{DATA:k} )?v=%{INT:v}"},
+        "keep_empty_captures": True})
+    assert [(r["k"], r["v"]) for r in out] == [("", "1"), ("", "2")]
+    out = _grok(spark, ["k= v=1", "v=2"], r"(?:k=%{DATA:k} )?v=%{INT:v}")
+    assert [(r["k"], r["v"]) for r in out] == [(None, "1"), (None, "2")]
+
+
+def test_grok_multi_group_field_skips_empty_groups(spark):
+    """A field fed by several groups joins the non-empty ones with one
+    space; an empty group adds no separator."""
+    df = spark.createDataFrame([(" y z",), ("x y z",)], "message string")
+    out = apply_stage(df, {"dissect": {"mapping": {"message": "%{a} %{+a} %{b}"}}})
+    assert [(r.a, r.b) for r in out.collect()] == [("y", "z"), ("x y", "z")]
+
+
+def test_grok_accumulate_skips_empty_captures(spark):
+    """break_on_match=false: a field takes the earliest non-empty value
+    of the matching patterns (grok.rb's handle skips empty captures)."""
+    out = _grok(spark, ["a=; a=7"], {
+        "match": {"message": ["a=%{DATA:a};", "a=%{INT:a}$"]},
+        "break_on_match": False})
+    assert out[0]["a"] == "7"
+
+
+@pytest.mark.parametrize("pattern, java_says", [
+    ("a{b %{WORD:x}", "Illegal repetition"),
+    ("(?P<q>a)(?P=q)", "Unknown inline modifier"),
+])
+def test_grok_rejects_non_java_patterns_at_plan_time(spark, pattern, java_says):
+    df = spark.createDataFrame([("a",)], "message string")
+    with pytest.raises(ValueError, match=java_says) as err:
+        apply_stage(df, {"grok": {"match": {"message": ["%{WORD:w}", pattern]}}})
+    assert repr(pattern) in str(err.value)
+
+
+def test_grok_overwrite_as_a_bare_string_names_one_field(spark):
+    """LSCL delivers ``overwrite => "message"`` as a string: it names one
+    field, so an existing ``age`` keeps its value (not a substring test)."""
+    df = spark.createDataFrame([("bob", "42")], "message string, age string")
+    out = apply_stage(df, {"grok": {"match": {"message": "%{WORD:age}"},
+                                    "overwrite": "message"}}).collect()
+    assert out[0].age == "42"

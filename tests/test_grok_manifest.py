@@ -222,8 +222,9 @@ def test_manifest_full_coverage():
 
 
 def test_possessive_and_atomic_constructs_compile_and_match():
-    """Oniguruma possessive quantifiers and atomic groups work natively
-    on the pandas (Python re) path — three upstream-shaped patterns."""
+    """Oniguruma possessive quantifiers and atomic groups compile
+    natively in Python re, which numbers the groups the native lowering
+    extracts — three upstream-shaped patterns."""
     cases = [
         # upstream QUOTEDSTRING-style atomic alternation
         (r"(?>\"(?>\\.|[^\\\"]+)+\")", '"a\\"b"', True),
@@ -242,11 +243,10 @@ def test_possessive_survives_native_lowering(spark):
     java.util.regex, which supports them natively — end-to-end check."""
     from pyspark.sql import functions as F
 
-    lowered = lower_multi_capture("id=%{PINT:n:int}", {"PINT": r"[0-9]++"})
-    assert lowered is not None
-    java_pat, plan = lowered
+    (java_pat, groups), = lower_multi_capture(
+        [compile_grok("id=%{PINT:n:int}", {"PINT": r"[0-9]++"})])[0]
     df = spark.createDataFrame([("id=77",)], "message string")
-    (field, gidx, _typ), = plan
+    (field, (gidx,)), = groups.items()
     got = df.select(
         F.regexp_extract("message", java_pat, gidx).alias(field)
     ).collect()[0][field]

@@ -191,37 +191,38 @@ def test_date_stage_multi_format(spark):
     assert rows[4].event_ts is None and "_dateparsefailure" in rows[4].tags
 
 
-def test_grok_break_on_match_false_accumulates():
+def test_grok_break_on_match_false_accumulates(spark):
     """break_on_match=false (grok.rb): every pattern runs; captures
-    accumulate with earlier patterns winning per field. Pure-pandas
-    path — no Spark needed."""
-    import pandas as pd
+    accumulate with earlier patterns winning per field."""
+    df = spark.createDataFrame(
+        [(0, "id=42 user=bob"), (1, "user=eve only"), (2, "nothing")],
+        "rid int, message string")
+    spec = {"match": {"message": ["id=%{INT:gid}", "user=%{WORD:guser}"]}}
 
-    from logstash_spark.grok import compile_grok, grok_extract_batch
+    def run(**conf):
+        return apply_stage(df, {"grok": {**spec, **conf}}).orderBy("rid").collect()
 
-    compiled = [
-        compile_grok("id=%{INT:gid}"),
-        compile_grok("user=%{WORD:guser}"),
-    ]
-    s = pd.Series(["id=42 user=bob", "user=eve only", "nothing"])
     # default: first match wins, second pattern only sees unmatched rows
-    first = grok_extract_batch(s, compiled)
-    assert first.loc[0, "gid"] == "42" and first.loc[0, "guser"] is None
-    assert first.loc[1, "guser"] == "eve"
+    first = run()
+    assert first[0].gid == "42" and first[0].guser is None
+    assert first[1].guser == "eve"
     # accumulate mode: both patterns extract on row 0
-    both = grok_extract_batch(s, compiled, break_on_match=False)
-    assert both.loc[0, "gid"] == "42" and both.loc[0, "guser"] == "bob"
-    assert both.loc[1, "guser"] == "eve"
-    assert not both.loc[2, "_matched"]
+    both = run(break_on_match=False)
+    assert both[0].gid == "42" and both[0].guser == "bob"
+    assert both[1].guser == "eve"
+    assert "_grokparsefailure" in both[2].tags
 
 
-def test_grok_pattern_library_compiles():
+def test_grok_pattern_library_compiles(spark):
     """Every named pattern in the library expands to a valid Python
-    regex, and the round-2 composites match realistic lines."""
-    from logstash_spark.grok import CORE_PATTERNS, compile_grok
+    regex whose Java lowering java.util.regex compiles, and the
+    round-2 composites match realistic lines."""
+    from logstash_spark.grok import CORE_PATTERNS, compile_grok, lower_multi_capture
 
+    java_compile = spark.sparkContext._jvm.java.util.regex.Pattern.compile
     for name in CORE_PATTERNS:
-        compile_grok("%{" + name + ":x}")
+        (java_pat, _groups), = lower_multi_capture([compile_grok("%{" + name + ":x}")])[0]
+        java_compile(java_pat)
     assert len(CORE_PATTERNS) >= 300
     samples = {
         # round-3 long-tail families
