@@ -11,8 +11,8 @@ padding of the next delimiter.
 Spark mapping (SURVEY §2.4): the dissect spec compiles at plan time to
 a single anchored ``re.DOTALL`` regex with non-greedy inter-delimiter
 groups, a ``CompiledGrok`` that the grok stage's native capture writer
-runs (``(?s)`` in its Java spelling, one ``regexp_extract`` per field
-group). Failure tag: ``_dissectfailure``.
+runs (``(?s)`` in its Java spelling, one regex pass for all the
+field groups). Failure tag: ``_dissectfailure``.
 """
 
 from __future__ import annotations

@@ -20,9 +20,11 @@ Spark mapping (SURVEY §2.4): each grok expression compiles at plan
 time into ONE regex with numbered groups (``compile_grok``), and
 ``lower_multi_capture`` turns a pattern list into its Java spelling
 plus the groups that feed each field. Execution is native: one
-``rlike`` per pattern and one ``F.regexp_extract`` per group, in
-java.util.regex, whose ``\\w``/``\\d``/``\\s`` are ASCII like the
-reference's Ruby classes. Dissect mappings compile to the same form.
+``rlike`` per pattern and one pass that extracts its groups
+(``F.regexp_extract`` for one group, ``F.regexp_replace`` + ``split``
+for several), in java.util.regex, whose ``\\w``/``\\d``/``\\s`` are
+ASCII like the reference's Ruby classes. Dissect mappings compile to
+the same form.
 """
 
 from __future__ import annotations
@@ -799,10 +801,6 @@ def _py_dialect(pattern: str) -> str:
     return _ONIG_NAMED.sub("(?P<", pattern)
 
 
-# a Python named group, not preceded by an escaping backslash
-_PY_NAMED = re.compile(r"(?<!\\)\(\?P<\w+>")
-
-
 @dataclass
 class CompiledGrok:
     regex: re.Pattern
@@ -887,19 +885,23 @@ def lower_multi_capture(
     and {field: [group index, ...]}; plus {field: type} over the list in
     output order, the type from the first pattern that has the field.
     The grok stage evaluates each pattern as one ``rlike`` plus one
-    ``F.regexp_extract`` per group, all whole-stage-codegen JVM.
+    pass that extracts its groups, all whole-stage-codegen JVM.
 
     In the Java spelling named groups become plain groups (the
-    numbering is unchanged) and ``re.DOTALL`` becomes ``(?s)``. Java
+    numbering is unchanged), ``re.DOTALL`` becomes ``(?s)``, and
+    UNIX_LINES ``(?d)`` keeps ``\\n`` the only line end for ``.``,
+    ``^`` and ``$``, as in Python re and Ruby (Java's default also
+    stops at ``\\r``, ``\\u0085``, ``\\u2028`` and ``\\u2029``). Java
     rejects any Python-only syntax left over (a ``(?P=name)``
     backreference); the grok stage compiles each pattern in the JVM at
     plan time to say so."""
     lowered: list[tuple[str, dict[str, list[int]]]] = []
     types: dict[str, str] = {}
     for cg in compiled:
-        java_pat = _PY_NAMED.sub("(", cg.regex.pattern)
-        if cg.regex.flags & re.DOTALL:
-            java_pat = "(?s)" + java_pat
+        java_pat = cg.regex.pattern
+        for gname in cg.regex.groupindex:
+            java_pat = java_pat.replace(f"(?P<{gname}>", "(")
+        java_pat = ("(?sd)" if cg.regex.flags & re.DOTALL else "(?d)") + java_pat
         groups = {f: [cg.regex.groupindex[g] for g in gs]
                   for f, (gs, _t) in cg.fields.items()}
         lowered.append((java_pat, groups))

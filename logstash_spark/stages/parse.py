@@ -23,6 +23,8 @@ from .base import Stage, add_tags, register
 _MATCHED = "__matched"
 # Ruby to_i: the integer prefix of the capture ('1.5' → 1, '12ab' → 12)
 _INT_PREFIX = r"^\s*([+-]?\d+)"
+# joins the groups of a multi-group pattern's one-pass extract (ASCII US)
+_SEP = "\x1f"
 
 
 def _java_lowering(spark, compiled: list[CompiledGrok], texts: list[str], who: str):
@@ -48,7 +50,10 @@ def _write_captures(stage: Stage, df: DataFrame, source: str,
 
     Three projections: the first pins which patterns match (one
     ``rlike`` each), the second extracts every capture group once, on
-    the rows whose pattern supplies fields, and the third derives the
+    the rows whose pattern supplies fields (one ``regexp_extract`` for a
+    pattern with one group; one ``regexp_replace`` of the whole line
+    into its groups plus a ``split`` for several, so the pattern runs
+    once, not once per group), and the third derives the
     fields from those raw captures. A field fed by several groups joins
     the non-empty ones with a space; it is then emptied to null (unless
     ``keep_empty``) and typed (``:int`` is the integer prefix, Ruby
@@ -75,9 +80,22 @@ def _write_captures(stage: Stage, df: DataFrame, source: str,
         hits = [F.col(c) for c in pinned]
         matched = reduce(lambda a, b: a | b, hits)
     raws: dict[str, Column] = {}
+    cap: dict[tuple[int, int], Column] = {}  # (pattern, group) → its raw capture
     for i, ((pat, groups), hit) in enumerate(zip(lowered, hits)):
-        for g in sorted({g for gs in groups.values() for g in gs}):
-            raws[f"__cap{i}_{g}"] = F.when(hit, F.regexp_extract(src, pat, g))
+        idx = sorted({g for gs in groups.values() for g in gs})
+        if len(idx) == 1:
+            raws[f"__cap{i}"] = F.when(hit, F.regexp_extract(src, pat, idx[0]))
+            cap[i, idx[0]] = F.col(f"__cap{i}")
+        elif idx:
+            # one regex run for every group: rewrite the line into its
+            # groups joined by _SEP, then split; a line that holds _SEP
+            # takes one regexp_extract per group instead
+            joined = F.regexp_replace(src, rf"\A(?s:.*?)(?:{pat})(?s:.*)",
+                                      _SEP.join(f"${g}" for g in idx))
+            per_group = F.array(*[F.regexp_extract(src, pat, g) for g in idx])
+            raws[f"__cap{i}"] = F.when(hit, F.when(src.contains(_SEP), per_group)
+                                       .otherwise(F.split(joined, _SEP, -1)))
+            cap.update({(i, g): F.col(f"__cap{i}")[k] for k, g in enumerate(idx)})
     df = df.withColumns(pinned).withColumns({_MATCHED: matched, **raws})
 
     values: dict[str, Column] = {}
@@ -86,7 +104,7 @@ def _write_captures(stage: Stage, df: DataFrame, source: str,
         for i, (_pat, groups) in enumerate(lowered):
             if fld not in groups:
                 continue
-            cols = [F.col(f"__cap{i}_{g}") for g in groups[fld]]
+            cols = [cap[i, g] for g in groups[fld]]
             val = cols[0] if len(cols) == 1 else F.when(
                 cols[0].isNotNull(),
                 F.concat_ws(" ", *[F.nullif(c, F.lit("")) for c in cols]))
@@ -102,8 +120,6 @@ def _write_captures(stage: Stage, df: DataFrame, source: str,
         out = {target: F.struct(*[v.alias(f) for f, v in values.items()])}
     else:
         overwrite = stage.conf.get("overwrite", [])
-        if isinstance(overwrite, str):  # LSCL's bare string is one name
-            overwrite = [overwrite]
         out = {f: F.coalesce(top_col(f), v) if f in df.columns and f not in overwrite else v
                for f, v in values.items()}
     df = df.withColumns(out).drop(*pinned, *raws)
@@ -121,10 +137,12 @@ class GrokStage(Stage):
     value from the earliest matching pattern that has one; an empty
     capture is skipped unless kept, as grok.rb's ``handle`` does).
 
-    Every spec lowers to native ``rlike`` + ``F.regexp_extract``
-    (``_write_captures``): whole-stage-codegen JVM, no Python worker,
-    java.util.regex's ASCII ``\\w``/``\\d``/``\\s``. A pattern Java
-    rejects fails at plan time with a ValueError. Two corners follow
+    Every spec lowers to native ``rlike`` + ``F.regexp_extract`` (or,
+    for several groups, one ``F.regexp_replace`` pass; see
+    ``_write_captures``): JVM only, no Python worker, java.util.regex's
+    ASCII ``\\w``/``\\d``/``\\s``, and only ``\\n`` ends a line (UNIX_LINES,
+    as in Ruby). A pattern Java rejects fails at plan time with a
+    ValueError. Two corners follow
     from ``regexp_extract``, which returns ``""`` both for a group that
     captured nothing and for one that did not take part (Spark 4.1's
     ``regexp_instr`` ignores its group index, so participation cannot

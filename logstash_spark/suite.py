@@ -86,8 +86,8 @@ def _events_msg(spark, sf_dir, expr) -> DataFrame:
 )
 def grok_multi_capture(spark, sf_dir):
     """grok with a PATTERN LIST (first-match-wins: one rlike per
-    pattern picks the first match, then one native regexp_extract per
-    group), WITH %{INT:field:int} typed conversions (grok.rb's third
+    pattern picks the first match, then one native pass extracts its
+    groups), WITH %{INT:field:int} typed conversions (grok.rb's third
     ref part)."""
     ev = _events_msg(
         spark, sf_dir,
@@ -1594,7 +1594,8 @@ def grok_longtail(spark, sf_dir):
     alongside nagios/zeek/bacula/bind/rails/postfix and the
     firewalls/junos/cloudfront families; 323 named patterns total).
     12 captures incl. a typed %{INT:bytes:int} through the native
-    multi-capture lowering (one rlike + k regexp_extract, zero Python)."""
+    multi-capture lowering (one rlike + one regexp_replace pass, zero
+    Python)."""
     ev = _with_synth_ip(_t(spark, sf_dir, "events"))
     ev = ev.withColumn(
         "message",

@@ -109,14 +109,39 @@ def test_grok_one_pattern_and_a_list_agree_on_non_ascii(spark):
 
 def test_grok_extracts_each_capture_once(spark):
     """The raw captures are pinned before the fields are derived from
-    them, so each of COMBINEDAPACHELOG's 12 groups is extracted once."""
-    df = spark.range(1).select(
-        F.when(F.col("id") >= 0, F.lit(APACHE)).alias("message"))
+    them, so each of COMBINEDAPACHELOG's 12 groups is extracted once:
+    all 12 by one regexp_replace pass, or, on a line that holds the
+    pass's separator, by 12 regexp_extract."""
+    df = spark.range(2).select(
+        F.when(F.col("id") == 0, F.lit(APACHE))
+        .otherwise(F.lit(APACHE.replace("Linux", "Li\x1fnux"))).alias("message"))
     out = apply_stage(df, {"grok": {"match": {"message": "%{COMBINEDAPACHELOG}"}}})
     plan = out._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("regexp_replace(") == 1
     assert plan.count("regexp_extract(") == 12
-    r = out.collect()[0]
-    assert (r.clientip, r.verb, r.bytes, r.rawrequest) == ("93.180.71.3", "GET", "3707", None)
+    sep, one = out.orderBy("message").collect()  # "Li\x1f" sorts before "Lin"
+    assert (one.clientip, one.verb, one.bytes, one.rawrequest) == ("93.180.71.3", "GET", "3707", None)
+    assert sep.agent == '"Mozilla/5.0 (X11; Li\x1fnux x86_64) Firefox/121.0"'
+    assert [sep[f] for f in out.columns if f not in ("message", "agent")] == \
+        [one[f] for f in out.columns if f not in ("message", "agent")]
+
+
+def test_grok_and_dissect_split_on_an_escaped_backslash(spark):
+    """A literal backslash right before a capture (Windows DOMAIN\\user)
+    keeps the capture a group in the Java spelling."""
+    out = _grok(spark, ["CORP\\bob"], r"%{WORD:domain}\\%{USERNAME:user}")
+    assert (out[0]["domain"], out[0]["user"]) == ("CORP", "bob")
+    df = spark.createDataFrame([("CORP\\bob",)], "message string")
+    r = apply_stage(df, {"dissect": {"mapping": {"message": "%{domain}\\%{user}"}}}).collect()[0]
+    assert (r.domain, r.user) == ("CORP", "bob")
+
+
+def test_grok_only_newline_ends_a_line(spark):
+    """As in Python re and Ruby, only \\n ends a line: GREEDYDATA keeps a
+    \\r, for one pattern and for a pattern list."""
+    lines = ["a b\r", "a b\rc d\r\n"]
+    for conf in ("%{WORD:w} %{GREEDYDATA:m}$", ["id=%{INT:n}", "%{WORD:w} %{GREEDYDATA:m}$"]):
+        assert [r["m"] for r in _grok(spark, lines, conf)] == ["b\r", "b\rc d\r"]
 
 
 @pytest.mark.parametrize("stage", [
@@ -171,11 +196,3 @@ def test_grok_rejects_non_java_patterns_at_plan_time(spark, pattern, java_says):
         apply_stage(df, {"grok": {"match": {"message": ["%{WORD:w}", pattern]}}})
     assert repr(pattern) in str(err.value)
 
-
-def test_grok_overwrite_as_a_bare_string_names_one_field(spark):
-    """LSCL delivers ``overwrite => "message"`` as a string: it names one
-    field, so an existing ``age`` keeps its value (not a substring test)."""
-    df = spark.createDataFrame([("bob", "42")], "message string, age string")
-    out = apply_stage(df, {"grok": {"match": {"message": "%{WORD:age}"},
-                                    "overwrite": "message"}}).collect()
-    assert out[0].age == "42"
