@@ -313,18 +313,17 @@ def minhash_dedup(
     value to string-shingle Jaccard modulo 64-bit hash collisions),
     never re-carrying raw shingle strings through a shuffle.
     """
-    from pyspark.storagelevel import StorageLevel
+    from ..pipeline import CACHE_LEVEL
 
     # persist: the signature scan feeds three plan subtrees (band join
     # left/right via exchange reuse, verify probe x2); without it the
-    # 64-hash projection runs per subtree. MEMORY_AND_DISK — eviction
-    # only costs recompute, never correctness. Lifecycle: to_drop (ids
-    # only — tiny relative to the corpus) is materialized eagerly, then
-    # the fat signature cache is released immediately, so repeated calls
-    # in a long-lived session don't accumulate cached signature blocks.
-    base = _minhash_base(df, id_col, text_col, num_perm, shingle_k).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    # 64-hash projection runs per subtree. The engine's CACHE_LEVEL
+    # (memory and disk, deserialized) — eviction only costs recompute,
+    # never correctness. Lifecycle: to_drop (ids only — tiny relative to
+    # the corpus) is materialized eagerly, then the fat signature cache
+    # is released immediately, so repeated calls in a long-lived session
+    # don't accumulate cached signature blocks.
+    base = _minhash_base(df, id_col, text_col, num_perm, shingle_k).persist(CACHE_LEVEL)
     try:
         cands = _banded_candidates(base, num_perm, bands)
         hs = base.select("id", "hs")
@@ -338,9 +337,8 @@ def minhash_dedup(
             )
             .filter(F.col("jaccard") >= threshold)
         )
-        to_drop = dups.select(F.col("b").alias(id_col)).distinct().persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
+        to_drop = (dups.select(F.col("b").alias(id_col)).distinct()
+                   .persist(CACHE_LEVEL))
         to_drop.count()  # materialize before releasing the signature cache
         _LIVE_CACHES.append(to_drop)
     finally:
@@ -748,7 +746,7 @@ def connected_components(
     label snapshots. (Reliable-checkpoint FILES are left to the
     context cleaner; only the block-manager entries are freed here.)
     """
-    from pyspark.storagelevel import StorageLevel
+    from ..pipeline import CACHE_LEVEL
 
     sc = pairs.sparkSession.sparkContext
 
@@ -770,7 +768,7 @@ def connected_components(
         pairs.select(F.col(a_col).alias("s"), F.col(b_col).alias("d"))
         .unionByName(pairs.select(F.col(b_col).alias("s"), F.col(a_col).alias("d")))
         .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .persist(CACHE_LEVEL)
     )
     try:
         labels, labels_id = _truncate(

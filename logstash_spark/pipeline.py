@@ -48,6 +48,15 @@ from .stages.base import ensure_tags, gated_merge
 
 BUCKET_COL = "bucket"
 
+# The level of every engine persist: the routed batch, the branch
+# caches, the datapipe's reused intermediates. PySpark's MEMORY_AND_DISK
+# is the *serialized* level (unlike Scala's of that name), so a batch
+# persisted at it is Java-serialized once when built and deserialized
+# whole on every read: by the census, then again by each sink's scan.
+# The deserialized level keeps the cached column batches as built and
+# each read takes them as they are.
+CACHE_LEVEL = StorageLevel.MEMORY_AND_DISK_DESER
+
 
 class Pipeline:
     def __init__(self, spec: dict):
@@ -93,7 +102,7 @@ class Pipeline:
             if stage.row_local:
                 df = gated_merge(df, cond, stage.apply, stage.id)
             else:
-                df = df.persist(StorageLevel.MEMORY_AND_DISK)
+                df = df.persist(CACHE_LEVEL)
                 self._branch_caches.append(df)
                 matched = stage.apply(df.filter(cond))
                 rest = df.filter(~F.coalesce(cond, F.lit(False)))
@@ -260,7 +269,7 @@ class Pipeline:
             compiled
             .repartitionById(n_parts, F.expr(
                 f"CAST({BUCKET_COL} DIV {bucket_stride} AS INT)"))
-            .persist(StorageLevel.MEMORY_AND_DISK)
+            .persist(CACHE_LEVEL)
         )
         stage_tags = {stage.id: stage.failure_tags
                       for _, stage in self.stages if stage.failure_tags}

@@ -12,10 +12,14 @@ Reference counterparts:
   mirrored by dropping ``_meta`` before every write.
 
 Spark decisions:
-* The routed DataFrame is persisted (MEMORY_AND_DISK) by the caller
-  before fan-out — Catalyst does NOT share subtrees across separate
-  write actions, so this is the one hand-rolled optimization the
-  reference's Dataset#compute memoization corresponds to (SURVEY §4).
+* The routed DataFrame is persisted by the caller before fan-out —
+  Catalyst does NOT share subtrees across separate write actions, so
+  this is the one hand-rolled optimization the reference's
+  Dataset#compute memoization corresponds to (SURVEY §4). The level is
+  ``pipeline.CACHE_LEVEL``, memory and disk *deserialized*: the
+  reference shares one in-memory batch of live events across its
+  outputs, while PySpark's ``MEMORY_AND_DISK`` is a serialized level
+  whose blocks every sink's scan would decode again.
 * Sinks write parquet partitioned by the ``bucket`` column with dynamic
   partition overwrite → idempotent per-bucket writes (resume story).
 """

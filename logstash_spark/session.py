@@ -16,6 +16,14 @@ Centralizes the configs the whole engine depends on:
   of the stream benchmark's pipeline made 2222 Py4J calls with it on
   and 862 with it off (0.52 s → 0.42 s on a 4-core VM). The sites it
   records point inside this package, not at the user's pipeline config.
+* Cached batches uncompressed
+  (``spark.sql.inMemoryColumnarStorage.compressed=false``). A batch is
+  cached once and read by the census and each sink. With compression
+  on, Spark's column builder (``CompressibleColumnBuilder``) copies the
+  distinct values of each string column into a candidate dictionary to
+  rate the encodings, up to 32767 per partition; every ~17 KB page
+  ``text`` is distinct, so the dictionary never pays and the column is
+  stored pass-through after all. Off, the cache build skips that pass.
 
 ``local_frame`` builds the small frames the driver makes from Python
 rows (dims, snapshots, poll results) as Arrow-backed local relations.
@@ -79,6 +87,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(ARROW_BATCH))
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        .config("spark.sql.inMemoryColumnarStorage.compressed", "false")
         # task-side parallel commit (v2): the v1 driver-side serial file
         # moves were a visible serial fraction at high parallelism. A
         # non-atomic commit is acceptable: the per-batch checkpoint

@@ -120,6 +120,8 @@ def _write_captures(stage: Stage, df: DataFrame, source: str,
         out = {target: F.struct(*[v.alias(f) for f, v in values.items()])}
     else:
         overwrite = stage.conf.get("overwrite", [])
+        # LSCL delivers a bare string; `in` on it would be a substring test
+        overwrite = [overwrite] if isinstance(overwrite, str) else overwrite
         out = {f: F.coalesce(top_col(f), v) if f in df.columns and f not in overwrite else v
                for f, v in values.items()}
     df = df.withColumns(out).drop(*pinned, *raws)

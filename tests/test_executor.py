@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 
 from logstash_spark.metrics import PipelineMetrics
 from logstash_spark.pipeline import Pipeline
+from logstash_spark.router import Router
 from logstash_spark.streaming import run_streaming, stream_from_directory
 
 SCHEMA = "url string, lang string, message string"
@@ -240,3 +241,32 @@ def test_stream_rejects_a_bad_bucket_count(spark, tmp_path):
         run_streaming(Pipeline(SPEC), stream_from_directory(
             spark, src_dir, SCHEMA), str(tmp_path / "s"), n_buckets=0)
     assert not os.path.exists(tmp_path / "s")
+
+
+def test_batches_are_cached_deserialized_and_uncompressed(spark, tmp_path, monkeypatch):
+    """The routed batch and the branch caches are persisted at the
+    deserialized memory-and-disk level (PySpark's MEMORY_AND_DISK is the
+    serialized one, decoded again by every read), and the session caches
+    column batches uncompressed."""
+    from pyspark.storagelevel import StorageLevel
+
+    levels = []
+    write_batch = Router.write_batch
+
+    def spy(self, df, *args, **kwargs):
+        levels.append(df.storageLevel)
+        return write_batch(self, df, *args, **kwargs)
+
+    monkeypatch.setattr(Router, "write_batch", spy)
+    Pipeline(SPEC).run(_rows(spark), str(tmp_path / "run"), n_buckets=4, n_batches=2)
+    assert levels == [StorageLevel.MEMORY_AND_DISK_DESER] * 2
+
+    pipe = Pipeline({"id": "t", "filters": [
+        {"when": "[lang] == 'en'", "split": {"field": "message", "terminator": " "}}]})
+    pipe.compile(_rows(spark))
+    try:
+        assert [c.storageLevel for c in pipe._branch_caches] == [
+            StorageLevel.MEMORY_AND_DISK_DESER]
+    finally:
+        pipe.release_branch_caches()
+    assert spark.conf.get("spark.sql.inMemoryColumnarStorage.compressed") == "false"

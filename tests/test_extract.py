@@ -7,8 +7,11 @@ enforces BASELINE.json.input_hint's per-row invariant.
 
 from __future__ import annotations
 
+from hypothesis import given, settings
+from hypothesis import strategies as st
+
 from logstash_spark.datagen import gen_pages
-from logstash_spark.extract import extract_text, extract_text_udf
+from logstash_spark.extract import _collapse_ws, extract_text, extract_text_udf
 
 
 def test_extract_semantics():
@@ -46,3 +49,21 @@ def test_generation_is_deterministic(spark):
     a = gen_pages(spark, 50, partitions=2).orderBy("url").collect()
     b = gen_pages(spark, 50, partitions=7).orderBy("url").collect()
     assert [tuple(r) for r in a] == [tuple(r) for r in b]
+
+
+def _collapse_ws_fixpoint(s: str) -> str:
+    """The previous collapse, kept as the reference: translate the rare
+    whitespace to spaces, then halve every run of spaces until none of
+    two is left."""
+    s = s.translate(str.maketrans({"\t": " ", "\r": " ", "\f": " ", "\v": " "}))
+    while "  " in s:
+        s = s.replace("  ", " ")
+    return s
+
+
+@settings(max_examples=300, deadline=None)
+@given(st.text(alphabet=st.sampled_from(
+    [" ", " ", " ", "\t", "\r", "\f", "\v", "\n", "\u00a0", "\u3000",
+     "a", "数", "据", "\U0001f600"]), max_size=60))
+def test_collapse_ws_matches_the_fixpoint_loop(s):
+    assert _collapse_ws(s).encode("utf-8") == _collapse_ws_fixpoint(s).encode("utf-8")

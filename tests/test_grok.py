@@ -157,6 +157,15 @@ def test_capture_plans_hold_no_python_udf(spark, stage):
     assert not _plan_has_python(apply_stage(df, stage))
 
 
+def test_grok_overwrite_as_a_bare_string_names_one_field(spark):
+    """LSCL passes `overwrite => "message"` as a string: it names the
+    one field `message`, so an existing `age` ("age" is a substring of
+    "message") keeps its value."""
+    df = spark.createDataFrame([("bob", "42")], "message string, age string")
+    conf = {"match": {"message": "%{WORD:age}"}, "overwrite": "message"}
+    assert apply_stage(df, {"grok": conf}).first().age == "42"
+
+
 def test_grok_keep_empty_captures(spark):
     """keep_empty_captures keeps an empty capture as "". An optional
     group that did not take part reads "" too (regexp_extract cannot
