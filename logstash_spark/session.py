@@ -19,11 +19,13 @@ Centralizes the configs the whole engine depends on:
 * Cached batches uncompressed
   (``spark.sql.inMemoryColumnarStorage.compressed=false``). A batch is
   cached once and read by the census and each sink. With compression
-  on, Spark's column builder (``CompressibleColumnBuilder``) copies the
-  distinct values of each string column into a candidate dictionary to
-  rate the encodings, up to 32767 per partition; every ~17 KB page
+  on, Spark's column builder (``CompressibleColumnBuilder``, as we read
+  its source) collects the distinct values of each string column into a
+  candidate dictionary to rate the encodings; every ~17 KB page
   ``text`` is distinct, so the dictionary never pays and the column is
   stored pass-through after all. Off, the cache build skips that pass.
+  Its share of the cache-level gain was inside the noise of a 4-round
+  ablation of the full pages_bulk run (``AB_BATCH_CACHE.json``).
 
 ``local_frame`` builds the small frames the driver makes from Python
 rows (dims, snapshots, poll results) as Arrow-backed local relations.
