@@ -97,8 +97,7 @@ def bench_apache(spark, logs_path):
                       "target": "event_ts"}}
     )
     df = apply_stage(
-        df, {"geoip": {"source": "clientip", "ranges_df": gen_geo_ranges(spark, 500),
-                       "strategy": "binary_search"}}
+        df, {"geoip": {"source": "clientip", "ranges_df": gen_geo_ranges(spark, 500)}}
     )
     df = apply_stage(df, {"useragent": {"source": "agent", "rules_df": gen_ua_rules(spark)}})
     # force full evaluation of every enriched column

@@ -31,14 +31,14 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-# Persisted id-lists handed back inside lazy results (minhash_dedup's
-# to_drop). They are tiny (ids only), but a long-lived session doing
-# many dedup calls should release them once results are consumed.
+# Persisted frames handed back inside lazy results (ngram_jaccard_pairs'
+# shingles, duplicated_span_stats' windows). A long-lived session doing
+# many calls should release them once results are consumed.
 _LIVE_CACHES: list[DataFrame] = []
 
 
 def release_dedup_caches() -> None:
-    """Unpersist every id-list cache minhash_dedup left alive inside a
+    """Unpersist every cache a datapipe call left alive inside a
     returned (lazy) result. Call after the result is materialized."""
     while _LIVE_CACHES:
         _LIVE_CACHES.pop().unpersist()
@@ -320,9 +320,12 @@ def minhash_dedup(
     # 64-hash projection runs per subtree. The engine's CACHE_LEVEL
     # (memory and disk, deserialized) — eviction only costs recompute,
     # never correctness. Lifecycle: to_drop (ids only — tiny relative to
-    # the corpus) is materialized eagerly, then the fat signature cache
-    # is released immediately, so repeated calls in a long-lived session
-    # don't accumulate cached signature blocks.
+    # the corpus) is materialized eagerly as a local checkpoint, then the
+    # fat signature cache is released immediately, so repeated calls in
+    # a long-lived session don't accumulate cached signature blocks. A
+    # checkpoint is this call's own: a persisted to_drop would be reused
+    # by a later call with the same plan even after its input files were
+    # replaced. Its blocks go when the returned frame is garbage.
     base = _minhash_base(df, id_col, text_col, num_perm, shingle_k).persist(CACHE_LEVEL)
     try:
         cands = _banded_candidates(base, num_perm, bands)
@@ -338,9 +341,7 @@ def minhash_dedup(
             .filter(F.col("jaccard") >= threshold)
         )
         to_drop = (dups.select(F.col("b").alias(id_col)).distinct()
-                   .persist(CACHE_LEVEL))
-        to_drop.count()  # materialize before releasing the signature cache
-        _LIVE_CACHES.append(to_drop)
+                   .localCheckpoint(storageLevel=CACHE_LEVEL))
     finally:
         base.unpersist()
     return df.join(to_drop, id_col, "left_anti")

@@ -3,8 +3,8 @@ with subdomain-suffix semantics plus banned-term URL scanning — the
 stage a web-corpus pipeline runs BEFORE fetching or parsing a byte of
 html, so it must be the cheapest op in the DAG.
 
-Two strategies, picked by blocklist size (the geoip/useragent
-precedent in ``stages/enrich.py``):
+Two strategies, picked by how the blocklist is passed (a list or a
+DataFrame); both run in the JVM and give the same answers:
 
 - **literal** (≤ ``LITERAL_CAP`` domains): the blocklist ships as ONE
   plan-literal array and matching is ``arrays_overlap`` over the

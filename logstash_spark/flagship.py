@@ -50,7 +50,7 @@ def flagship_pipeline(spark: SparkSession) -> Pipeline:
             {"parse_url": {}},
             {"tld": {"source": "url", "suffixes": TLDS}},
             {"synth_ip": {"source": "url"}},
-            {"geoip": {"source": "ip", "ranges_df": geo, "strategy": "broadcast_range"}},
+            {"geoip": {"source": "ip", "ranges_df": geo}},
             {"useragent": {"source": "agent", "rules_df": ua}},
             {"translate": {"source": "domain", "target": "dominfo",
                            "dictionary_df": ddict, "tag_on_miss": "_translation_miss"}},

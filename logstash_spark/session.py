@@ -50,8 +50,9 @@ from pyspark.sql.types import StructType
 # ≈ 40 MB per task in flight; the old 10k-row default put 200 MB per
 # task in flight and measurably hurt scaling on fat pages
 # (scripts/scale_bench.py methodology note). Small log events pay no
-# penalty: the hot parse path (grok/dissect/date) is native, so pandas
-# batches only carry the extraction/useragent fallback stages.
+# penalty: the parse and lookup paths (grok/dissect/date/geoip/
+# useragent) are native, so pandas batches only carry html extraction
+# and the datapipe UDFs.
 ARROW_BATCH = 2_048
 
 

@@ -5,7 +5,9 @@ with an in-process cache (translate/geoip/useragent/cidr). The Spark
 re-expression is uniformly a **broadcast join** — the dimension ships
 once per executor, the probe stays in whole-stage codegen, and no
 shuffle touches the (huge) fact side. SURVEY §2.6 notes geoip is the
-one *range* join in the reference's surface.
+one *range* join in the reference's surface; it runs as an equi-join on
+IP bins with the range test as the join condition (``geo_bins``). Each
+stage has one lookup at every dim size, all in the JVM.
 """
 
 from __future__ import annotations
@@ -13,7 +15,7 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..fieldref import field_col, field_name
@@ -148,108 +150,87 @@ class TranslateStage(Stage):
         return df, matched
 
 
+_IP_MAX = 2**32 - 1
+
+
+def geo_bins(spark: SparkSession, ranges: DataFrame) -> tuple[int, DataFrame]:
+    """The geoip dim as a binned hash-join build side: ``(k, bins)``.
+
+    The ranges are collected sorted by start and checked: an inverted
+    range or two overlapping ones raise ValueError naming them (mmdb
+    leaves never overlap, so each IP lies in at most one range). Bins
+    are ``ip >> k`` with ``k`` sized so there are about as many bins as
+    ranges; each range becomes one row per bin it touches, so the build
+    side has fewer than 3 rows per range and an IP's bin holds every
+    range that can contain it."""
+    rows = (ranges.select("ip_start_int", "ip_end_int", "country", "city", "lat", "lon")
+            .orderBy("ip_start_int").collect())
+    prev = None
+    for lo, hi, *_ in rows:
+        if lo is None or hi is None or lo > hi:
+            raise ValueError(f"geoip: range [{lo}, {hi}] is inverted or unbounded")
+        if prev is not None and lo <= prev[1]:
+            raise ValueError(
+                f"geoip: ranges [{prev[0]}, {prev[1]}] and [{lo}, {hi}] overlap; "
+                "each IP must lie in at most one range")
+        prev = (lo, hi)
+    k = max(0, 32 - (len(rows) - 1).bit_length())
+    bins = [
+        (b, lo, hi, tuple(geo))
+        for lo, hi, *geo in rows
+        for b in range(max(lo, 0) >> k, (min(hi, _IP_MAX) >> k) + 1)
+    ]
+    return k, local_frame(
+        spark, bins,
+        "__geo_bin long, __geo_lo long, __geo_hi long, "
+        "__geo struct<country:string,city:string,lat:double,lon:double>")
+
+
 @register("geoip")
 class GeoipStage(Stage):
     """logstash-filter-geoip (MaxMind mmdb lookup in the reference).
 
     conf: source (ip string), target (default "geo"), ranges_df with
-    (ip_start_int, ip_end_int, country, city, lat, lon), strategy:
-      * "broadcast_range" — native BroadcastNestedLoopJoin on
-        ``ip BETWEEN lo AND hi`` (fine up to ~2k ranges: m comparisons
-        per row inside codegen, zero Python);
-      * "binary_search" — sorted boundary arrays shipped as a broadcast
-        variable, probed via vectorized ``np.searchsorted`` in a pandas
-        UDF (O(log m) per row — the ≥10k-range scale path, SURVEY §2.4);
-      * "auto" (default): count the dim once and pick.
-    Miss → null struct + ``_geoip_lookup_failure`` tag (reference tag).
+    (ip_start_int, ip_end_int, country, city, lat, lon) and
+    non-overlapping ranges. The lookup is one left broadcast hash join
+    on the IP's bin (``geo_bins``) with ``ip BETWEEN lo AND hi`` as its
+    condition: O(1) per event at any dim size, no Python, and at most
+    one range per event, so every event leaves as exactly one row.
+    Miss → null struct + ``_geoip_lookup_failure`` tag (reference tag)
+    when the source is set.
 
-    The dim is resolved once per stage object (``register()`` parity):
-    the auto count and the binary_search broadcast are built on the
-    first compile and reused by every later one, so a stream pays no
-    Spark job for the dim per micro-batch (``Stage.resolve_once``).
+    The dim is collected, checked and binned when the stage is built
+    (``register()`` parity), so overlapping ranges fail before a run
+    writes anything, and later compiles reuse the bins and start no
+    Spark job (``Stage.resolve_once``).
     """
 
     FAILURE_TAGS = ("_geoip_lookup_failure",)
 
-    AUTO_THRESHOLD = 2000
+    def __init__(self, conf: dict):
+        super().__init__(conf)
+        self._bins(self.conf["ranges_df"].sparkSession)
+
+    def _bins(self, spark: SparkSession) -> tuple[int, DataFrame]:
+        return self.resolve_once(spark.sparkContext, "bins",
+                                 lambda: geo_bins(spark, self.conf["ranges_df"]))
 
     def transform(self, df: DataFrame) -> tuple[DataFrame, Column]:
-        source = self.conf["source"]
         target = self.conf.get("target", "geo")
-        ranges: DataFrame = self.conf["ranges_df"]
-        strategy = self.conf.get("strategy", "auto")
-        src_ip = field_col(source)
-        sc = df.sparkSession.sparkContext
-
-        if strategy == "auto":
-            strategy = self.resolve_once(sc, "strategy", lambda: (
-                "broadcast_range" if ranges.count() <= self.AUTO_THRESHOLD else "binary_search"
-            ))
-
-        ip_int = ip_to_long(src_ip)
-        if strategy == "broadcast_range":
-            dim = ranges.select(
-                F.col("ip_start_int").alias("__lo"),
-                F.col("ip_end_int").alias("__hi"),
-                F.struct("country", "city", "lat", "lon").alias(target),
-            )
-            df = df.withColumn("__ip_int", ip_int)
-            df = df.join(
-                F.broadcast(dim),
-                (F.col("__ip_int") >= F.col("__lo")) & (F.col("__ip_int") <= F.col("__hi")),
-                "left",
-            ).drop("__lo", "__hi", "__ip_int")
-        else:
-            def ship_ranges():
-                pdim = (
-                    ranges.select("ip_start_int", "ip_end_int", "country", "city", "lat", "lon")
-                    .orderBy("ip_start_int")
-                    .toPandas()
-                )
-                return sc.broadcast(
-                    {
-                        "starts": pdim["ip_start_int"].to_numpy(),
-                        "ends": pdim["ip_end_int"].to_numpy(),
-                        "country": pdim["country"].to_numpy(),
-                        "city": pdim["city"].to_numpy(),
-                        "lat": pdim["lat"].to_numpy(),
-                        "lon": pdim["lon"].to_numpy(),
-                    }
-                )
-
-            bc = self.resolve_once(sc, "ranges_bc", ship_ranges)
-            from pyspark.sql.functions import pandas_udf
-            import numpy as np
-
-            @pandas_udf("struct<country:string,city:string,lat:double,lon:double>")
-            def _lookup(batches: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
-                d = bc.value
-                for s in batches:
-                    ips = pd.to_numeric(s, errors="coerce")
-                    idx = np.searchsorted(d["starts"], ips.fillna(-1).to_numpy(), side="right") - 1
-                    valid = (idx >= 0) & ips.notna().to_numpy()
-                    safe = np.clip(idx, 0, len(d["starts"]) - 1)
-                    in_range = valid & (ips.fillna(-1).to_numpy() <= d["ends"][safe])
-                    out = pd.DataFrame(
-                        {
-                            "country": np.where(in_range, d["country"][safe], None),
-                            "city": np.where(in_range, d["city"][safe], None),
-                            "lat": np.where(in_range, d["lat"][safe], np.nan),
-                            "lon": np.where(in_range, d["lon"][safe], np.nan),
-                        },
-                        index=s.index,
-                    )
-                    yield out
-
-            df = df.withColumn(target, _lookup(ip_int))
-            df = df.withColumn(
-                target, F.when(F.col(f"{target}.country").isNotNull(), F.col(target))
-            )
-        matched = F.col(f"{target}.country").isNotNull()
-        df = add_tags(
-            df, self.failure_tags,
-            src_ip.isNotNull() & ~matched,
+        src_ip = field_col(self.conf["source"])
+        k, bins = self._bins(df.sparkSession)
+        ip = F.col("__geo_ip")
+        df = (
+            df.withColumn("__geo_ip", ip_to_long(src_ip))
+            .join(F.broadcast(bins),
+                  (F.shiftright(ip, k) == F.col("__geo_bin"))
+                  & ip.between(F.col("__geo_lo"), F.col("__geo_hi")),
+                  "left")
+            .withColumn(target, F.col("__geo"))
+            .drop("__geo_ip", "__geo_bin", "__geo_lo", "__geo_hi", "__geo")
         )
+        matched = F.col(target).isNotNull()
+        df = add_tags(df, self.failure_tags, src_ip.isNotNull() & ~matched)
         return df, matched
 
 
@@ -258,86 +239,40 @@ class UseragentStage(Stage):
     """logstash-filter-useragent (uap-java regex db in the reference).
 
     conf: source, target (default "ua"), rules_df with
-    (pattern, name, os, device, priority), strategy. First match in
-    priority order wins — exactly the uap-core matching contract. Two
-    physical strategies:
+    (pattern, name, os, device, priority). First match in priority
+    order wins — exactly the uap-core matching contract — as one
+    priority-ordered when/rlike chain building the struct, in Java at
+    any rule count. Patterns are Java regex (``\\w`` is ASCII), the
+    same stance as the grok lowering. Past a few hundred rules the
+    generated code exceeds 64 KB and Spark runs the chain interpreted,
+    which measured faster than the deleted pandas matcher at 300 and
+    1000 rules (``AB_NATIVE_ENRICH.json``).
 
-    * "native" — a priority-ordered when/rlike chain building the
-      struct, fully whole-stage codegen (no Python hop at all). The
-      right plan for curated rule sets up to NATIVE_THRESHOLD rules;
-      Java-regex dialect (documented, same stance as the grok
-      lowering).
-    * "pandas" — the rule set ships as a broadcast variable; matching
-      is vectorized ``str.contains`` per rule over only still-unmatched
-      rows. The path for uap-core-scale rule sets (thousands of
-      regexes: a thousand-branch codegen'd when-chain would blow the
-      JIT method budget, and early-exit over unmatched rows pays off).
-    * "auto" (default): native iff the rule count ≤ NATIVE_THRESHOLD.
-
-    The rule set is resolved once per stage object (``register()``
-    parity): the ``collect()`` and the pandas path's broadcast happen on
-    the first compile only (``Stage.resolve_once``).
+    The rule set is collected once per stage object (``register()``
+    parity, ``Stage.resolve_once``).
     """
 
-    NATIVE_THRESHOLD = 64
-
     def transform(self, df: DataFrame) -> tuple[DataFrame, Column]:
-        source = self.conf["source"]
         target = self.conf.get("target", "ua")
         rules_df: DataFrame = self.conf["rules_df"]
-        strategy = self.conf.get("strategy", "auto")
-        sc = df.sparkSession.sparkContext
-        rules = self.resolve_once(sc, "rules", lambda: [
+        rules = self.resolve_once(df.sparkSession.sparkContext, "rules", lambda: [
             (r["pattern"], r["name"], r["os"], r["device"])
             for r in rules_df.orderBy("priority").collect()
         ])
-        if strategy == "auto":
-            strategy = "native" if len(rules) <= self.NATIVE_THRESHOLD else "pandas"
-        src = field_col(source)
-
-        if strategy == "native":
-            chain = None
-            for pat, name, os_, dev in rules:
-                hit = src.rlike(pat)
-                val = F.struct(
-                    F.lit(name).alias("name"), F.lit(os_).alias("os"),
-                    F.lit(dev).alias("device"),
-                )
-                chain = F.when(hit, val) if chain is None else chain.when(hit, val)
-            ua = chain if chain is not None else F.lit(None).cast(
-                "struct<name:string,os:string,device:string>"
+        src = field_col(self.conf["source"])
+        chain = None
+        for pat, name, os_, dev in rules:
+            hit = src.rlike(pat)
+            val = F.struct(
+                F.lit(name).alias("name"), F.lit(os_).alias("os"),
+                F.lit(dev).alias("device"),
             )
-            df = df.withColumn(target, ua)
-            matched = F.col(f"{target}.name").isNotNull()
-            return df, matched
-
-        bc = self.resolve_once(sc, "rules_bc", lambda: sc.broadcast(rules))
-        from pyspark.sql.functions import pandas_udf
-
-        @pandas_udf("struct<name:string,os:string,device:string>")
-        def _ua(batches: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
-            import re
-
-            compiled = [(re.compile(p), n, o, d) for p, n, o, d in bc.value]
-            for s in batches:
-                out = pd.DataFrame(
-                    {"name": None, "os": None, "device": None}, index=s.index, dtype="object"
-                )
-                todo = s.notna()
-                ss = s.astype("string")
-                for pat, name, os_, dev in compiled:
-                    if not todo.any():
-                        break
-                    hit = ss[todo].str.contains(pat, regex=True).fillna(False)
-                    hit_idx = hit[hit].index
-                    out.loc[hit_idx, ["name", "os", "device"]] = [name, os_, dev]
-                    todo.loc[hit_idx] = False
-                yield out
-
-        df = df.withColumn(target, _ua(src))
-        matched = F.col(f"{target}.name").isNotNull()
-        df = df.withColumn(target, F.when(matched, F.col(target)))
-        return df, matched
+            chain = F.when(hit, val) if chain is None else chain.when(hit, val)
+        ua = chain if chain is not None else F.lit(None).cast(
+            "struct<name:string,os:string,device:string>"
+        )
+        df = df.withColumn(target, ua)
+        return df, F.col(f"{target}.name").isNotNull()
 
 
 @register("cidr")

@@ -34,6 +34,7 @@ from .datapipe.dedup import exact_dedup, minhash_dedup, ngram_jaccard_pairs, sim
 from .datapipe.similarity import ann_ivf_topk, ann_lsh_topk, cosine_topk
 from .datapipe.textstats import EN_STOPWORDS, LANG_MARKERS
 from . import suite_expected as _expected
+from .session import local_frame
 from .stages.base import apply_stage, build_stage
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
@@ -436,13 +437,16 @@ def _with_synth_ip(ev: DataFrame) -> DataFrame:
     return ev.withColumn("ip", F.concat_ws(".", *[o.cast("string") for o in octets]))
 
 
-def _geo_slabs(spark: SparkSession) -> DataFrame:
-    rows = [
-        (k * 2**24, (k + 1) * 2**24 - 1, f"C{k}", f"city{k}", float(k), float(-k))
-        for k in range(256)
-    ]
-    return spark.createDataFrame(
-        rows,
+def _geo_slabs(spark: SparkSession, bits: int) -> DataFrame:
+    """``2**bits`` equal slabs over the IPv4 space, each tagged by its
+    first octet, so every slab count gives the same answers."""
+    rows = []
+    for k in range(2**bits):
+        o = k >> (bits - 8)
+        rows.append((k << (32 - bits), ((k + 1) << (32 - bits)) - 1,
+                     f"C{o}", f"city{o}", float(o), float(-o)))
+    return local_frame(
+        spark, rows,
         "ip_start_int long, ip_end_int long, country string, city string, "
         "lat double, lon double",
     )
@@ -460,17 +464,16 @@ _GEO_BOTH_ORACLE = f"""
 
 @_q("geoip_two_strategies", _GEO_BOTH_ORACLE)
 def geoip_two_strategies(spark, sf_dir):
-    """geoip, BOTH execution strategies in one driver row: the native
-    broadcast range join (BroadcastNestedLoop BETWEEN) and the
-    broadcast-sorted-arrays + vectorized np.searchsorted path — each
-    tagged and unioned, so a regression in either strategy fails the
-    row."""
+    """geoip over two dims that give the same answers: 256 /8 slabs and
+    65,536 /16 slabs (the legs keep the names of the two strategies
+    the stage once had, on either side of its old 2000-range switch).
+    One binned broadcast hash join serves both; each leg is tagged and
+    unioned, so a dim size that changes an answer fails the row."""
     ev = _with_synth_ip(_t(spark, sf_dir, "events"))
     parts = []
-    for strategy in ("broadcast_range", "binary_search"):
+    for strategy, bits in (("broadcast_range", 8), ("binary_search", 16)):
         out = apply_stage(
-            ev, {"geoip": {"source": "ip", "ranges_df": _geo_slabs(spark),
-                           "strategy": strategy}}
+            ev, {"geoip": {"source": "ip", "ranges_df": _geo_slabs(spark, bits)}}
         )
         parts.append(
             out.select("event_id", F.col("geo.country").alias("country"),
@@ -1293,14 +1296,15 @@ _WURFL_SNAPSHOT = [
     """,
 )
 def useragent_two_strategies(spark, sf_dir):
-    """Device detection battery, three strategies in one driver row:
-    the useragent filter's native priority-ordered when/rlike chain
-    (uap-core first-match contract, zero Python, ≤64 rules), its pandas
-    path (broadcast rule set + vectorized str.contains over
-    still-unmatched rows — the path for uap-core-scale rule files), and
-    the wurfl_device_detection filter (round 5: snapshot hierarchy,
-    longest-prefix match + fall_back capability inheritance) driven to
-    the same regex-CASE truth. Each tagged and unioned."""
+    """Device detection battery, three legs in one driver row: the
+    useragent filter's priority-ordered when/rlike chain (uap-core
+    first-match contract, in Java) over the 4 rules (``native``) and
+    over the same rules padded to 100 with lower-priority rules that
+    never match (``pandas``, past the 64-rule point where the stage
+    once switched to a Python matcher), and the wurfl_device_detection
+    filter (round 5: snapshot hierarchy, longest-prefix match +
+    fall_back capability inheritance) driven to the same regex-CASE
+    truth. Each tagged and unioned."""
     parts = [
         _useragent_query(spark, sf_dir, s).withColumn("strategy", F.lit(s))
         for s in ("native", "pandas", "wurfl")
@@ -1331,12 +1335,14 @@ def _useragent_query(spark, sf_dir, strategy):
             F.col("wurfl.os").alias("ua_os"),
             F.col("wurfl.device").alias("ua_device"),
         )
-    rules = spark.createDataFrame(
-        _UA_RULES, "pattern string, name string, os string, device string, priority int"
+    rules = _UA_RULES
+    if strategy == "pandas":
+        rules = rules + [(f"^never-{i}/", f"pad{i}", "Other", "Other", len(rules) + i)
+                         for i in range(100 - len(rules))]
+    rules_df = local_frame(
+        spark, rules, "pattern string, name string, os string, device string, priority int"
     )
-    out = apply_stage(
-        ev, {"useragent": {"source": "agent", "rules_df": rules, "strategy": strategy}}
-    )
+    out = apply_stage(ev, {"useragent": {"source": "agent", "rules_df": rules_df}})
     return out.select(
         "event_id",
         F.col("ua.name").alias("ua_name"),

@@ -39,6 +39,33 @@ def test_minhash_dedup(docs):
     assert 2 not in ids  # near-dup above 0.5 jaccard
 
 
+def test_minhash_dedup_reads_each_call_afresh(spark, tmp_path):
+    """Two calls in one session over the same parquet path, the files
+    replaced in between by another writer (so Spark does not refresh
+    its caches of that path): the second call's drops come from the new
+    files, as a computation from scratch, not from the first call's
+    cached id list (same plan, so a persisted one would be reused)."""
+    import shutil
+
+    base = "the quick brown fox jumps over the lazy dog again and again today"
+    other = "completely different content about spark query engines and shuffles"
+    path = str(tmp_path / "docs")
+    schema = "doc_id long, text string"
+    first = [(0, base), (1, base), (2, other), (3, "short text")]
+    second = [(0, base), (1, "short text"), (2, other), (3, other)]
+    kept = []
+    for i, rows in enumerate((first, second)):
+        spark.createDataFrame(rows, schema).write.parquet(f"{path}{i}")
+        shutil.rmtree(path, ignore_errors=True)
+        shutil.move(f"{path}{i}", path)
+        out = dedup.minhash_dedup(spark.read.parquet(path), threshold=0.8)
+        kept.append(sorted(r.doc_id for r in out.collect()))
+    scratch = dedup.minhash_dedup(spark.createDataFrame(second, schema), threshold=0.8)
+    assert kept == [[0, 2, 3], [0, 1, 2]]
+    assert kept[1] == sorted(r.doc_id for r in scratch.collect())
+    dedup.release_dedup_caches()
+
+
 def test_simhash_dedup(docs):
     sig = dedup.simhash_column(docs)
     vals = {r.doc_id: r.simhash for r in sig.collect()}

@@ -191,6 +191,37 @@ def _assert_same(gated, naive) -> None:
     assert _rows(got) == expect
 
 
+def test_when_wrapped_geoip_equals_branch_lowering(spark):
+    """A join stage under the gate: the when-wrapped geoip, with an
+    add_tag and over an existing target, gives the rows of filter →
+    stage → union. Every event leaves as one row, so the stage is
+    row-local."""
+    from logstash_spark.session import local_frame
+
+    ranges = local_frame(
+        spark, [(0, 2**31 - 1, "A", "a", 1.0, 2.0), (2**31, 2**31 + 9, "B", "b", 3.0, 4.0)],
+        "ip_start_int long, ip_end_int long, country string, city string, "
+        "lat double, lon double")
+    geo = "struct<country:string,city:string,lat:double,lon:double>"
+    old = ("Z", "z", 0.0, 0.0)
+    df = ensure_tags(spark.createDataFrame(
+        [(1, "en", "1.2.3.4", old), (2, "de", "1.2.3.4", old),
+         (3, "en", "200.1.1.1", None), (4, "en", None, old),
+         (5, "de", "bad", None), (6, "en", "128.0.0.9", old)],
+        f"id int, lang string, ip string, geo {geo}"))
+    spec = {"geoip": {"source": "ip", "ranges_df": ranges, "add_tag": ["geo_ok"]}}
+    cond = compile_condition(WHEN, df)
+
+    def naive():
+        return build_stage(spec).apply(df.filter(cond)).unionByName(
+            df.filter(~F.coalesce(cond, F.lit(False))),
+            allowMissingColumns=True)
+
+    gated = Pipeline({"filters": [{"when": WHEN, **spec}]})
+    assert gated.stages[0][1].row_local
+    _assert_same(lambda: gated.compile(df), naive)
+
+
 @settings(max_examples=25, deadline=None,
           suppress_health_check=[HealthCheck.function_scoped_fixture,
                                  HealthCheck.too_slow])

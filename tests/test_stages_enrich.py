@@ -1,12 +1,17 @@
-"""Enrich-family tests: translate / geoip range join (both strategies) /
-useragent / cidr / tld — mirroring the reference plugin spec shapes."""
+"""Enrich-family tests: translate / geoip binned range join / useragent /
+cidr / tld — mirroring the reference plugin spec shapes."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from logstash_spark.datagen import gen_geo_ranges, gen_ua_rules
+from logstash_spark.session import local_frame
 from logstash_spark.stages import apply_stage
 from logstash_spark.stages.enrich import ip_to_long
 
@@ -54,34 +59,167 @@ def test_translate_multicolumn_dim(spark):
     assert r.dominfo.category == "news" and r.dominfo.trust == 0.9
 
 
-@pytest.mark.parametrize("strategy", ["broadcast_range", "binary_search"])
-def test_geoip_strategies_agree(spark, strategy):
-    ranges = gen_geo_ranges(spark, 50)
-    df = spark.createDataFrame(
-        [(1, "0.0.1.0"), (2, "128.0.0.1"), (3, None), (4, "bad-ip")],
-        "id int, ip string",
-    )
-    out = apply_stage(
-        df, {"geoip": {"source": "ip", "ranges_df": ranges, "strategy": strategy}}
-    )
-    rows = {r.id: r for r in out.collect()}
-    assert rows[1].geo is not None and rows[1].geo.country is not None
-    assert rows[2].geo is not None
-    assert rows[3].geo is None
-    assert rows[4].geo is None and "_geoip_lookup_failure" in rows[4].tags
+_IP_MAX = 2**32 - 1
+_RANGE_DDL = ("ip_start_int long, ip_end_int long, country string, city string, "
+              "lat double, lon double")
+_RULE_DDL = "pattern string, name string, os string, device string, priority int"
 
 
-def test_geoip_strategies_identical_results(spark):
-    ranges = gen_geo_ranges(spark, 64)
-    ips = [(i, f"{(i * 37) % 224}.{(i * 13) % 256}.{i % 256}.{(i * 7) % 256}") for i in range(64)]
-    df = spark.createDataFrame(ips, "id int, ip string")
-    a = apply_stage(df, {"geoip": {"source": "ip", "ranges_df": ranges,
-                                   "strategy": "broadcast_range"}})
-    b = apply_stage(df, {"geoip": {"source": "ip", "ranges_df": ranges,
-                                   "strategy": "binary_search"}})
-    ra = {r.id: r.geo for r in a.collect()}
-    rb = {r.id: r.geo for r in b.collect()}
-    assert ra == rb
+def _dotted(n: int) -> str:
+    return ".".join(str((n >> s) & 255) for s in (24, 16, 8, 0))
+
+
+def _py_ip(s):
+    """Pure-Python ``ip_to_long``: four ASCII-digit octets in 0..255."""
+    parts = None if s is None else s.split(".")
+    if parts is None or len(parts) != 4:
+        return None
+    octets = [int(p) if p.isascii() and p.isdigit() else -1 for p in parts]
+    if not all(0 <= o <= 255 for o in octets):
+        return None
+    return (octets[0] << 24) | (octets[1] << 16) | (octets[2] << 8) | octets[3]
+
+
+def _py_geo(ranges, ip: str | None):
+    """(country or None, tagged) — a linear scan over every range."""
+    n = _py_ip(ip)
+    hit = [r for r in ranges if n is not None and r[0] <= n <= r[1]]
+    assert len(hit) <= 1
+    return (hit[0][2] if hit else None), (ip is not None and not hit)
+
+
+def _py_ua(rules, agent: str | None):
+    for pat, name, *_ in sorted(rules, key=lambda r: r[4]):
+        if agent is not None and re.search(pat, agent, re.ASCII):
+            return name
+    return None
+
+
+def _probe_ips(ranges) -> list[str | None]:
+    ips = {0, _IP_MAX, 2**31}
+    for lo, hi, *_ in ranges:
+        ips |= {lo, hi, lo - 1, hi + 1, (lo + hi) // 2}
+    return [_dotted(n) for n in sorted(ips) if 0 <= n <= _IP_MAX] + [
+        None, "bad-ip", "1.2.3", "256.1.1.1", "1.2.3.4.5", "", "-1.0.0.0"]
+
+
+@pytest.mark.parametrize("n_ranges", [1, 64, 2001, 10_000])
+def test_geoip_one_answer_per_event_at_every_dim_size(spark, n_ranges):
+    """One lookup at every dim size (the old strategy switch sat at
+    2000 ranges): each event leaves as one row and agrees with a scan
+    over the ranges; a set but unparsable or unmatched ip is tagged."""
+    ranges_df = gen_geo_ranges(spark, n_ranges)
+    ranges = [tuple(r) for r in ranges_df.collect()]
+    ips = _probe_ips(ranges[:50] + ranges[-50:])
+    df = spark.createDataFrame(list(enumerate(ips)), "id int, ip string")
+    out = apply_stage(df, {"geoip": {"source": "ip", "ranges_df": ranges_df}})
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastHashJoin" in plan and "ArrowEvalPython" not in plan
+    rows = out.collect()
+    assert sorted(r.id for r in rows) == list(range(len(ips)))
+    for r in rows:
+        country, tagged = _py_geo(ranges, r.ip)
+        assert (r.geo.country if r.geo else None) == country, r.ip
+        assert ("_geoip_lookup_failure" in (r.tags or [])) == tagged, r.ip
+
+
+def _geo_frame(spark, ranges):
+    return local_frame(spark, [(lo, hi, c, c.lower(), 1.0, -1.0)
+                               for lo, hi, c in ranges], _RANGE_DDL)
+
+
+@pytest.mark.parametrize("ranges, named", [
+    ([(0, 100, "OUT"), (50, 60, "IN")], r"\[0, 100\] and \[50, 60\]"),
+    ([(0, 10, "A"), (10, 20, "B")], r"\[0, 10\] and \[10, 20\]"),
+    ([(30, 20, "X")], r"\[30, 20\]"),
+])
+def test_geoip_bad_ranges_fail_before_the_run_writes(spark, tmp_path, ranges, named):
+    """Overlapping (nested or touching) and inverted ranges fail when
+    the pipeline is built, naming the ranges, before ``run`` touches
+    its ``run_dir``: a nested pair would otherwise give an IP in the
+    outer range two answers or none."""
+    from logstash_spark.pipeline import Pipeline
+
+    df = spark.createDataFrame([(1, "0.0.0.70")], "id int, ip string")
+    run_dir = tmp_path / "run"
+    with pytest.raises(ValueError, match=named):
+        Pipeline({"id": "geo", "filters": [
+            {"geoip": {"source": "ip", "ranges_df": _geo_frame(spark, ranges)}}],
+            "outputs": [{"name": "all"}]}).run(df, str(run_dir), bucket_on="id",
+                                                n_buckets=2)
+    assert not run_dir.exists()
+
+
+def test_useragent_one_dialect_at_every_rule_count(spark):
+    """``^\\w+/`` over ``Bérénice/1``: Java's ASCII ``\\w`` stops at the
+    ``é``, so no rule matches, at 6 rules as at 100 (the old switch sat
+    at 64 rules and sent 100 to Python's Unicode ``\\w``)."""
+    df = spark.createDataFrame([(1, "Bérénice/1"), (2, "Bob/1")], "id int, agent string")
+    base = [(r"^\w+/", "Word", "Other", "Other", 0)] + [
+        (f"^never{i}$", f"r{i}", "Other", "Other", i + 1) for i in range(5)]
+    answers = []
+    for pad in (0, 94):
+        rules = base + [(f"^pad{i}$", f"p{i}", "Other", "Other", 10 + i) for i in range(pad)]
+        out = apply_stage(df, {"useragent": {
+            "source": "agent", "rules_df": local_frame(spark, rules, _RULE_DDL)}})
+        answers.append({r.id: r.ua.name if r.ua else None for r in out.collect()})
+    assert answers == [{1: None, 2: "Word"}] * 2
+
+
+@st.composite
+def _geo_ranges(draw):
+    """Non-overlapping ranges from random cut points plus a cluster of
+    narrow ones, so the bins are narrow and a wide range spans many;
+    the first range starts at 0 and the last ends at 2^32-1."""
+    cuts = set(draw(st.lists(st.integers(1, _IP_MAX), max_size=10)))
+    base = draw(st.integers(0, _IP_MAX - 4096))
+    width = draw(st.integers(1, 64))
+    cuts |= {base + i * width for i in range(draw(st.integers(0, 40)))}
+    cuts = sorted(cuts | {0, _IP_MAX + 1})
+    keep = draw(st.lists(st.booleans(), min_size=len(cuts) - 1, max_size=len(cuts) - 1))
+    keep[0] = keep[-1] = True
+    return [(lo, nxt - 1, f"C{i}")
+            for i, (lo, nxt, kept) in enumerate(zip(cuts, cuts[1:], keep)) if kept]
+
+
+# Patterns that read the same in Java and in Python under re.ASCII.
+_UA_PATTERNS = [r"^\w+/", "bot", r"Fire\w*/\d", "é", r"[A-Z]\w*/\d", "^Mo",
+                "Bérénice", r"\d\.\d", "Ω", "^$", "/1$", "a+"]
+_UA_AGENTS = ["Mozilla/5.0 Firefox/121.0", "Bérénice/1", "acmebot/2.1",
+              "naïve/3", "Ωmega/1", "curl/8.0", "", "Bob/1.2"]
+
+
+@st.composite
+def _ua_rules(draw):
+    pats = draw(st.lists(st.sampled_from(_UA_PATTERNS), max_size=8))
+    pats += [f"^pad{i}$" for i in range(draw(st.sampled_from([0, 70])))]
+    prio = draw(st.permutations(range(len(pats))))
+    return [(p, f"r{i}", "Other", "Other", prio[i]) for i, p in enumerate(pats)]
+
+
+@settings(max_examples=20, deadline=None,
+          suppress_health_check=[HealthCheck.function_scoped_fixture,
+                                 HealthCheck.too_slow])
+@given(ranges=_geo_ranges(), rules=_ua_rules(), data=st.data())
+def test_enrich_agrees_with_a_python_oracle(spark, ranges, rules, data):
+    """geoip and useragent over random dims give one row per event, and
+    each answer is the pure-Python oracle's."""
+    ips = _probe_ips(ranges) + [
+        _dotted(n) for n in data.draw(st.lists(st.integers(0, _IP_MAX), max_size=5))]
+    agents = [None] + _UA_AGENTS + data.draw(
+        st.lists(st.text(alphabet="aBé/1 Ω.", max_size=8), max_size=5))
+    events = [(i, ip, agents[i % len(agents)]) for i, ip in enumerate(ips)]
+    df = spark.createDataFrame(events, "id int, ip string, agent string")
+    out = apply_stage(df, {"geoip": {"source": "ip", "ranges_df": _geo_frame(spark, ranges)}})
+    out = apply_stage(out, {"useragent": {
+        "source": "agent", "rules_df": local_frame(spark, rules, _RULE_DDL)}})
+    rows = out.collect()
+    assert sorted(r.id for r in rows) == list(range(len(events)))
+    for r in rows:
+        country, tagged = _py_geo(ranges, r.ip)
+        assert (r.geo.country if r.geo else None) == country, r.ip
+        assert ("_geoip_lookup_failure" in (r.tags or [])) == tagged, r.ip
+        assert (r.ua.name if r.ua else None) == _py_ua(rules, r.agent), r.agent
 
 
 def test_useragent(spark):
@@ -118,44 +256,41 @@ def _dims_pipeline(spark):
     from logstash_spark.pipeline import Pipeline
 
     return Pipeline({"id": "dims", "filters": [
-        {"geoip": {"source": "ip", "ranges_df": gen_geo_ranges(spark, 50),
-                   "strategy": "binary_search"}},
-        {"geoip": {"source": "ip", "target": "geo_auto",
-                   "ranges_df": gen_geo_ranges(spark, 40)}},
-        {"useragent": {"source": "agent", "rules_df": gen_ua_rules(spark),
-                       "strategy": "pandas"}},
+        {"geoip": {"source": "ip", "ranges_df": gen_geo_ranges(spark, 50)}},
+        {"geoip": {"source": "ip", "target": "geo_big",
+                   "ranges_df": gen_geo_ranges(spark, 3000)}},
+        {"useragent": {"source": "agent", "rules_df": gen_ua_rules(spark)}},
     ]})
 
 
 def test_dims_resolved_once_per_stage(spark):
     """register() parity: a stream compiles once per micro-batch, but
-    the geoip count/broadcast and the useragent collect/broadcast are
-    built on the first compile only. Later compiles start no Spark job
-    and every stage keeps the one broadcast it made."""
+    the geoip bins are built with the stage and the useragent rules are
+    collected on the first compile only. Later compiles start no Spark
+    job and reuse the same state; no stage holds a broadcast variable."""
     df = spark.createDataFrame(
         [("0.0.1.0", "Googlebot/2.1 (+http://www.google.com/bot.html)")],
         "ip string, agent string")
     pipe = _dims_pipeline(spark)
 
-    def broadcasts():
-        return [v for _, s in pipe.stages for k, (_, v) in s._resolved.items()
-                if k.endswith("_bc")]
+    def resolved(p):
+        return {(i, k): v for i, (_, s) in enumerate(p.stages)
+                for k, (_, v) in s._resolved.items()}
 
-    _, first = _jobs_during(spark, "dims_first", lambda: pipe.compile(df))
-    assert first  # the dims were resolved: count, toPandas, collect
-    bcs = broadcasts()
-    assert len(bcs) == 2
+    assert set(resolved(pipe)) == {(0, "bins"), (1, "bins")}
+    pipe.compile(df)
+    first = resolved(pipe)
+    assert set(first) == {(0, "bins"), (1, "bins"), (2, "rules")}
     for i in range(3):
         out, again = _jobs_during(spark, f"dims_again_{i}", lambda: pipe.compile(df))
         assert again == []
-    assert all(a is b for a, b in zip(broadcasts(), bcs, strict=True))
+    assert all(v is first[k] for k, v in resolved(pipe).items())
     r = out.collect()[0]
-    assert r.geo is not None and r.geo_auto is not None and r.ua.name == "Googlebot"
+    assert r.geo is not None and r.geo_big is not None and r.ua.name == "Googlebot"
 
     # a fresh stage object resolves its own dims
-    _, fresh = _jobs_during(spark, "dims_fresh",
-                            lambda: _dims_pipeline(spark).compile(df))
-    assert fresh
+    fresh = resolved(_dims_pipeline(spark))
+    assert fresh and all(v is not first[k] for k, v in fresh.items())
 
 
 def test_cidr(spark):
