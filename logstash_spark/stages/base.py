@@ -240,6 +240,16 @@ def field_exists(df: DataFrame, ref: str) -> bool:
     return _struct_leaf_type(top_t, parts[1:]) is not None
 
 
+def str_list(value) -> list[str]:
+    """An option that names one thing or a list of things, as a list.
+    LSCL delivers a bare string; ``list("_fail")`` would explode it into
+    per-character names, and ``in`` on it would be a substring test.
+    None is the empty list."""
+    if value is None:
+        return []
+    return [value] if isinstance(value, str) else list(value)
+
+
 def ensure_tags(df: DataFrame) -> DataFrame:
     """Guarantee the tags array<string> column exists (reference events
     get ``tags`` lazily on first ``Event#tag``)."""
@@ -438,10 +448,7 @@ class Stage:
     def failure_tags(self) -> list[str]:
         """Tags this stage adds to events it fails on; the pipeline's
         failure census counts rows carrying any of them."""
-        tags = self.conf.get(self.FAILURE_TAG_OPTION, self.FAILURE_TAGS)
-        # LSCL delivers a bare string; list("_fail") would explode it
-        # into per-character tags
-        return [tags] if isinstance(tags, str) else list(tags)
+        return str_list(self.conf.get(self.FAILURE_TAG_OPTION, self.FAILURE_TAGS))
 
     def resolve_once(self, sc, key: str, build: Callable[[], object]):
         """Dimension-derived plan-time state (a dim count, a collected
@@ -527,6 +534,7 @@ __all__ = [
     "apply_stage",
     "ensure_tags",
     "add_tags",
+    "str_list",
     "field_col",
     "field_name",
 ]

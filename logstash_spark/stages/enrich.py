@@ -6,8 +6,9 @@ re-expression is uniformly a **broadcast join** — the dimension ships
 once per executor, the probe stays in whole-stage codegen, and no
 shuffle touches the (huge) fact side. SURVEY §2.6 notes geoip is the
 one *range* join in the reference's surface; it runs as an equi-join on
-IP bins with the range test as the join condition (``geo_bins``). Each
-stage has one lookup at every dim size, all in the JVM.
+IP bins with the range test as the join condition (``geo_bins``).
+translate, dns and memcached share one exact-key join (``lookup``).
+Each stage has one lookup at every dim size, all in the JVM.
 """
 
 from __future__ import annotations
@@ -20,7 +21,7 @@ from pyspark.sql import functions as F
 
 from ..fieldref import field_col, field_name
 from ..session import local_frame
-from .base import Stage, add_tags, register
+from .base import Stage, add_tags, register, str_list
 
 
 def ip_to_long(col: Column) -> Column:
@@ -44,9 +45,10 @@ def ip_to_long(col: Column) -> Column:
 
 def load_dictionary_file(path: str) -> dict:
     """translate.rb's file-based dictionaries: YAML / JSON / CSV by
-    extension. Loaded ONCE at plan time (the reference polls the file
-    every ``refresh_interval``; a batch engine naturally reloads per
-    run — documented equivalence: one refresh per micro-batch run)."""
+    extension. Loaded at plan time, once per compile (the reference
+    polls the file every ``refresh_interval``; a batch engine naturally
+    reloads per run — documented equivalence: one refresh per
+    micro-batch run)."""
     import csv
     import json
     import os
@@ -79,75 +81,112 @@ def load_dictionary_file(path: str) -> dict:
     raise ValueError(f"unsupported dictionary file type: {path}")
 
 
+def dict_frame(spark: SparkSession, table: dict) -> DataFrame:
+    """A dict snapshot as a ``(key string, value)`` frame. Keys become
+    strings: ``lookup`` compares the event side as a string too, so an
+    int-keyed YAML/JSON dictionary never casts the event field (a cast
+    that aborts on a dirty value under ANSI). The value type is the one
+    Spark infers for the values; values of disagreeing types become
+    strings."""
+    from functools import reduce
+
+    from pyspark.sql.types import (
+        NullType, StringType, StructField, StructType, _infer_type, _merge_type,
+    )
+
+    rows = [(str(k), v) for k, v in table.items()]
+    try:
+        vtype = reduce(_merge_type, (_infer_type(v) for _, v in rows), NullType())
+    except TypeError:
+        vtype = NullType()
+    if isinstance(vtype, NullType):
+        vtype = StringType()
+        rows = [(k, None if v is None else str(v)) for k, v in rows]
+    return local_frame(spark, rows, StructType([
+        StructField("key", StringType()), StructField("value", vtype)]))
+
+
+def min_per_key(dim: DataFrame, key: Column, value: Column) -> DataFrame:
+    """A DataFrame dim as a ``(key string, value)`` frame with one row
+    per key: a duplicated key keeps ``min(value)``, a winner that is the
+    same on every run and retry (``F.first`` over an unordered groupBy
+    is not). The dim is small enough to broadcast, so it aggregates in
+    one partition, with no shuffle."""
+    return (dim.coalesce(1)
+            .select(key.cast("string").alias("key"), value.alias("value"))
+            .groupBy("key").agg(F.min("value").alias("value")))
+
+
+def lookup(df: DataFrame, key: Column, dim: DataFrame, tmp: str) -> DataFrame:
+    """The one exact-key lookup of translate, dns and memcached: a left
+    broadcast hash join of ``df`` to ``dim`` (``dict_frame`` or
+    ``min_per_key``, so one row per key and each event leaves as one
+    row) on ``key`` compared as a string. The value lands in column
+    ``tmp``, null on a miss; the fact side never shuffles."""
+    dim = dim.toDF(tmp + "_k", tmp)
+    return df.join(F.broadcast(dim), key.cast("string") == F.col(tmp + "_k"),
+                   "left").drop(tmp + "_k")
+
+
 @register("translate")
 class TranslateStage(Stage):
     """logstash-filter-translate:lib/logstash/filters/translate.rb.
 
-    conf: source, target, dictionary (inline dict → literal create_map,
-    no join at all) OR dictionary_path (YAML/CSV/JSON file loaded at
-    plan time, ≙ translate.rb's file dictionaries) OR dictionary_df
-    (2+ column DataFrame, first column is the key → broadcast hash
-    join), fallback (F.coalesce), exact (False → keys are regexes,
+    conf: source, target, and one dictionary: ``dictionary`` (inline
+    dict), ``dictionary_path`` (YAML/CSV/JSON file, ≙ translate.rb's
+    file dictionaries) or ``dictionary_df`` (2+ column DataFrame, first
+    column is the key; several value columns pack into one struct).
+    ``fallback`` (F.coalesce); ``exact`` (False → dict keys are regexes,
     first match wins — a plan-time when-chain of rlike tests).
+    Every exact lookup is one ``lookup`` join: an inline dict becomes
+    its frame once per stage, a file is re-read on every compile (one
+    refresh per micro-batch run), a DataFrame keeps ``min`` per key.
     Lookup-miss with no fallback leaves target null (reference leaves
     the field unset) and optionally tags ``tag_on_miss``.
     """
 
+    def _dict(self) -> dict:
+        if "dictionary" in self.conf:
+            return self.conf["dictionary"]
+        return load_dictionary_file(self.conf["dictionary_path"])
+
+    def _dim(self, spark: SparkSession) -> DataFrame:
+        if "dictionary" in self.conf:
+            return self.resolve_once(spark.sparkContext, "dim",
+                                     lambda: dict_frame(spark, self._dict()))
+        if "dictionary_path" in self.conf:
+            return dict_frame(spark, self._dict())
+        dim: DataFrame = self.conf["dictionary_df"]
+        key, *vals = dim.columns
+        return min_per_key(dim, F.col(key), F.col(vals[0]) if len(vals) == 1
+                           # multi-column dictionary → one struct (jdbc_static-style)
+                           else F.struct(*vals))
+
     def transform(self, df: DataFrame) -> tuple[DataFrame, Column]:
-        source = self.conf["source"]
         target = self.conf.get("target", "translation")
         fallback = self.conf.get("fallback")
-        src = field_col(source)
-
-        if "dictionary" in self.conf or "dictionary_path" in self.conf:
-            d: dict = (
-                self.conf["dictionary"]
-                if "dictionary" in self.conf
-                else load_dictionary_file(self.conf["dictionary_path"])
-            )
-            if not self.conf.get("exact", True):
-                # regex-key mode: ordered rlike when-chain (keys are few;
-                # each is one codegen'd regexp test)
-                chain = None
-                for k, v in d.items():
-                    cond = src.rlike(str(k))
-                    chain = (
-                        F.when(cond, F.lit(v)) if chain is None else chain.when(cond, F.lit(v))
-                    )
-                val = chain if chain is not None else F.lit(None).cast("string")
-                matched = val.isNotNull()
-                if fallback is not None:
-                    val = F.coalesce(val, F.lit(fallback))
-                df = df.withColumn(target, val)
-                tag_on_miss = self.conf.get("tag_on_miss")
-                if tag_on_miss:
-                    df = add_tags(df, [tag_on_miss], src.isNotNull() & ~matched)
-                return df, matched
-            m = F.create_map(*[x for k, v in d.items() for x in (F.lit(k), F.lit(v))])
-            val = m[src]
-            if fallback is not None:
-                val = F.coalesce(val, F.lit(fallback))
-            matched = m[src].isNotNull()
-            df = df.withColumn(target, val)
+        src = field_col(self.conf["source"])
+        tmp = "__translation"
+        if self.conf.get("exact", True) or "dictionary_df" in self.conf:
+            df = lookup(df, src, self._dim(df.sparkSession), tmp)
         else:
-            dim: DataFrame = self.conf["dictionary_df"]
-            key, *vals = dim.columns
-            if len(vals) == 1:
-                dim2 = dim.withColumnRenamed(vals[0], target)
-                out_cols = [target]
-            else:
-                # multi-column dictionary → one struct column (jdbc_static-style)
-                dim2 = dim.select(F.col(key), F.struct(*vals).alias(target))
-                out_cols = [target]
-            dim2 = dim2.withColumnRenamed(key, "__dict_key")
-            df = df.join(F.broadcast(dim2), src == F.col("__dict_key"), "left").drop("__dict_key")
-            matched = F.col(target).isNotNull()
-            if fallback is not None and len(vals) == 1:
-                df = df.withColumn(target, F.coalesce(F.col(target), F.lit(fallback)))
-        tag_on_miss = self.conf.get("tag_on_miss")
-        if tag_on_miss:
-            df = add_tags(df, [tag_on_miss], src.isNotNull() & ~matched)
-        return df, matched
+            # regex-key mode: ordered rlike when-chain (keys are few;
+            # each is one codegen'd regexp test)
+            chain = None
+            for k, v in self._dict().items():
+                cond = src.rlike(str(k))
+                chain = (
+                    F.when(cond, F.lit(v)) if chain is None else chain.when(cond, F.lit(v))
+                )
+            df = df.withColumn(tmp, chain if chain is not None else F.lit(None).cast("string"))
+        # tag and pin the match before the target write: target may be
+        # the source field itself
+        hit = F.col(tmp).isNotNull()
+        df = add_tags(df, str_list(self.conf.get("tag_on_miss")),
+                      src.isNotNull() & ~hit)
+        val = F.col(tmp) if fallback is None else F.coalesce(F.col(tmp), F.lit(fallback))
+        df = df.withColumn("__matched", hit).withColumn(target, val).drop(tmp)
+        return df, F.col("__matched")
 
 
 _IP_MAX = 2**32 - 1
@@ -285,9 +324,7 @@ class CidrStage(Stage):
         import ipaddress
 
         address = self.conf["address"]
-        networks = self.conf["network"]
-        if isinstance(networks, str):
-            networks = [networks]
+        networks = str_list(self.conf["network"])
         ip_int = ip_to_long(field_col(address))
         cond = F.lit(False)
         for net in networks:
@@ -300,8 +337,9 @@ class CidrStage(Stage):
 def load_hosts_file(path: str) -> dict[str, str]:
     """/etc/hosts-format snapshot → {name: address}. First mapping per
     name wins (resolver semantics); aliases on the same line map to the
-    same address. The file is read ONCE at plan time — the broadcast
-    snapshot is this engine's analog of dns.rb's ``hit_cache``."""
+    same address. The file is read at plan time, once per compile — the
+    broadcast snapshot is this engine's analog of dns.rb's
+    ``hit_cache``."""
     out: dict[str, str] = {}
     with open(path) as f:
         for line in f:
@@ -340,27 +378,39 @@ class DnsStage(Stage):
     live lookup inside a distributed job is non-deterministic,
     rate-limited, and a per-row blocking syscall, so this stage takes
     the resolution table as an explicit **broadcast snapshot** (the
-    same pattern as translate/jdbc_static): dict/hosts file → plan-time
-    ``create_map`` literal (zero joins, whole-stage codegen); DataFrame
-    → broadcast hash join, no shuffle on the fact side. Snapshot
-    refresh cadence is per micro-batch run, exactly like translate's
-    ``refresh_interval`` equivalence. Per dns.rb, a failed lookup
-    leaves the field unchanged and the filter only counts as matched
-    (common options applied) when ALL requested lookups succeed.
+    same pattern as translate/jdbc_static), and every lookup is one
+    ``lookup`` join per field, no shuffle on the fact side. Each
+    direction has its own ``(key, value)`` table: forward keys are
+    lower-cased names (DNS names are case-insensitive), reverse keys are
+    addresses verbatim. A dict's reverse table keeps the first name per
+    address; a DataFrame keeps ``min`` per key in both directions. An
+    inline dict becomes its tables once per stage; a hosts file is
+    re-read on every compile, so the snapshot refreshes per micro-batch
+    run, exactly like translate's ``refresh_interval`` equivalence. Per
+    dns.rb, a failed lookup leaves the field unchanged and the filter
+    only counts as matched (common options applied) when ALL requested
+    lookups succeed.
     Typed-column note for ``append``: Spark columns are uniformly
     typed, so append mode casts the field to array<string> for every
     row — hit → [original, resolved], miss → [original] (the reference
     leaves misses scalar; documented deviation).
     """
 
-    MAP_LITERAL_MAX = 10_000  # above this, dict snapshots become a broadcast join
-
-    def _snapshot(self) -> dict[str, str] | None:
-        if "hosts" in self.conf:
-            return {str(k).lower(): str(v) for k, v in self.conf["hosts"].items()}
-        if "hosts_path" in self.conf:
-            return load_hosts_file(self.conf["hosts_path"])
-        return None
+    def _tables(self, spark: SparkSession) -> dict[str, DataFrame]:
+        """Direction → its snapshot table: "fwd" name → address, "rev"
+        address → name."""
+        if self.conf.get("hosts") is not None:
+            fwd = {str(k).lower(): str(v) for k, v in self.conf["hosts"].items()}
+        elif self.conf.get("hosts_path") is not None:
+            fwd = load_hosts_file(self.conf["hosts_path"])
+        else:
+            hosts_df: DataFrame = self.conf["hosts_df"]
+            name_c, addr_c = hosts_df.columns[:2]
+            name, addr = F.lower(F.col(name_c)), F.col(addr_c)
+            return {"fwd": min_per_key(hosts_df, name, addr),
+                    "rev": min_per_key(hosts_df, addr, name)}
+        rev = {v: k for k, v in reversed(list(fwd.items()))}
+        return {"fwd": dict_frame(spark, fwd), "rev": dict_frame(spark, rev)}
 
     def transform(self, df: DataFrame) -> tuple[DataFrame, Column]:
         resolve = list(self.conf.get("resolve", []))
@@ -370,67 +420,16 @@ class DnsStage(Stage):
             raise ValueError(f"dns: action must be append|replace, got {action!r}")
         if not resolve and not reverse:
             raise ValueError("dns: need at least one of resolve/reverse")
-
-        snap = self._snapshot()
-        hosts_df: DataFrame | None = self.conf.get("hosts_df")
-        if snap is None and hosts_df is None:
+        if all(self.conf.get(k) is None for k in ("hosts", "hosts_path", "hosts_df")):
             raise ValueError(
                 "dns: a resolution snapshot is required (hosts / hosts_path / "
                 "hosts_df) — live resolvers are per-row blocking syscalls and "
                 "non-deterministic across executors; snapshot-join instead"
             )
-        # big dict/file snapshots auto-switch to the broadcast-join path:
-        # a create_map literal embeds the whole table in the plan, which
-        # is right for small dims but bloats analysis k× at tens of
-        # thousands of entries
-        if snap is not None and len(snap) > self.MAP_LITERAL_MAX:
-            hosts_df = local_frame(
-                df.sparkSession, list(snap.items()),
-                "name string, address string"
-            )
-            snap = None
-
-        # one map expression PER DIRECTION, shared by every field that
-        # looks that direction up (not one per field)
-        map_cache: dict[str, Column | None] = {}
-
-        def _direction_map(direction: str) -> Column | None:
-            if direction not in map_cache:
-                table = snap if direction == "fwd" else {
-                    v: k for k, v in reversed(list(snap.items()))
-                }
-                map_cache[direction] = F.create_map(
-                    *[x for k, v in table.items() for x in (F.lit(k), F.lit(v))]
-                ) if table else None
-            return map_cache[direction]
-
-        def lookup(src: Column, direction: str, i: int) -> tuple[Column, str | None]:
-            """Returns (resolved-value column, tmp-column-to-drop|None).
-            Forward lowers the name through lower() (DNS names are
-            case-insensitive); reverse keys on the address verbatim."""
-            nonlocal df
-            key = F.lower(src) if direction == "fwd" else src
-            if snap is not None:
-                m = _direction_map(direction)
-                if m is None:
-                    return F.lit(None).cast("string"), None
-                return m[key], None
-            name_c, addr_c = hosts_df.columns[:2]
-            k_col, v_col = (
-                (F.lower(F.col(name_c)), F.col(addr_c)) if direction == "fwd"
-                else (F.col(addr_c), F.col(name_c))
-            )
-            tmp = f"__dns_{direction}_{i}"
-            # duplicate keys in the hosts snapshot pick min(value) — a
-            # DETERMINISTIC winner (F.first over an unordered groupBy is
-            # retry/replay-nondeterministic; same hazard the es filter's
-            # window pick avoids)
-            dim = (
-                hosts_df.select(k_col.alias(tmp + "_k"), v_col.alias(tmp + "_v"))
-                .groupBy(tmp + "_k").agg(F.min(tmp + "_v").alias(tmp + "_v"))
-            )
-            df = df.join(F.broadcast(dim), key == F.col(tmp + "_k"), "left").drop(tmp + "_k")
-            return F.col(tmp + "_v"), tmp + "_v"
+        spark = df.sparkSession
+        tables = (self.resolve_once(spark.sparkContext, "tables",
+                                    lambda: self._tables(spark))
+                  if self.conf.get("hosts") is not None else self._tables(spark))
 
         all_hit = F.lit(True)
         any_requested_miss = F.lit(False)
@@ -440,9 +439,11 @@ class DnsStage(Stage):
             [(f, "fwd") for f in resolve] + [(f, "rev") for f in reverse]
         ):
             src = field_col(field)
-            val, tmp = lookup(src, direction, i)
-            if tmp is not None:
-                drops.append(tmp)
+            tmp = f"__dns_{i}"
+            df = lookup(df, F.lower(src) if direction == "fwd" else src,
+                        tables[direction], tmp)
+            drops.append(tmp)
+            val = F.col(tmp)
             hit = val.isNotNull()
             all_hit = all_hit & (src.isNull() | hit)
             any_requested_miss = any_requested_miss | (src.isNotNull() & ~hit)
@@ -460,11 +461,8 @@ class DnsStage(Stage):
         )
         for name, col in writes:
             df = df.withColumn(name, col)
-        for d in drops:
-            df = df.drop(d)
-        tag_on_miss = self.conf.get("tag_on_miss")
-        if tag_on_miss:
-            df = add_tags(df, [tag_on_miss], F.col("__dns_miss"))
+        df = add_tags(df.drop(*drops), str_list(self.conf.get("tag_on_miss")),
+                      F.col("__dns_miss"))
         return df.drop("__dns_miss"), F.col("__matched")
 
 
@@ -697,8 +695,8 @@ class JdbcStreamingStage(Stage):
             )
             out = add_tags(
                 out,
-                list(self.conf.get("tag_on_default_use",
-                                   ["_jdbcstreamingdefaultsused"])),
+                str_list(self.conf.get("tag_on_default_use",
+                                       ["_jdbcstreamingdefaultsused"])),
                 ~F.col("__matched"),
             )
         return out, F.col("__matched")
@@ -1097,17 +1095,15 @@ class MemcachedStage(Stage):
     Spark re-expression — same deliberate deviation as dns/translate:
     per-event network I/O against a live cache inside a distributed job
     is non-deterministic and a per-row blocking syscall, so the cache
-    contents come in as an explicit **broadcast snapshot**
-    (``snapshot`` inline dict → plan-time ``create_map`` literal, zero
-    joins; ``snapshot_df`` (key,value) DataFrame → broadcast hash join,
-    fact side unshuffled; dicts above ``MAP_LITERAL_MAX`` auto-switch
-    to the join). The reference's ``set`` direction is a side-effect
-    WRITE into memcached — no batch analog; rejected loudly (route the
-    field to a sink instead). Matched ⇔ every requested get hit
-    (mirrors the reference's filter_matched-on-full-success).
+    contents come in as an explicit **broadcast snapshot**: ``snapshot``
+    (inline dict, its table built once per stage) or ``snapshot_df``
+    ((key, value) DataFrame, ``min`` value per key). Each get is one
+    ``lookup`` join, fact side unshuffled. The reference's ``set``
+    direction is a side-effect WRITE into memcached — no batch analog;
+    rejected loudly (route the field to a sink instead). Matched ⇔
+    every requested get hit (mirrors the reference's
+    filter_matched-on-full-success).
     """
-
-    MAP_LITERAL_MAX = 10_000
 
     def transform(self, df: DataFrame) -> tuple[DataFrame, Column]:
         from ..fieldref import sprintf_col
@@ -1122,7 +1118,7 @@ class MemcachedStage(Stage):
         if not gets:
             raise ValueError("memcached: `get` mapping is required")
         ns = self.conf.get("namespace")
-        snap: dict[str, str] | None = self.conf.get("snapshot")
+        snap: dict | None = self.conf.get("snapshot")
         snap_df: DataFrame | None = self.conf.get("snapshot_df")
         if snap is None and snap_df is None:
             raise ValueError(
@@ -1130,59 +1126,31 @@ class MemcachedStage(Stage):
                 "snapshot_df) — live memcached I/O inside a distributed "
                 "job is rejected by design (dns/translate precedent)"
             )
-        if snap is not None and len(snap) > self.MAP_LITERAL_MAX:
-            snap_df = local_frame(
-                df.sparkSession,
-                [(str(k), str(v)) for k, v in snap.items()],
-                "key string, value string",
-            )
-            snap = None
-
-        lookup_map = (
-            F.create_map(*[x for k, v in snap.items()
-                           for x in (F.lit(str(k)), F.lit(str(v)))])
-            if snap else None
-        )
+        spark = df.sparkSession
+        if snap is not None:
+            dim = self.resolve_once(spark.sparkContext, "dim", lambda: dict_frame(
+                spark, {k: str(v) for k, v in snap.items()}))
+        else:
+            k_c, v_c = snap_df.columns[:2]
+            dim = min_per_key(snap_df, F.col(k_c), F.col(v_c).cast("string"))
         all_hit = F.lit(True)
         writes: list[tuple[str, Column]] = []
-        drops: list[str] = []
         for i, (key_tmpl, target) in enumerate(gets.items()):
             key = sprintf_col(key_tmpl)
             if ns:
                 key = F.concat(F.lit(f"{ns}:"), key)
-            if lookup_map is not None:
-                val = lookup_map[key]
-            else:
-                tmp = f"__mc_{i}"
-                k_c, v_c = snap_df.columns[:2]
-                # dedupe duplicate snapshot keys DETERMINISTICALLY (min)
-                dim = (
-                    snap_df.select(F.col(k_c).cast("string").alias(tmp + "_k"),
-                                   F.col(v_c).cast("string").alias(tmp + "_v"))
-                    .groupBy(tmp + "_k").agg(F.min(tmp + "_v").alias(tmp + "_v"))
-                )
-                df = df.join(F.broadcast(dim), key == F.col(tmp + "_k"), "left")
-                drops.append(tmp + "_k")
-                val = F.col(tmp + "_v")
-                drops.append(tmp + "_v")
+            df = lookup(df, key, dim, f"__mc_{i}")
+            val = F.col(f"__mc_{i}")
             writes.append((field_name(target), val))
             all_hit = all_hit & val.isNotNull()
         for name, val in writes:
             df = df.withColumn(name, val)
-        df = df.withColumn("__matched", all_hit)
-        if drops:
-            df = df.drop(*drops)
-        tag_miss = self.conf.get("tag_on_miss")
-        if tag_miss:
-            df = add_tags(df, [tag_miss] if isinstance(tag_miss, str)
-                          else list(tag_miss), ~F.col("__matched"))
+        df = df.withColumn("__matched", all_hit).drop(
+            *[f"__mc_{i}" for i in range(len(gets))])
+        df = add_tags(df, str_list(self.conf.get("tag_on_miss")), ~F.col("__matched"))
         # reference option: tag rows where EVERY get hit (default none)
-        tag_ok = self.conf.get("tag_on_success")
-        if tag_ok:
-            df = add_tags(df, [tag_ok] if isinstance(tag_ok, str)
-                          else list(tag_ok), F.col("__matched"))
-        out_matched = F.col("__matched")
-        return df, out_matched
+        df = add_tags(df, str_list(self.conf.get("tag_on_success")), F.col("__matched"))
+        return df, F.col("__matched")
 
 
 @register("http")
@@ -1489,10 +1457,7 @@ class WurflStage(Stage):
         df = df.withColumn(target, _wurfl(field_col(source)))
         matched = F.col(target)["device_id"].isNotNull()
         df = df.withColumn(target, F.when(matched, F.col(target)))
-        tag_miss = self.conf.get("tag_on_miss")
-        if tag_miss:
-            df = add_tags(df, [tag_miss] if isinstance(tag_miss, str)
-                          else list(tag_miss), ~matched)
+        df = add_tags(df, str_list(self.conf.get("tag_on_miss")), ~matched)
         return df, matched
 
 

@@ -17,7 +17,7 @@ from ..fieldref import (
 )
 from .base import (
     Stage, _drop_field_path, _struct_leaf_type, field_exists, register,
-    set_field,
+    set_field, str_list,
 )
 
 
@@ -509,9 +509,7 @@ class TruncateStage(Stage):
 
     def transform(self, df: DataFrame) -> tuple[DataFrame, Column | None]:
         n = int(self.conf["length_bytes"])
-        fields = self.conf.get("fields", ["message"])
-        if isinstance(fields, str):
-            fields = [fields]
+        fields = str_list(self.conf.get("fields", ["message"]))
 
         def byte_at(bin_col: Column, pos: Column) -> Column:
             # 1-indexed byte value; 0 past end (conv('',16,10) = '0')
@@ -623,10 +621,8 @@ class FingerprintStage(Stage):
     """
 
     def transform(self, df: DataFrame) -> tuple[DataFrame, Column | None]:
-        sources = self.conf.get("source", ["message"])
-        if isinstance(sources, str):
-            sources = [sources]
-        sources = sorted(sources)  # fingerprint.rb: @source.sort
+        # fingerprint.rb: @source.sort
+        sources = sorted(str_list(self.conf.get("source", ["message"])))
         method = self.conf.get("method", "SHA256").upper()
         target = self.conf.get("target", "fingerprint")
         key = self.conf.get("key")
@@ -684,8 +680,7 @@ class AnonymizeStage(Stage):
         fields = self.conf.get("fields")
         if not fields:
             raise ValueError("anonymize: `fields` is required")
-        if isinstance(fields, str):
-            fields = [fields]
+        fields = str_list(fields)
         algo = self.conf.get("algorithm", "SHA1").upper()
         key = self.conf.get("key")
         if algo not in ("MURMUR3",) and key is None:
@@ -832,8 +827,7 @@ class RubyStage(Stage):
                 "not executable in this engine — port the snippet to a "
                 "vectorized function and pass it via the pipeline spec"
             )
-        source = self.conf.get("source", "message")
-        sources = [source] if isinstance(source, str) else list(source)
+        sources = str_list(self.conf.get("source", "message"))
         target = self.conf.get("target", field_name(sources[0]))
         rtype = self.conf.get("returns", "string")
         from pyspark.sql.functions import pandas_udf

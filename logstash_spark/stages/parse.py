@@ -18,7 +18,7 @@ from pyspark.sql import functions as F
 from ..dissect import DISSECT_FAILURE_TAG, compile_dissect
 from ..fieldref import field_col, field_name, top_col
 from ..grok import GROK_FAILURE_TAG, CompiledGrok, compile_grok, lower_multi_capture
-from .base import Stage, add_tags, register
+from .base import Stage, add_tags, register, str_list
 
 _MATCHED = "__matched"
 # Ruby to_i: the integer prefix of the capture ('1.5' → 1, '12ab' → 12)
@@ -119,9 +119,7 @@ def _write_captures(stage: Stage, df: DataFrame, source: str,
     if target:
         out = {target: F.struct(*[v.alias(f) for f, v in values.items()])}
     else:
-        overwrite = stage.conf.get("overwrite", [])
-        # LSCL delivers a bare string; `in` on it would be a substring test
-        overwrite = [overwrite] if isinstance(overwrite, str) else overwrite
+        overwrite = str_list(stage.conf.get("overwrite"))
         out = {f: F.coalesce(top_col(f), v) if f in df.columns and f not in overwrite else v
                for f, v in values.items()}
     df = df.withColumns(out).drop(*pinned, *raws)
@@ -166,8 +164,7 @@ class GrokStage(Stage):
         (source, patterns), *rest = match.items()
         if rest:
             raise ValueError("one source field per grok stage; chain stages for more")
-        if isinstance(patterns, str):
-            patterns = [patterns]
+        patterns = str_list(patterns)
         defs = self.conf.get("pattern_definitions")
         df = _write_captures(
             self, df, source, lambda: [compile_grok(p, defs) for p in patterns], patterns,

@@ -1670,8 +1670,8 @@ def translate_dicts(spark, sf_dir):
     """translate's four dictionary shapes chained in one pipeline:
     (1) an INLINE dictionary with a fallback (translate.rb dictionary
     => {...} + fallback — the default usage); (2) a FILE dictionary
-    (translate.rb dictionary_path, loaded once at plan time into a
-    literal map); (3) REGEX keys (exact => false — ordered rlike
+    (translate.rb dictionary_path, loaded at plan time into a broadcast
+    join dim); (3) REGEX keys (exact => false — ordered rlike
     when-chain, first matching key wins); (4) a MULTI-COLUMN DataFrame
     dimension whose value columns pack into one struct target (the
     jdbc_static shape the flagship's dominfo uses), struct fields

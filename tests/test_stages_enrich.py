@@ -439,18 +439,16 @@ def test_jdbc_streaming_parameterized_lookup(spark, tmp_path):
     df = spark.createDataFrame(
         [(1, "10.0.0.5"), (2, "10.0.0.5"), (3, "10.9.9.9")], "id int, src_ip string"
     )
-    out = apply_stage(
-        df,
-        {"jdbc_streaming": {
-            "jdbc_connection_string": url,
-            "jdbc_driver_class": driver,
-            "statement": 'SELECT "server", "prio" FROM servers '
-                         'WHERE "ip" = :ip ORDER BY "prio"',
-            "parameters": {"ip": "src_ip"},
-            "target": "server_info",
-            "default_hash": {"server": "unknown"},
-        }},
-    )
+    conf = {
+        "jdbc_connection_string": url,
+        "jdbc_driver_class": driver,
+        "statement": 'SELECT "server", "prio" FROM servers '
+                     'WHERE "ip" = :ip ORDER BY "prio"',
+        "parameters": {"ip": "src_ip"},
+        "target": "server_info",
+        "default_hash": {"server": "unknown"},
+    }
+    out = apply_stage(df, {"jdbc_streaming": conf})
     rows = {r.id: r for r in out.collect()}
     # multi-row result: array of typed structs, statement ORDER respected
     assert [s.server for s in rows[1].server_info] == ["db1", "db2"]
@@ -461,6 +459,9 @@ def test_jdbc_streaming_parameterized_lookup(spark, tmp_path):
     assert rows[3].server_info[0].prio is None
     assert "_jdbcstreamingdefaultsused" in rows[3].tags
     assert "_jdbcstreamingdefaultsused" not in (rows[1].tags or [])
+    # a bare-string tag_on_default_use is one tag, not one per character
+    out = apply_stage(df, {"jdbc_streaming": {**conf, "tag_on_default_use": "_jdbc_miss"}})
+    assert {r.id: r.tags for r in out.collect()}[3] == ["_jdbc_miss"]
 
 
 def test_jdbc_streaming_guardrails(spark, tmp_path):
@@ -632,20 +633,87 @@ def test_jdbc_streaming_unbindable_param_is_miss_not_abort(spark, tmp_path):
     assert rows[3].r[0].v == "three"
 
 
-def test_dns_big_snapshot_autoswitches_to_join(spark):
-    """Dict snapshots above MAP_LITERAL_MAX become a broadcast join
-    instead of a plan-literal create_map (plan-size guard)."""
-    from logstash_spark.stages.enrich import DnsStage
+def _snapshot_conf(stage: str, n: int) -> dict:
+    """A ``stage`` config over an inline n-entry dict whose entry 77
+    maps h77.internal → 10.0.77.1."""
+    table = {f"h{i}.internal": f"10.{i >> 8}.{i & 255}.1" for i in range(n)}
+    return {
+        "dns": {"resolve": ["host"], "action": "replace", "hosts": table},
+        "translate": {"source": "host", "target": "host", "dictionary": table},
+        "memcached": {"get": {"%{host}": "host"}, "snapshot": table},
+    }[stage]
 
-    big = {f"h{i}.internal": f"10.{i >> 8}.{i & 255}.1"
-           for i in range(DnsStage.MAP_LITERAL_MAX + 1)}
-    df = spark.createDataFrame([(1, "h77.internal")], "id int, host string")
+
+@pytest.mark.parametrize("stage", ["dns", "translate", "memcached"])
+def test_snapshot_lookup_is_one_broadcast_join_at_every_size(spark, stage):
+    """Every exact-key dict lookup is one broadcast hash join, at 2
+    entries and at 10,001 (no map literal, no size switch)."""
+    df = spark.createDataFrame([(1, "h77.internal"), (2, "h2")], "id int, host string")
+    for n in (2, 10_001):
+        out = apply_stage(df, {stage: _snapshot_conf(stage, n)})
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert "BroadcastHashJoin" in plan, n
+        want = {1: "10.0.77.1" if n > 77 else None, 2: None}
+        got = {r.id: r.host for r in out.collect()}
+        if stage == "dns":  # a dns miss leaves the field as it was
+            want = {1: want[1] or "h77.internal", 2: "h2"}
+        assert got == want, n
+
+
+def test_translate_dictionary_df_duplicate_key_gives_one_row(spark):
+    """A key the dim holds twice matches once, with the min value; the
+    join must not duplicate the event."""
+    dim = spark.createDataFrame([("x", "ex2"), ("x", "ex"), ("y", "why")],
+                                "key string, value string")
+    df = spark.createDataFrame([(1, "x"), (2, "q")], "id int, code string")
     out = apply_stage(
-        df, {"dns": {"resolve": ["host"], "action": "replace", "hosts": big}}
-    )
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan  # not a 10k-entry map literal
-    assert out.collect()[0].host == "10.0.77.1"
+        df, {"translate": {"source": "code", "target": "word", "dictionary_df": dim}})
+    assert sorted((r.id, r.word) for r in out.collect()) == [(1, "ex"), (2, None)]
+
+
+def test_translate_int_keyed_dict_never_casts_the_field(spark):
+    """JSON/YAML ``200: OK`` gives int keys. The string field is looked
+    up as a string: a dirty value is a miss, not a CAST_INVALID_INPUT
+    abort under ANSI."""
+    df = spark.createDataFrame([(1, "200"), (2, "abc"), (3, "404"), (4, None)],
+                               "id int, status string")
+    out = apply_stage(df, {"translate": {
+        "source": "status", "target": "reason",
+        "dictionary": {200: "OK", 404: "Not Found"}, "tag_on_miss": "_miss"}})
+    rows = {r.id: r for r in out.collect()}
+    assert {i: r.reason for i, r in rows.items()} == \
+        {1: "OK", 2: None, 3: "Not Found", 4: None}
+    assert {i for i, r in rows.items() if "_miss" in (r.tags or [])} == {2}
+
+
+def test_translate_int_valued_dict_keeps_an_integer_target(spark, tmp_path):
+    """A YAML dictionary of ints (keys and values) looks up a string
+    field and writes an integer target."""
+    path = tmp_path / "codes.yml"
+    path.write_text("200: 2\n404: 4\n")
+    df = spark.createDataFrame([(1, "200"), (2, "abc"), (3, "404")],
+                               "id int, status string")
+    out = apply_stage(df, {"translate": {
+        "source": "status", "target": "cls", "dictionary_path": str(path)}})
+    assert dict(out.dtypes)["cls"] in ("int", "bigint")
+    assert {r.id: r.cls for r in out.collect()} == {1: 2, 2: None, 3: 4}
+
+
+def test_tag_options_take_a_bare_string_or_a_list(spark):
+    """``tag_on_miss`` given as a list tags every name in it, and a bare
+    string tags the one name (not one tag per character)."""
+    df = spark.createDataFrame([(1, "x"), (2, "q")], "id int, code string")
+    for tags, want in ((["_a", "_b"], {"_a", "_b"}), ("_a", {"_a"})):
+        for spec in (
+            {"translate": {"source": "code", "dictionary": {"x": "ex"},
+                           "tag_on_miss": tags}},
+            {"dns": {"resolve": ["code"], "hosts": {"x": "10.0.0.1"},
+                     "tag_on_miss": tags}},
+            {"memcached": {"get": {"%{code}": "v"}, "snapshot": {"x": "ex"},
+                           "tag_on_miss": tags}},
+        ):
+            rows = {r.id: set(r.tags or []) for r in apply_stage(df, spec).collect()}
+            assert rows == {1: set(), 2: want}, spec
 
 
 def test_elasticsearch_filter_snapshot_join(spark):
